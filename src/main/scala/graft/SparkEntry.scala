@@ -259,6 +259,10 @@ object SparkEntry {
       "SELECT ?x { <urn:graft:nation/7> gp:n_region_ref? ?x }"),
     "q_path_plus" -> sel("customer", "nation")(
       "SELECT ?x { <urn:graft:customer/42> (gp:c_nation_ref|gp:n_region_ref)+ ?x }"),
+    // the same closure seeded from a variable a sibling pattern binds
+    "q_path_plus_bound" -> sel("customer", "nation", "region")(
+      """SELECT ?name { ?c gp:c_custkey 42 .
+           ?c (gp:c_nation_ref|gp:n_region_ref)+ ?x . ?x gp:n_name|gp:r_name ?name }"""),
 
     // --- CONSTRUCT / UPDATE (SURVEY §2A construct, §2C)
     "q_construct" -> ((s, dir) => {
@@ -2610,6 +2614,12 @@ object SparkEntry {
          SELECT 'urn:graft:region/' || CAST(n_regionkey AS VARCHAR)
            FROM nation JOIN customer ON c_nationkey = n_nationkey
            WHERE c_custkey = 42""",
+    "q_path_plus_bound" ->
+      """SELECT n_name AS name FROM customer
+           JOIN nation ON c_nationkey = n_nationkey WHERE c_custkey = 42
+         UNION ALL
+         SELECT r_name FROM customer JOIN nation ON c_nationkey = n_nationkey
+           JOIN region ON n_regionkey = r_regionkey WHERE c_custkey = 42""",
     "q_construct" ->
       """SELECT 'urn:graft:customer/' || CAST(c_custkey AS VARCHAR) AS s,
                 'urn:graft:p/in_nation' AS p, n_name AS o

@@ -355,34 +355,28 @@ object EagerCountPushdown extends Rule[LogicalPlan] {
     * for GROUP BY on a constructed struct). */
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (plan.isStreaming || !enabled) return plan
-    val id = (e: Expression) => e
     plan.transformDown {
-      case agg @ Aggregate(_, _, Join(l, r, Inner, Some(cond), hint), _)
-          if joinWillShuffle(r, l, hint.rightHint, hint.leftHint) &&
-            analyze(agg, id, l, r, cond).isDefined =>
-        rewrite(agg, l, r, cond, hint, pushIsLeft = true, None,
-          analyze(agg, id, l, r, cond).get)
-      case agg @ Aggregate(_, _, Join(l, r, Inner, Some(cond), hint), _)
-          if joinWillShuffle(l, r, hint.leftHint, hint.rightHint) &&
-            analyze(agg, id, r, l, cond).isDefined =>
-        rewrite(agg, r, l, cond, hint, pushIsLeft = false, None,
-          analyze(agg, id, r, l, cond).get)
+      case agg @ Aggregate(_, _, Join(l, r, Inner, Some(cond), hint), _) =>
+        pushEither(agg, identity, None, l, r, cond, hint).getOrElse(agg)
       case agg @ Aggregate(_, _,
-          p @ Project(_, Join(l, r, Inner, Some(cond), hint)), _)
-          if joinWillShuffle(r, l, hint.rightHint, hint.leftHint) &&
-            throughProject(agg, p).exists { case (_, subst) =>
-              analyze(agg, subst, l, r, cond).isDefined } =>
-        val (used, subst) = throughProject(agg, p).get
-        rewrite(agg, l, r, cond, hint, pushIsLeft = true, Some(used),
-          analyze(agg, subst, l, r, cond).get)
-      case agg @ Aggregate(_, _,
-          p @ Project(_, Join(l, r, Inner, Some(cond), hint)), _)
-          if joinWillShuffle(l, r, hint.leftHint, hint.rightHint) &&
-            throughProject(agg, p).exists { case (_, subst) =>
-              analyze(agg, subst, r, l, cond).isDefined } =>
-        val (used, subst) = throughProject(agg, p).get
-        rewrite(agg, r, l, cond, hint, pushIsLeft = false, Some(used),
-          analyze(agg, subst, r, l, cond).get)
+          p @ Project(_, Join(l, r, Inner, Some(cond), hint)), _) =>
+        throughProject(agg, p).flatMap { case (used, subst) =>
+          pushEither(agg, subst, Some(used), l, r, cond, hint)
+        }.getOrElse(agg)
     }
+  }
+
+  /** The rewrite pushing into the left side, else into the right side:
+    * each side is gated on the join shuffling it, and analyzed once. */
+  private def pushEither(agg: Aggregate, subst: Expression => Expression,
+      projUsed: Option[Seq[NamedExpression]], l: LogicalPlan, r: LogicalPlan,
+      cond: Expression, hint: JoinHint): Option[LogicalPlan] = {
+    def push(pushSide: LogicalPlan, keep: LogicalPlan, pushIsLeft: Boolean,
+        pushHint: Option[HintInfo], keepHint: Option[HintInfo]) =
+      if (!joinWillShuffle(keep, pushSide, keepHint, pushHint)) None
+      else analyze(agg, subst, pushSide, keep, cond).map(
+        rewrite(agg, pushSide, keep, cond, hint, pushIsLeft, projUsed, _))
+    push(l, r, pushIsLeft = true, hint.leftHint, hint.rightHint)
+      .orElse(push(r, l, pushIsLeft = false, hint.rightHint, hint.leftHint))
   }
 }

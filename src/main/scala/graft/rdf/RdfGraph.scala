@@ -108,7 +108,16 @@ final case class RdfGraph(triples: DataFrame, prefixes: Map[String, String],
     // the GraphStore partition helper (__g) describes the on-disk
     // layout only — a merged frame no longer matches it, so it drops
     val base = triples.drop(Terms.GPART_COL)
+    // Round-robin the new triples so the union below never claims its
+    // children's hash partitioning (Spark's spark.sql.unionOutputPartitioning).
+    // With that claim no exchange sits between the union and the joins
+    // and dedups above it; once AQE coalesced one child's shuffle, the
+    // union fell back to concatenating its children (twice the
+    // partitions) and a join above failed with "Can't zip RDDs with
+    // unequal numbers of partitions" a few updates after a lineage
+    // truncation. The shuffle moves only the inserted rows.
     val incoming = newTriples.drop(Terms.GPART_COL)
+      .repartition(triples.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
     val merged =
       if (!isQuads) base.unionByName(incoming).dropDuplicates("s", "p", "o")
       else base.unionByName(incoming, allowMissingColumns = true)
@@ -272,14 +281,8 @@ object RdfGraph {
   def fromTriples(spark: SparkSession, ts: Seq[(RdfTerm, RdfTerm, RdfTerm)],
       prefixes: Map[String, String] = Map.empty): RdfGraph = {
     import org.apache.spark.sql.Row
-    def row(t: RdfTerm): Row = t match {
-      case Iri(v)             => Row(Terms.KIND_IRI, v, null, null)
-      case Blank(l)           => Row(Terms.KIND_BLANK, l, null, null)
-      case Lit(lex, dt, lang) => Row(Terms.KIND_LIT, lex, dt, lang)
-      case q: QuotedTriple    =>
-        Row(Terms.KIND_TRIPLE, Terms.packString(q), null, null)
-    }
-    val rows = ts.map { case (s, p, o) => Row(row(s), row(p), row(o)) }
+    import Terms.termRow
+    val rows = ts.map { case (s, p, o) => Row(termRow(s), termRow(p), termRow(o)) }
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows), Terms.tripleType)
       .dropDuplicates("s", "p", "o")
@@ -308,15 +311,9 @@ object RdfGraph {
       qs: Seq[(RdfTerm, RdfTerm, RdfTerm, Option[RdfTerm])],
       prefixes: Map[String, String] = Map.empty): RdfGraph = {
     import org.apache.spark.sql.Row
-    def row(t: RdfTerm): Row = t match {
-      case Iri(v)             => Row(Terms.KIND_IRI, v, null, null)
-      case Blank(l)           => Row(Terms.KIND_BLANK, l, null, null)
-      case Lit(lex, dt, lang) => Row(Terms.KIND_LIT, lex, dt, lang)
-      case q: QuotedTriple    =>
-        Row(Terms.KIND_TRIPLE, Terms.packString(q), null, null)
-    }
+    import Terms.termRow
     val rows = qs.map { case (s, p, o, g) =>
-      Row(row(s), row(p), row(o), g.map(row).orNull)
+      Row(termRow(s), termRow(p), termRow(o), g.map(termRow).orNull)
     }
     val schema = org.apache.spark.sql.types.StructType(
       Terms.tripleType.fields :+ org.apache.spark.sql.types.StructField(

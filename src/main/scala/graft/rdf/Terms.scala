@@ -1,6 +1,6 @@
 package graft.rdf
 
-import org.apache.spark.sql.{Column, functions => F}
+import org.apache.spark.sql.{Column, Row, functions => F}
 import org.apache.spark.sql.types._
 
 /** RDF term model for the graft engine.
@@ -202,6 +202,15 @@ object Terms {
     case Lit(lex, _, lang)  => langLit(F.lit(lex), F.lit(lang))
     case q: QuotedTriple =>
       mk(F.lit(KIND_TRIPLE), F.lit(packString(q)), nullStr, nullStr)
+  }
+
+  /** Scala term value → its term-struct Row (local fixtures, driver-side
+    * constants). */
+  def termRow(t: RdfTerm): Row = t match {
+    case Iri(v)             => Row(KIND_IRI, v, null, null)
+    case Blank(l)           => Row(KIND_BLANK, l, null, null)
+    case Lit(lex, dt, lang) => Row(KIND_LIT, lex, dt, lang)
+    case q: QuotedTriple    => Row(KIND_TRIPLE, packString(q), null, null)
   }
 
   // ---- RDF-star quoted-triple encoding --------------------------------------

@@ -14,9 +14,13 @@ import scala.collection.mutable
   * chains of equi-joins over per-pattern scans of the triples table; the
   * triple-pattern filters (constant s/p/o) are plain struct-field predicates
   * that push down to the parquet scan. The only operator evaluated with a
-  * driver-side loop is the transitive property path (`*`/`+`) — a fixpoint
-  * with `localCheckpoint()` per iteration to cut lineage (same skeleton the
-  * reference uses for `peel`, gastrodon/__init__.py:704-743).
+  * driver-side loop is the transitive property path (`*`/`+`). Seeded from
+  * a constant endpoint or from the values a sibling pattern of the BGP
+  * binds, it is a BFS with the frontier on the driver, at most one Spark
+  * job per level; past a fixed bound the frontier moves to checkpointed
+  * frames. Only a path with two free endpoints computes the full pair
+  * closure, by path doubling (the reference loops one query per node,
+  * gastrodon/__init__.py:704-743).
   *
   * Variable bindings table: one term-struct column per SPARQL variable;
   * unbound = null (gastrodon/__init__.py:761). Internal variables from
@@ -956,9 +960,40 @@ final class Compiler(rdfGraph: RdfGraph, spark: SparkSession) {
         predRowEstimate(p)
       case _ => Long.MaxValue
     }
-    val rest = patternOrder(ts.zipWithIndex.collect {
+    val ordered = patternOrder(ts.zipWithIndex.collect {
       case (tp, i) if !covered(i) => tp
-    }).map(tp => (compileTriple(tp), steerEst(tp)))
+    })
+    // Semi-join reduction of transitive paths (S2RDF's idea, applied to
+    // the closure): a `+`/`*` path whose endpoint variable a sibling
+    // plain pattern binds starts its closure from that pattern's values
+    // instead of computing every pair. Plain patterns compile first and
+    // serve as seed sources: star scans, then the others in join order
+    // (most constrained first). Only plain s/o positions count — their
+    // values are graph nodes of the same scope, which `*`'s zero-length
+    // pairs need. (Under GRAPH ?g the path compiles per graph and drops
+    // the seeds.)
+    def seedable(tp: TriplePattern): Boolean = tp match {
+      case TriplePattern(s, VerbPath(p), o) => !s.isInstanceOf[QuotedNode] &&
+        !o.isInstanceOf[QuotedNode] && transitiveTop(normalizePath(p))
+      case _ => false
+    }
+    def vars(ns: Node*): Set[String] = ns.collect { case VarNode(v) => v }.toSet
+    val compiled = ordered.map(tp => if (seedable(tp)) None else Some(compileTriple(tp)))
+    // each seed source with the variables it binds
+    val sources: Seq[(Set[String], DataFrame)] =
+      starDfs.toSeq.map(df => (df.columns.toSet, df)) ++
+        ordered.zip(compiled).collect {
+          case (TriplePattern(s, VerbNode(_), o), Some(df)) => (vars(s, o), df)
+        }
+    def seeds(s: Node, o: Node): Map[String, DataFrame] =
+      vars(s, o).flatMap(v => sources.collectFirst {
+        case (bound, df) if bound(v) => v -> df.select(F.col(v).as("n"))
+      }).toMap
+    val rest = ordered.zip(compiled).map {
+      case (tp, Some(df)) => (df, steerEst(tp))
+      case (tp @ TriplePattern(s, VerbPath(p), o), None) =>
+        (compilePathTriple(s, p, o, seeds(s, o)), steerEst(tp))
+    }
     val parts = starDfs.toSeq.map(df => (df, Long.MaxValue)) ++ rest
     // greedy connected-join: always join the next relation that shares a
     // variable with the accumulated bindings; cross-join only when forced.
@@ -1359,10 +1394,8 @@ final class Compiler(rdfGraph: RdfGraph, spark: SparkSession) {
       }
     // nested transitive path (inside a sequence/alternative): full pair
     // closure with both endpoints open — correct, at closure cost
-    case PZeroOrMore(inner) =>
-      closure(pathEdges(inner), VarNode("__a"), VarNode("__b"), includeZero = true)
-    case POneOrMore(inner) =>
-      closure(pathEdges(inner), VarNode("__a"), VarNode("__b"), includeZero = false)
+    case PZeroOrMore(inner) => closure(pathEdges(inner), None, includeZero = true, None)
+    case POneOrMore(inner) => closure(pathEdges(inner), None, includeZero = false, None)
     case PZeroOrOne(inner) =>
       val one = pathEdges(inner)
       one.select(one("ps"), one("po"))
@@ -1421,12 +1454,34 @@ final class Compiler(rdfGraph: RdfGraph, spark: SparkSession) {
     case other => other
   }
 
+  /** Upper bound of a one-step path relation's rows from the exact
+    * predicate counts, when every link has one. */
+  private def edgeRows(p: Path): Option[Long] = p match {
+    case PLink(i) => rdfGraph.predCounts.get(i)
+    case PInv(q) => edgeRows(q)
+    case PAlt(a, b) => for (x <- edgeRows(a); y <- edgeRows(b)) yield x + y
+    case _ => None
+  }
+
+  /** Does the (normalized) path evaluate as a closure at its top — `+`
+    * or `*`, possibly as a branch of an alternative? */
+  private def transitiveTop(p: Path): Boolean = p match {
+    case PZeroOrMore(_) | POneOrMore(_) => true
+    case PAlt(a, b) => transitiveTop(a) || transitiveTop(b)
+    case _ => false
+  }
+
   /** All nodes of the active-scope graph (zero-length path endpoints). */
   private def graphNodes: DataFrame =
     scanBase.select(F.col("s").as("n"))
       .union(scanBase.select(F.col("o").as("n"))).distinct()
 
-  private def compilePathTriple(s: Node, path0: Path, o: Node): DataFrame = {
+  /** A path triple. `seeds` maps endpoint variables that sibling
+    * patterns of the same BGP bind to a frame of their values (column
+    * `n`, see [[compileBgp]]); a transitive branch starts from one of
+    * them when no endpoint is constant. */
+  private def compilePathTriple(s: Node, path0: Path, o: Node,
+      seeds: Map[String, DataFrame] = Map.empty): DataFrame = {
     // Inside GRAPH <iri> every edge scan is already scope-filtered, so
     // paths compose soundly. Inside GRAPH ?var a multi-hop path needs
     // per-graph edge composition (each solution's hops confined to ONE
@@ -1451,6 +1506,19 @@ final class Compiler(rdfGraph: RdfGraph, spark: SparkSession) {
           F.lit(true), "left_semi")
       case _ => df
     }
+    // where a transitive branch starts: a constant endpoint, else an
+    // endpoint variable the rest of the BGP binds; the object side runs
+    // the closure over reversed edges
+    def seedFrame(t: RdfTerm): DataFrame = spark.createDataFrame(
+      java.util.List.of(Row(termRow(t))),
+      StructType(Seq(StructField("n", termType))))
+    lazy val start: Option[(DataFrame, Boolean)] = (s, o) match {
+      case (TermNode(t), _) => Some((seedFrame(t), false))
+      case (_, TermNode(t)) => Some((seedFrame(t), true))
+      case (VarNode(a), _) if seeds.contains(a) => Some((seeds(a), false))
+      case (_, VarNode(b)) if seeds.contains(b) => Some((seeds(b), true))
+      case _ => None
+    }
     // Endpoint-sensitive pair frames: §18.4's translation keeps the
     // TP's OWN endpoints on every ALT branch (unlike SEQ, which mints
     // fresh middle variables), so a closure branch adjacent to a
@@ -1459,8 +1527,9 @@ final class Compiler(rdfGraph: RdfGraph, spark: SparkSession) {
     // lose `<x> (p|q*) ?y`'s (x,x) when x is not a node of the graph.
     def pairsOf(p: Path): DataFrame = p match {
       case PZeroOrMore(inner) =>
-        gateZero(closure(pathEdges(inner), s, o, includeZero = true))
-      case POneOrMore(inner) => closure(pathEdges(inner), s, o, includeZero = false)
+        gateZero(closure(pathEdges(inner), start, includeZero = true, edgeRows(inner)))
+      case POneOrMore(inner) =>
+        closure(pathEdges(inner), start, includeZero = false, edgeRows(inner))
       case PZeroOrOne(inner) =>
         val one0 = pathEdges(inner)
         val one = one0.select(one0("ps"), one0("po"))
@@ -1517,82 +1586,184 @@ final class Compiler(rdfGraph: RdfGraph, spark: SparkSession) {
     }
   }
 
-  /** Transitive closure fixpoint. When one endpoint is a constant the
-    * closure is seeded from it (frontier BFS — strictly better than the
-    * reference's one-query-per-node loop, gastrodon/__init__.py:736-743);
-    * with two variable endpoints the full pair closure is computed.
-    * localCheckpoint() per iteration cuts lineage growth. */
-  private def closure(edges1: DataFrame, s: Node, o: Node,
-      includeZero: Boolean): DataFrame = {
+  /** Bound of the driver-side closure: seeds, rows fetched per BFS level,
+    * nodes reached and result pairs. Past it the closure runs as Spark
+    * frames (checkpointed frontier). */
+  private val PathLocalMax = 10000
+
+  /** At most `PathLocalMax + 1` rows of `df` on the driver, in one job:
+    * each partition stops reading at that many, and the driver merges the
+    * partitions' rows as they arrive, keeping at most that many.
+    * (`limit(n).collect()` scans partitions in rounds, one job each, while
+    * the first partitions hold fewer than n rows.) A local relation (a
+    * constant endpoint's seed) is read on the driver with no job. */
+  private def collectBounded(df: DataFrame): Array[Row] =
+    df.queryExecution.analyzed match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        df.collect()
+      case _ =>
+        val n = PathLocalMax + 1 // a local: the task must not capture `this`
+        df.rdd.mapPartitions(it => Iterator.single(it.take(n).toArray))
+          .fold(Array.empty[Row])((a, b) => if (a.length >= n) a else (a ++ b).take(n))
+    }
+
+  /** Transitive closure (`+`, or `*` with `includeZero`) as (ps, po) term
+    * pairs.
+    *
+    * With a `start` — the seed frame (column `n`: a constant endpoint's
+    * one row, or the values sibling patterns bind an endpoint variable
+    * to) and whether the closure runs from the object side — it is a BFS
+    * from the seeds with the frontier on the driver: one bounded collect
+    * of the seeds, then one filtered collect of the edges leaving the
+    * frontier per level (or none, when predicate counts prove the edge
+    * relation small enough to come back whole with the seeds),
+    * deduplicated against the reached nodes locally (the reference runs
+    * one query per node instead, gastrodon/__init__.py:736-743). The
+    * pairs come back as a local relation, so the query using them runs no
+    * job for them. Past [[PathLocalMax]] the same BFS runs on Spark
+    * frames, checkpointed per level to cut lineage.
+    *
+    * With no start (both endpoints free) the full pair closure is
+    * computed by path doubling. */
+  private def closure(edges1: DataFrame, start: Option[(DataFrame, Boolean)],
+      includeZero: Boolean, edgeCount: Option[Long]): DataFrame = {
     // ALP evaluation is set-based and joins on full terms; companions
     // would be wrong after multi-hop composition — strip them.
     val edges0 = edges1.drop(nkCols(edges1): _*)
-    // Sanity bound only — loops terminate on an empty frontier/delta. A
-    // graph needing more than this many BFS levels (seeded) or doubling
-    // rounds (pair closure: log₂ diameter) would be degenerate.
+    def swap(df: DataFrame) = df.select(F.col("po").as("ps"), F.col("ps").as("po"))
+    start match {
+      case Some((seed, reversed)) =>
+        val edges = if (reversed) swap(edges0) else edges0
+        val pairs = localClosure(edges, seed, includeZero, edgeCount)
+          .getOrElse(frontierClosure(edges, seed, includeZero))
+        if (reversed) swap(pairs) else pairs
+      case None => doublingClosure(edges0, includeZero)
+    }
+  }
+
+  /** The seeded closure on the driver, or None past [[PathLocalMax]]. The
+    * BFS walks nodes, not pairs: every reached node's out-edges are
+    * fetched once, then each seed's closure is read off the fetched
+    * adjacency. An edge relation that `edgeCount` (exact predicate
+    * counts) proves within the bound comes back whole, in the seeds' job,
+    * and the levels are walked on the driver. */
+  private def localClosure(edges: DataFrame, seed: DataFrame,
+      includeZero: Boolean, edgeCount: Option[Long]): Option[DataFrame] = {
+    // seed rows are the ones with a null `po` (no edge has one); past the
+    // bound — stale counts included — the closure falls back
+    val small = edgeCount.exists(_ <= PathLocalMax)
+    val fetched = collectBounded(
+      if (small) seed.select(F.col("n").as("ps"), F.lit(null).cast(termType).as("po"))
+        .unionByName(edges.select("ps", "po"))
+      else seed.select(F.col("n").as("ps")))
+    if (fetched.length > PathLocalMax) return None
+    val (seedRows, edgeRows) = fetched.partition(r => !small || r.isNullAt(1))
+    val seeds = seedRows.filterNot(_.isNullAt(0)).map(_.getStruct(0)).distinct.toSeq
+    val byPs = if (small) Some(edgeRows.groupBy(_.getStruct(0))) else None
+    // the edges leaving a frontier; a Spark job per level unless whole.
+    // The job filters on the lexical value alone (a flat string IN
+    // list); the exact term match is made on the driver
+    def leaving(frontier: Seq[Row]): Array[Row] = byPs match {
+      case Some(m) => frontier.flatMap(m.getOrElse(_, Array.empty[Row])).toArray
+      case None => collectBounded(edges
+        .where(F.col("ps.value").isin(frontier.map(_.getString(1)).distinct: _*))
+        .select("ps", "po"))
+    }
+    val adj = mutable.HashMap[Row, mutable.ArrayBuffer[Row]]()
+    val visited = mutable.HashSet[Row](seeds: _*)
+    var frontier = seeds
+    while (frontier.nonEmpty) {
+      val rows = leaving(frontier)
+      if (rows.length > PathLocalMax) return None
+      val inFrontier = frontier.toSet
+      val next = mutable.ArrayBuffer[Row]()
+      rows.foreach { r =>
+        val (a, b) = (r.getStruct(0), r.getStruct(1))
+        if (inFrontier(a)) {
+          adj.getOrElseUpdate(a, mutable.ArrayBuffer()) += b
+          if (visited.add(b)) next += b
+        }
+      }
+      if (visited.size > PathLocalMax) return None
+      frontier = next.toSeq
+    }
+    val pairs = mutable.ArrayBuffer[Row]()
+    seeds.foreach { s0 =>
+      val reached = mutable.LinkedHashSet[Row]()
+      if (includeZero) reached += s0
+      var level: Seq[Row] = Seq(s0)
+      while (level.nonEmpty) {
+        level = level.flatMap(n => adj.getOrElse(n, Nil)).filter(reached.add)
+      }
+      reached.foreach(n => pairs += Row(s0, n))
+      if (pairs.length > PathLocalMax) return None
+    }
+    Some(spark.createDataFrame(java.util.Arrays.asList(pairs.toSeq: _*),
+      StructType(Seq(StructField("ps", termType), StructField("po", termType)))))
+  }
+
+  /** The seeded closure as Spark frames: BFS over (seed, node) pairs,
+    * the frontier and the reached set checkpointed every level. */
+  private def frontierClosure(edges: DataFrame, seed: DataFrame,
+      includeZero: Boolean): DataFrame = {
+    // Sanity bound only — the loop ends on an empty frontier.
     val maxIter = 100000
-    // Orient so a constant endpoint (if any) is the source.
-    val (edges, seedTerm, reversed) = (s, o) match {
-      case (TermNode(t), _) => (edges0, Some(t), false)
-      case (_, TermNode(t)) =>
-        (edges0.select(F.col("po").as("ps"), F.col("ps").as("po")), Some(t), true)
-      case _ => (edges0, None, false)
+    val e = edges.localCheckpoint(true)
+    val seedPairs = seed.select(F.col("n").as("src"), F.col("n")).distinct()
+      .localCheckpoint(true)
+    var reached = if (includeZero) seedPairs else seedPairs.limit(0)
+    var frontier = seedPairs
+    var i = 0
+    while (i < maxIter && !frontier.isEmpty) {
+      val next = frontier.join(e, frontier("n") === e("ps"))
+        .select(frontier("src"), e("po").as("n")).distinct()
+        .join(reached, Seq("src", "n"), "left_anti")
+        .localCheckpoint(true)
+      reached = reached.union(next).localCheckpoint(true)
+      frontier = next
+      i += 1
     }
-    val result: DataFrame = seedTerm match {
-      case Some(t) =>
-        val e = edges.localCheckpoint(true)
-        val seed = spark.range(1).select(termCol(t).as("n"))
-        var reached = if (includeZero) seed else seed.limit(0)
-        var frontier = seed
-        var i = 0
-        while (i < maxIter && !frontier.isEmpty) {
-          val next = frontier.join(e, frontier("n") === e("ps"))
-            .select(e("po").as("n")).distinct()
-            .join(reached, Seq("n"), "left_anti")
-            .localCheckpoint(true)
-          reached = reached.union(next).localCheckpoint(true)
-          frontier = next
-          i += 1
-        }
-        reached.select(termCol(t).as("ps"), F.col("n").as("po"))
-      case None =>
-        // full pair closure by path DOUBLING: each round joins the
-        // accumulated closure with itself, so a diameter-d graph
-        // converges in ⌈log₂ d⌉ rounds instead of d — the difference
-        // between 10 and 1000 Spark jobs on a deep chain.
-        val e = edges.localCheckpoint(true)
-        var closure = e.distinct().localCheckpoint(true)
-        var i = 0
-        var grew = true
-        while (i < maxIter && grew) {
-          val doubled = closure.alias("a")
-            .join(closure.alias("b"), F.col("a.po") === F.col("b.ps"))
-            .select(F.col("a.ps").as("ps"), F.col("b.po").as("po"))
-          val next0 = doubled.join(closure, Seq("ps", "po"), "left_anti")
-            .distinct().localCheckpoint(true)
-          // fresh attribute ids BEFORE the union: `next` derives from a
-          // self-join of `closure`, so closure's attributes appear on
-          // both union branches and trip Catalyst's constraint rewrite
-          // (UnionBase.rewriteConstraints NoSuchElementException — an
-          // alias projection does NOT isolate the constraints; only a
-          // fresh LogicalRDD does). The RDD round-trip is applied to an
-          // already-checkpointed RDD, so the re-encoding is bounded by
-          // the (small) closure delta, once per doubling round.
-          val next = spark.createDataFrame(next0.rdd, next0.schema)
-          grew = !next0.isEmpty
-          if (grew) {
-            val unioned = closure.union(next).localCheckpoint(true)
-            closure = spark.createDataFrame(unioned.rdd, unioned.schema)
-          }
-          i += 1
-        }
-        if (includeZero) {
-          val zero = graphNodes.select(F.col("n").as("ps"), F.col("n").as("po"))
-          closure.union(zero).distinct()
-        } else closure
+    reached.select(F.col("src").as("ps"), F.col("n").as("po"))
+  }
+
+  /** Full pair closure by path DOUBLING: each round joins the
+    * accumulated closure with itself, so a diameter-d graph converges in
+    * ⌈log₂ d⌉ rounds instead of d — the difference between 10 and 1000
+    * Spark jobs on a deep chain. localCheckpoint() per round cuts
+    * lineage growth. */
+  private def doublingClosure(edges: DataFrame, includeZero: Boolean): DataFrame = {
+    // Sanity bound only — the loop ends when a round adds nothing.
+    val maxIter = 100000
+    val e = edges.localCheckpoint(true)
+    var closure = e.distinct().localCheckpoint(true)
+    var i = 0
+    var grew = true
+    while (i < maxIter && grew) {
+      val doubled = closure.alias("a")
+        .join(closure.alias("b"), F.col("a.po") === F.col("b.ps"))
+        .select(F.col("a.ps").as("ps"), F.col("b.po").as("po"))
+      val next0 = doubled.join(closure, Seq("ps", "po"), "left_anti")
+        .distinct().localCheckpoint(true)
+      // fresh attribute ids BEFORE the union: `next` derives from a
+      // self-join of `closure`, so closure's attributes appear on
+      // both union branches and trip Catalyst's constraint rewrite
+      // (UnionBase.rewriteConstraints NoSuchElementException — an
+      // alias projection does NOT isolate the constraints; only a
+      // fresh LogicalRDD does). The RDD round-trip is applied to an
+      // already-checkpointed RDD, so the re-encoding is bounded by
+      // the (small) closure delta, once per doubling round.
+      val next = spark.createDataFrame(next0.rdd, next0.schema)
+      grew = !next0.isEmpty
+      if (grew) {
+        val unioned = closure.union(next).localCheckpoint(true)
+        closure = spark.createDataFrame(unioned.rdd, unioned.schema)
+      }
+      i += 1
     }
-    if (reversed) result.select(F.col("po").as("ps"), F.col("ps").as("po"))
-    else result
+    if (includeZero) {
+      val zero = graphNodes.select(F.col("n").as("ps"), F.col("n").as("po"))
+      closure.union(zero).distinct()
+    } else closure
   }
 
   // ------------------------------------------------------------- queries

@@ -40,14 +40,25 @@ class CompatSemanticsSpec extends SparkSpec {
       g: Seq[(RdfTerm, RdfTerm, RdfTerm)]): Seq[Sol] = p match {
     case Bgp(ts) =>
       ts.foldLeft(Seq(Map.empty: Sol)) { (sols, tp) =>
-        val pn = tp.p match { case VerbNode(n) => n case _ => sys.error("no paths") }
-        for {
-          sol <- sols
-          (s, pr, o) <- g
-          s1 <- matchNode(tp.s, s, sol).toSeq
-          s2 <- matchNode(pn, pr, s1).toSeq
-          s3 <- matchNode(tp.o, o, s2).toSeq
-        } yield s3
+        tp.p match {
+          case VerbNode(pn) =>
+            for {
+              sol <- sols
+              (s, pr, o) <- g
+              s1 <- matchNode(tp.s, s, sol).toSeq
+              s2 <- matchNode(pn, pr, s1).toSeq
+              s3 <- matchNode(tp.o, o, s2).toSeq
+            } yield s3
+          // a transitive path triple: its own ALP solutions, joined
+          case VerbPath(pth) =>
+            val sols2 = pth match {
+              case PZeroOrMore(in) => evalTransitive(tp.s, in, true, tp.o, g)
+              case POneOrMore(in) => evalTransitive(tp.s, in, false, tp.o, g)
+              case _ => sys.error("only transitive paths")
+            }
+            for (sol <- sols; b <- sols2 if compatible(sol, b))
+              yield merge(sol, b)
+        }
       }
     case Join(l, r) =>
       for (a <- evalRef(l, g); b <- evalRef(r, g) if compatible(a, b))
@@ -426,5 +437,147 @@ class CompatSemanticsSpec extends SparkSpec {
         s"case $case_ mismatch\npath: $pth s=$s o=$o\n" +
           s"got: $got\nexpected: $expected")
     }
+  }
+
+  // ---- transitive paths seeded from a sibling pattern's bindings ----
+
+  private def u(x: String): RdfTerm = Iri("urn:t:" + x)
+  private def tp(s: Node, p: String, o: Node) =
+    TriplePattern(s, VerbNode(TermNode(u(p))), o)
+  private def pathTp(s: Node, p: Path, o: Node) = TriplePattern(s, VerbPath(p), o)
+  private def v(n: String): Node = VarNode(n)
+
+  /** Did the closure run on the driver (its pairs are a local relation
+    * in the plan) rather than as checkpointed Spark frames? */
+  private def localClosure(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if l.output.map(_.name) == Seq("ps", "po") => l
+    }.nonEmpty
+
+  private def checkRef(p: GraphPattern, g: Seq[(RdfTerm, RdfTerm, RdfTerm)],
+      graph: RdfGraph): org.apache.spark.sql.DataFrame = {
+    val df = new Compiler(graph, spark).compile(p)
+    val got = canon(df.collect().toSeq.map(rowToSol(_, df.columns.toSeq)))
+    assert(got == canon(evalRef(p, g)), s"pattern: $p")
+    df
+  }
+
+  /** a → b → c → a is a cycle, c → d leaves it; z has no p-edge at all.
+    * q binds the seeds: e q a, e q z, b q z. */
+  private val seedGraph: Seq[(RdfTerm, RdfTerm, RdfTerm)] = Seq(
+    (u("a"), u("p"), u("b")), (u("b"), u("p"), u("c")),
+    (u("c"), u("p"), u("a")), (u("c"), u("p"), u("d")),
+    (u("e"), u("q"), u("a")), (u("e"), u("q"), u("z")),
+    (u("b"), u("q"), u("z")))
+
+  test("closures seeded from a bound endpoint match the reference") {
+    // with predicate counts the small edge relation is fetched whole;
+    // without them, one fetch per BFS level
+    for (graph <- Seq(RdfGraph.fromTriples(spark, seedGraph),
+        RdfGraph.fromTriples(spark, seedGraph).copy(predCounts = Map.empty))) {
+      val p = PLink("urn:t:p")
+      val cases = Seq(
+        // bound subject, through the cycle (a reaches itself)
+        Bgp(Seq(tp(v("s"), "q", v("x")), pathTp(v("x"), POneOrMore(p), v("y")))),
+        // `*` from z, which has no outgoing edge: only its (z, z) pair
+        Bgp(Seq(tp(v("s"), "q", v("x")), pathTp(v("x"), PZeroOrMore(p), v("y")))),
+        // bound object: the closure runs over reversed edges
+        Bgp(Seq(pathTp(v("y"), POneOrMore(p), v("x")), tp(v("x"), "q", v("o")))),
+        Bgp(Seq(pathTp(v("y"), PZeroOrMore(p), v("x")), tp(v("s"), "q", v("x")))),
+        // inverse path and the same variable at both ends
+        Bgp(Seq(tp(v("x"), "q", v("o")), pathTp(v("x"), POneOrMore(PInv(p)), v("y")))),
+        Bgp(Seq(tp(v("s"), "q", v("x")), pathTp(v("x"), POneOrMore(p), v("x")))),
+        // the seed source is a pattern with a constant
+        Bgp(Seq(tp(TermNode(u("e")), "q", v("x")), pathTp(v("x"), POneOrMore(p), v("y")))))
+      cases.foreach { c =>
+        val df = checkRef(c, seedGraph, graph)
+        assert(localClosure(df), s"not seeded: $c")
+      }
+      // a free endpoint pair still takes the pair closure
+      val free = checkRef(Bgp(Seq(pathTp(v("x"), POneOrMore(p), v("y")))),
+        seedGraph, graph)
+      assert(!localClosure(free))
+    }
+  }
+
+  test("a path inside OPTIONAL is not seeded from outside it; GRAPH <iri> " +
+    "scopes the seeded closure") {
+    val graph = RdfGraph.fromTriples(spark, seedGraph)
+    val p = PLink("urn:t:p")
+    val opt = LeftJoin(Bgp(Seq(tp(v("s"), "q", v("x")))),
+      Bgp(Seq(pathTp(v("x"), PZeroOrMore(p), v("y")))), Nil)
+    assert(!localClosure(checkRef(opt, seedGraph, graph)))
+    // seeded from a sibling INSIDE the OPTIONAL
+    val inner = LeftJoin(Bgp(Seq(tp(v("s"), "q", v("x")))),
+      Bgp(Seq(tp(v("x"), "q", v("w")), pathTp(v("x"), POneOrMore(p), v("y")))), Nil)
+    assert(localClosure(checkRef(inner, seedGraph, graph)))
+    // the same edges in two named graphs; g2 also links d → e
+    val g1 = seedGraph
+    val g2 = seedGraph :+ ((u("d"), u("p"), u("e")))
+    val quads = RdfGraph.fromQuads(spark,
+      g1.map { case (s, pr, o) => (s, pr, o, Some(u("g1"))) } ++
+        g2.map { case (s, pr, o) => (s, pr, o, Some(u("g2"))) })
+    for ((name, triples) <- Seq("g1" -> g1, "g2" -> g2); star <- Seq(true, false)) {
+      val path = if (star) PZeroOrMore(p) else POneOrMore(p)
+      val bgp = Bgp(Seq(tp(v("s"), "q", v("x")), pathTp(v("x"), path, v("y"))))
+      val df = new Compiler(quads, spark).compile(GraphPat(TermNode(u(name)), bgp))
+      assert(localClosure(df))
+      val got = canon(df.collect().toSeq.map(rowToSol(_, df.columns.toSeq)))
+      assert(got == canon(evalRef(bgp, triples)), s"GRAPH <$name> star=$star")
+    }
+  }
+
+  test("a seed set past the local bound falls back to the frame BFS") {
+    // 10001 seeds (past the driver-side bound); a handful have edges
+    val n = 10001
+    val g: Seq[(RdfTerm, RdfTerm, RdfTerm)] =
+      (0 until n).map(i => (u(s"n$i"), u("q"), u("t"))) ++
+        (0 until 5).map(i => (u(s"n$i"), u("p"), u(s"n${i + 1}")))
+    val graph = RdfGraph.fromTriples(spark, g)
+    val bgp = Bgp(Seq(tp(v("x"), "q", TermNode(u("t"))),
+      pathTp(v("x"), POneOrMore(PLink("urn:t:p")), v("y"))))
+    val df = checkRef(bgp, g, graph)
+    assert(!localClosure(df))
+    assert(df.count() == 15) // n0..n4 reach 5, 4, 3, 2, 1 nodes
+  }
+
+  test("the bench-shaped `+` path compiles in (BFS levels + 1) jobs") {
+    val graph = Tables.graph(spark, TestSpark.sf0001, "customer", "nation", "region")
+    val q = """PREFIX gp: <urn:graft:p/>
+      SELECT ?name { ?c gp:c_custkey 42 .
+        ?c (gp:c_nation_ref|gp:n_region_ref)+ ?x . ?x gp:n_name|gp:r_name ?name }"""
+    def compileJobs(e: Engine): (Int, org.apache.spark.sql.DataFrame) = {
+      e.selectRaw(q).collect() // warm: first-use scans and statistics
+      var jobs = 0
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val df = e.selectRaw(q)
+        Thread.sleep(500)
+        (jobs, df)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    // one seed collect, then one per level: customer → nation → region →
+    // (no edge)
+    val (perLevel, df0) = compileJobs(Engine.fromGraph(graph.copy(predCounts = Map.empty)))
+    assert(perLevel <= 4, s"compile ran $perLevel jobs")
+    // the counts prove the edge relation small: seed, then all edges once
+    val (whole, df) = compileJobs(Engine.fromGraph(graph))
+    assert(whole <= 2, s"compile ran $whole jobs")
+    assert(localClosure(df) && localClosure(df0))
+    assert(df0.collect().toSet == df.collect().toSet)
+    val want = spark.read.parquet(s"${TestSpark.sf0001}/customer.parquet")
+      .where("c_custkey = 42").join(
+        spark.read.parquet(s"${TestSpark.sf0001}/nation.parquet"),
+        org.apache.spark.sql.functions.expr("c_nationkey = n_nationkey"))
+      .join(spark.read.parquet(s"${TestSpark.sf0001}/region.parquet"),
+        org.apache.spark.sql.functions.expr("n_regionkey = r_regionkey"))
+      .select("n_name", "r_name").collect().flatMap(r =>
+        Seq(r.getString(0), r.getString(1))).toSeq.sorted
+    assert(df.collect().map(_.getStruct(0).getString(1)).toSeq.sorted == want)
   }
 }

@@ -40,6 +40,15 @@ class EagerCountPushdownSpec extends SparkSpec {
     assert(got.toSeq === Seq(("a", 2L), ("b", 3L), ("b2", 3L)))
   }
 
+  test("a keep-side SHUFFLE_MERGE hint arms the gate like SHUFFLE_HASH") {
+    // grouped by the dim's name: dim is the kept side, fact is pushed
+    val merged = fact.join(dim.hint("merge"), F.col("fk") === F.col("k"))
+      .groupBy("name").agg(F.count(F.lit(1)).as("cnt"))
+    assert(firedIn(merged), "expected the pushdown to fire under a merge hint")
+    assert(merged.orderBy("name").collect().map(r => (r.getString(0), r.getLong(1)))
+      .toSeq === Seq(("a", 2L), ("b", 3L), ("b2", 3L)))
+  }
+
   test("global count over an empty shuffled join is 0, not null") {
     // Range-backed fact so the no-match filter can't constant-fold the
     // side to an empty LocalRelation before the rule sees the join

@@ -114,7 +114,9 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
     val chain = (0 until n).map(i =>
       (Iri(s"http://example.com/n$i"): RdfTerm, p: RdfTerm,
         Iri(s"http://example.com/n${i + 1}"): RdfTerm))
-    val e = Engine.fromGraph(RdfGraph.fromTriples(spark, chain)
+    val head = (Iri("http://example.com/n0"): RdfTerm,
+      Iri("http://example.com/label"): RdfTerm, Lit.plain("head"): RdfTerm)
+    val e = Engine.fromGraph(RdfGraph.fromTriples(spark, chain :+ head)
       .withPrefix("ex", "http://example.com/"))
     // seeded BFS from the head reaches all n nodes strictly below
     val fromHead = e.select(
@@ -124,6 +126,15 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
     val pairs = e.selectRaw(
       "SELECT ?a ?b { ?a <http://example.com/next>+ ?b }")
     assert(pairs.count() == n.toLong * (n + 1) / 2)
+    // seeded from a bound variable: the label binds the head
+    val fromBound = e.select(
+      "SELECT ?x { ?h ex:label \"head\" . ?h ex:next+ ?x }")
+    assert(fromBound.count() == n)
+    // every node with an out-edge is a seed: the same pairs
+    val seededPairs = e.selectRaw(
+      "SELECT ?a ?b { ?a ex:next ?m . ?a ex:next+ ?b }")
+    assert(seededPairs.select("a", "b").distinct().count() ==
+      n.toLong * (n + 1) / 2)
   }
 
   test("Engine.toSet on a single-column result") {

@@ -5,6 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites. */
 object TestSpark {
+  /** The sf0.001 TPC-H-style tables the suites read (TESTDATA.md). */
+  val sf0001: String = "/root/testdata/sf0.001"
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
