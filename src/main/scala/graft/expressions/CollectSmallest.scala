@@ -8,36 +8,32 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
-/** Bounded "smallest `cap` longs" aggregate: the posting-list cap for
+/** The bounded "smallest `cap` longs of a group" buffer shared by
+  * [[CollectSmallest]] and [[SmallestPairs]]: the posting-list cap for
   * LSH bucket / inverted-index blocking with an O(cap) aggregation
   * buffer.
   *
-  * `slice(array_sort(collect_list(id)), 1, cap)` computes the same set
-  * but its buffer holds the ENTIRE group before the slice — a
+  * `slice(array_sort(collect_list(id)), 1, cap)` computes the same
+  * multiset but its buffer holds the ENTIRE group before the slice — a
   * degenerate bucket (millions of identical documents) materializes
   * millions of ids in one in-memory buffer that cannot spill per-group.
-  * This aggregate never holds more than `cap` values per buffer no
-  * matter the skew, and merges are capped too (partial aggregation
-  * stays effective). Output: ascending array<long>, exactly the `cap`
-  * smallest distinct-or-not ids of the group (duplicates kept, like
-  * collect_list). */
-case class CollectSmallest(
-    child: Expression,
-    cap: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
+  * This buffer never holds more than `cap` values no matter the skew,
+  * and merges are capped too (partial aggregation stays effective).
+  * Multiset semantics: duplicates are kept (like collect_list) and the
+  * largest end is evicted first. Subclasses choose only what `eval`
+  * makes of the capped ascending id list ([[smallest]]). */
+private[graft] abstract class SmallestLongs
     extends TypedImperativeAggregate[java.util.TreeMap[Long, Int]] {
-  require(cap >= 1, s"cap must be >= 1, got $cap")
+  def child: Expression
+  def cap: Int
 
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "collect_smallest"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case LongType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"collect_smallest needs bigint, got ${other.catalogString}")
+      s"$prettyName needs bigint, got ${other.catalogString}")
   }
 
   /** value → multiplicity; total size kept ≤ cap. */
@@ -52,7 +48,7 @@ case class CollectSmallest(
   }
 
   private def add(b: java.util.TreeMap[Long, Int], v: Long, n: Int): Unit = {
-    var room = cap - size(b)
+    val room = cap - size(b)
     if (room <= 0) {
       if (b.isEmpty || v >= b.lastKey()) return
       // evict from the largest end to make room
@@ -89,7 +85,9 @@ case class CollectSmallest(
     b
   }
 
-  override def eval(b: java.util.TreeMap[Long, Int]): Any = {
+  /** The buffer expanded to its ascending id list (multiplicities
+    * repeated), at most `cap` long. */
+  protected def smallest(b: java.util.TreeMap[Long, Int]): Array[Long] = {
     val out = new Array[Long](math.min(size(b), cap))
     var i = 0
     val it = b.entrySet().iterator()
@@ -98,7 +96,7 @@ case class CollectSmallest(
       var n = e.getValue
       while (n > 0 && i < out.length) { out(i) = e.getKey; i += 1; n -= 1 }
     }
-    new GenericArrayData(out)
+    out
   }
 
   override def serialize(b: java.util.TreeMap[Long, Int]): Array[Byte] = {
@@ -118,6 +116,25 @@ case class CollectSmallest(
     while (n > 0) { b.put(buf.getLong, buf.getInt); n -= 1 }
     b
   }
+}
+
+/** The `cap` smallest ids of a group as an ascending array<long>
+  * (duplicates kept), for k-NN candidate lists (`Similarity.knnJoin`).
+  * The long-id pair sites of `pipeline.Dedup` take [[SmallestPairs]]
+  * instead. */
+case class CollectSmallest(
+    child: Expression,
+    cap: Int,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+    extends SmallestLongs {
+  require(cap >= 1, s"cap must be >= 1, got $cap")
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "collect_smallest"
+
+  override def eval(b: java.util.TreeMap[Long, Int]): Any =
+    new GenericArrayData(smallest(b))
 
   override def withNewMutableAggBufferOffset(newOffset: Int): CollectSmallest =
     copy(mutableAggBufferOffset = newOffset)

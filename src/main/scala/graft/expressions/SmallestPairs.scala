@@ -1,109 +1,37 @@
 package graft.expressions
 
-import java.nio.ByteBuffer
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** Ordered candidate PAIRS of the `cap` smallest ids of a group, as one
-  * bounded aggregate: fuses [[CollectSmallest]] + the posexplode/slice
-  * pair expansion of the LSH banding stage into the aggregate's eval —
-  * the per-bucket pair fan-out happens once, directly from the O(cap)
-  * buffer, instead of re-slicing the posting-list array per element
-  * (which allocated a fresh sub-array per exploded row). Same buffer,
-  * same skew bound, byte-identical pair set: for the expanded
-  * (ascending, multiplicity-kept) id list e_0..e_{n-1}, emits exactly
-  * the (e_i, e_j) with i < j — the pairs `bucketPairs` produced from
-  * the [[CollectSmallest]] array. Output:
+  * bounded aggregate: the capped posting list ([[SmallestLongs]], the
+  * buffer [[CollectSmallest]] uses too) expanded to its pairs in the
+  * aggregate's eval, once, directly from the O(cap) buffer. Every
+  * long-id pair site of `pipeline.Dedup` takes this path; sort+slice
+  * remains only for other id types. For the expanded (ascending,
+  * multiplicity-kept) id list e_0..e_{n-1} it emits exactly the
+  * (e_i, e_j) with i < j, including (x, x) for a duplicated id (unique-
+  * rid inputs, such as LSH banding rows, never produce those). Output:
   * array<struct<id1: bigint, id2: bigint>>. */
 case class SmallestPairs(
     child: Expression,
     cap: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[java.util.TreeMap[Long, Int]] {
+    extends SmallestLongs {
   require(cap >= 1, s"cap must be >= 1, got $cap")
 
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("id1", LongType, nullable = false),
     StructField("id2", LongType, nullable = false))),
     containsNull = false)
   override def prettyName: String = "smallest_pairs"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"smallest_pairs needs bigint, got ${other.catalogString}")
-  }
-
-  /** value → multiplicity; total size kept ≤ cap (same discipline as
-    * CollectSmallest: duplicates kept, largest end evicted first). */
-  override def createAggregationBuffer(): java.util.TreeMap[Long, Int] =
-    new java.util.TreeMap[Long, Int]()
-
-  private def size(b: java.util.TreeMap[Long, Int]): Int = {
-    var s = 0
-    val it = b.values().iterator()
-    while (it.hasNext) s += it.next()
-    s
-  }
-
-  private def add(b: java.util.TreeMap[Long, Int], v: Long, n: Int): Unit = {
-    val room = cap - size(b)
-    if (room <= 0) {
-      if (b.isEmpty || v >= b.lastKey()) return
-      var need = math.min(n, cap)
-      while (need > 0 && !b.isEmpty && b.lastKey() > v) {
-        val last = b.lastEntry()
-        val drop = math.min(last.getValue, need)
-        if (drop == last.getValue) b.remove(last.getKey)
-        else b.put(last.getKey, last.getValue - drop)
-        need -= drop
-        b.merge(v, drop, (a, x) => a + x)
-      }
-    } else {
-      val take = math.min(n, room)
-      b.merge(v, take, (a, x) => a + x)
-      if (n > take) add(b, v, n - take) // may still evict larger keys
-    }
-  }
-
-  override def update(b: java.util.TreeMap[Long, Int],
-      input: InternalRow): java.util.TreeMap[Long, Int] = {
-    val v = child.eval(input)
-    if (v != null) add(b, v.asInstanceOf[Long], 1)
-    b
-  }
-
-  override def merge(b: java.util.TreeMap[Long, Int],
-      other: java.util.TreeMap[Long, Int]): java.util.TreeMap[Long, Int] = {
-    val it = other.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      add(b, e.getKey, e.getValue)
-    }
-    b
-  }
-
   override def eval(b: java.util.TreeMap[Long, Int]): Any = {
-    // expand the capped multiset to its ascending id list, then emit
-    // every ordered-position pair — bucketPairs' exact semantics,
-    // including (x, x) pairs for a duplicated id (unique-rid inputs,
-    // i.e. LSH banding rows, never produce those)
-    val n = math.min(size(b), cap)
-    val ids = new Array[Long](n)
-    var i = 0
-    val it = b.entrySet().iterator()
-    while (it.hasNext && i < n) {
-      val e = it.next()
-      var m = e.getValue
-      while (m > 0 && i < n) { ids(i) = e.getKey; i += 1; m -= 1 }
-    }
+    val ids = smallest(b)
+    val n = ids.length
     val out = new Array[Any](n * (n - 1) / 2)
     var k = 0
     var a = 0
@@ -117,24 +45,6 @@ case class SmallestPairs(
       a += 1
     }
     new GenericArrayData(out)
-  }
-
-  override def serialize(b: java.util.TreeMap[Long, Int]): Array[Byte] = {
-    val buf = ByteBuffer.allocate(4 + b.size() * 12)
-    buf.putInt(b.size())
-    val it = b.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next(); buf.putLong(e.getKey); buf.putInt(e.getValue)
-    }
-    buf.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): java.util.TreeMap[Long, Int] = {
-    val buf = ByteBuffer.wrap(bytes)
-    val b = new java.util.TreeMap[Long, Int]()
-    var n = buf.getInt
-    while (n > 0) { b.put(buf.getLong, buf.getInt); n -= 1 }
-    b
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): SmallestPairs =

@@ -286,13 +286,6 @@ object EagerCountPushdown extends Rule[LogicalPlan] {
     val newJoin =
       if (pushIsLeft) Join(pushed, keep, Inner, Some(cond), hint)
       else Join(keep, pushed, Inner, Some(cond), hint)
-    // when the aggregate read through a Project, keep exactly the
-    // project expressions it used and forward the pushed partials
-    val pushedAttrs = pushedCols.values.map(_._1).toSeq
-    val newChild = projUsed match {
-      case Some(used) => Project(used ++ pushedAttrs, newJoin)
-      case None => newJoin
-    }
     def combined(ae: AggregateExpression): Expression = {
       def sum(a: Attribute) =
         AggregateExpression(Sum(a), Complete, isDistinct = false)
@@ -321,6 +314,18 @@ object EagerCountPushdown extends Rule[LogicalPlan] {
         case ae: AggregateExpression if actions.contains(ae.canonicalized) =>
           combined(ae)
       }.asInstanceOf[NamedExpression]
+    }
+    // when the aggregate read through a Project, keep the project
+    // entries the REWRITTEN aggregate still reads and forward the pushed
+    // partials: an entry that fed only pushed calls reads push-side
+    // columns the per-key Aggregate has aggregated away
+    val newChild = projUsed match {
+      case Some(used) =>
+        val read = AttributeSet(
+          (newOuts ++ agg.groupingExpressions).flatMap(_.references))
+        Project(used.filter(ne => read.contains(ne.toAttribute)) ++
+          pushedCols.values.map(_._1), newJoin)
+      case None => newJoin
     }
     agg.copy(aggregateExpressions = newOuts, child = newChild)
   }

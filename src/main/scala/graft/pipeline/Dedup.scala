@@ -176,11 +176,12 @@ object Dedup {
           F.coalesce(F.col(s"m$i"), F.lit(Long.MaxValue))): _*).as("sig"))
   }
 
-  /** Per-group "smallest `cap` ids" aggregation column: the native
-    * bounded-buffer aggregate for long ids ([[
-    * graft.expressions.CollectSmallest]] — O(cap) memory per group no
-    * matter the skew), sort+slice for other id types (whole-group
-    * buffer; fine at moderate skew). */
+  /** Per-group "smallest `cap` ids" aggregation column, for id lists
+    * that are not expanded to pairs (k-NN candidates): the bounded
+    * [[graft.expressions.CollectSmallest]] aggregate for long ids (O(cap)
+    * memory per group no matter the skew), sort+slice for other id types
+    * (whole-group buffer; fine at moderate skew). Pair sites use
+    * [[cappedPairs]]. */
   private[pipeline] def smallestIds(ridType: org.apache.spark.sql.types.DataType,
       rid: Column, cap: Int): Column = ridType match {
     case LongType => graft.expressions.ColumnBridge.column(
@@ -223,34 +224,13 @@ object Dedup {
     val sigs = sh.where(F.size(F.col("sh")) > 0).select(F.col("rid"),
       minhashSigColumn(F.col("sh"), numHashes).as("sig"))
     val banded = bandedRows(sigs, numHashes, bands)
-    // ONE shuffle to per-bucket posting lists, sorted and capped to the
-    // `maxBucket` smallest ids, pairs expanded locally — the same shape
-    // as the ngram/simhash paths. The cap bounds a degenerate bucket's
+    // ONE shuffle to per-bucket posting lists capped to the `maxBucket`
+    // smallest ids, pairs expanded locally ([[cappedPairs]], the shape
+    // every pair site shares). The cap bounds a degenerate bucket's
     // pair fan-out at maxBucket²/2 (never |bucket|²); exact
     // mass-duplicates beyond the cap are still caught by
-    // [[exactGroups]], the right tool for them. Long ids take the fused
-    // pair-emitting aggregate ([[graft.expressions.SmallestPairs]]):
-    // the pair expansion happens once in the aggregate's eval instead
-    // of re-slicing the posting array per exploded element. The
-    // cross-bucket pair `distinct` stays: a pair found via two bands
-    // cannot be deduplicated bucket-locally without breaking the cap's
-    // exact semantics (whether a pair survives band b's cap depends on
-    // rows of OTHER buckets in earlier bands).
-    banded.schema("rid").dataType match {
-      case LongType if sh.sparkSession.conf
-          .get("spark.graft.fusedBandingPairs", "true") == "true" =>
-        banded.groupBy("band", "bucket")
-          .agg(graft.expressions.ColumnBridge.column(
-            graft.expressions.SmallestPairs(
-              graft.expressions.ColumnBridge.expression(F.col("rid")),
-              maxBucket).toAggregateExpression()).as("prs"))
-          .select(F.explode(F.col("prs")).as("pr"))
-          .select(F.col("pr.id1").as("id1"), F.col("pr.id2").as("id2"))
-          .distinct()
-      case ridType =>
-        bucketPairs(banded.groupBy("band", "bucket")
-          .agg(smallestIds(ridType, F.col("rid"), maxBucket).as("rids")))
-    }
+    // [[exactGroups]], the right tool for them.
+    cappedPairs(banded, maxBucket, "band", "bucket")
   }
 
   /** (rid, band, bucket) banding rows of a (rid, sig) signature frame —
@@ -270,14 +250,39 @@ object Dedup {
         F.hash(F.col("band"), F.col("bsig")).as("bucket"))
   }
 
-  /** Expand each capped, sorted posting list into its ordered id pairs
-    * (local, no shuffle) and dedup pairs found via multiple buckets. */
-  private def bucketPairs(buckets: DataFrame): DataFrame =
-    buckets.where(F.size(F.col("rids")) >= 2)
-      .select(F.posexplode(F.col("rids")).as(Seq("i", "id1")), F.col("rids"))
-      .select(F.col("id1"),
-        F.explode(F.slice(F.col("rids"), F.col("i") + 2, F.size(F.col("rids")))).as("id2"))
-      .distinct()
+  /** The one candidate-pair step of every blocking dedup: group a
+    * (rid, keys…) posting relation by `keys` — the one shuffle — cap
+    * each posting list to its `cap` smallest rids (duplicates kept),
+    * expand it locally into the ordered pairs (e_i, e_j), i < j, and
+    * dedup pairs found via several lists. Returns (id1, id2).
+    *
+    * Long rids take the fused bounded aggregate
+    * ([[graft.expressions.SmallestPairs]]): O(cap) buffer per list no
+    * matter the skew, pairs emitted once from the buffer. Other rid
+    * types fall back to sort+slice (whole-list buffer, one slice per
+    * exploded element) with the same pair set. The cross-list
+    * `distinct` cannot move into the lists: whether a pair survives one
+    * list's cap depends on that list's other rows. */
+  private def cappedPairs(postings: DataFrame, cap: Int,
+      keys: String*): DataFrame = {
+    val lists = postings.groupBy(keys.map(F.col): _*)
+    val pairs = postings.schema("rid").dataType match {
+      case LongType =>
+        lists.agg(graft.expressions.ColumnBridge.column(
+            graft.expressions.SmallestPairs(
+              graft.expressions.ColumnBridge.expression(F.col("rid")),
+              cap).toAggregateExpression()).as("prs"))
+          .select(F.explode(F.col("prs")).as("pr"))
+          .select(F.col("pr.id1").as("id1"), F.col("pr.id2").as("id2"))
+      case ridType =>
+        lists.agg(smallestIds(ridType, F.col("rid"), cap).as("rids"))
+          .where(F.size(F.col("rids")) >= 2)
+          .select(F.posexplode(F.col("rids")).as(Seq("i", "id1")), F.col("rids"))
+          .select(F.col("id1"), F.explode(F.slice(F.col("rids"),
+            F.col("i") + 2, F.size(F.col("rids")))).as("id2"))
+    }
+    pairs.distinct()
+  }
 
   /** Exact Jaccard similarity of two shingle-set columns. */
   def jaccard(a: Column, b: Column): Column = {
@@ -449,8 +454,7 @@ object Dedup {
     val banded = bandedRows(sigsIn, index.numHashes, index.bands)
       .unionByName(index.bandRows.select(
         (F.col("rid") * 2).as("rid"), F.col("band"), F.col("bucket")))
-    val cands = bucketPairs(banded.groupBy("band", "bucket")
-        .agg(smallestIds(LongType, F.col("rid"), maxBucket).as("rids")))
+    val cands = cappedPairs(banded, maxBucket, "band", "bucket")
       .where(F.col("id1").bitwiseAND(F.lit(1L)) =!=
         F.col("id2").bitwiseAND(F.lit(1L)))
     val shAll = shIn.unionByName(index.shingles.select(
@@ -750,8 +754,9 @@ object Dedup {
 
   /** Shared candidate+verify tail of the set-overlap dedup family: a
     * (rid, sh: array<long>) frame → prefix-filtered, df-capped
-    * posting-list shuffle on the set elements ([[bucketPairs]]) → exact
-    * Jaccard verification. Serves [[ngramJaccardPairs]] (shingle sets)
+    * posting-list shuffle on the set elements ([[cappedPairs]]: fused
+    * for long ids, sort+slice for other id types) → exact Jaccard
+    * verification. Serves [[ngramJaccardPairs]] (shingle sets)
     * and [[binaryNearDupPairs]] (CDC chunk-hash sets).
     *
     * Candidate generation uses AllPairs/PPJoin prefix filtering
@@ -785,10 +790,7 @@ object Dedup {
         w.partitionBy("rid").orderBy(F.col("kfx"), F.col("k"))))
       .where(F.col("rnk") <=
         F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1)
-    val cands = bucketPairs(ranked
-      .groupBy("k")
-      .agg(smallestIds(sh.schema("rid").dataType, F.col("rid"),
-        maxDocsPerKey).as("rids")))
+    val cands = cappedPairs(ranked, maxDocsPerKey, "k")
     verifiedJaccard(cands, sh, threshold)
   }
 
@@ -968,13 +970,13 @@ object Dedup {
     *     Hamming-1 neighbor bucket (symmetric 1-bit multi-probe — two
     *     signatures within Hamming distance 2 still co-occur somewhere);
     *  2. ONE shuffle groups postings into per-(table, bucket) lists of at
-    *     most `maxBucket` ids (bounded-memory [[
-    *     graft.expressions.CollectSmallest]]), so a degenerate corpus
-    *     (everything in one bucket) emits O(tables·planes·maxBucket²)
-    *     pairs, never O(n²);
-    *  3. pairs expand locally ([[bucketPairs]], deduped across tables and
-    *     probes), vectors re-attach with ONE join (the array-free pair
-    *     list is the build side), exact cosine filters to ≥ threshold.
+    *     most `maxBucket` ids and expands each locally into its pairs,
+    *     deduped across tables and probes ([[cappedPairs]]: the bounded
+    *     fused aggregate for long ids, sort+slice for other id types), so
+    *     a degenerate corpus (everything in one bucket) emits
+    *     O(tables·planes·maxBucket²) pairs, never O(n²);
+    *  3. vectors re-attach with ONE join (the array-free pair list is the
+    *     build side), exact cosine filters to ≥ threshold.
     *
     * Recall/cost knobs: `tables` buys recall linearly in cost, `planes`
     * shrinks buckets (finer candidates, lower per-table recall) —
@@ -993,9 +995,7 @@ object Dedup {
       base.select(F.col("rid"), F.lit(t).as("tbl"),
         F.explode(probeBuckets).as("bucket"))
     }.reduce(_ unionByName _)
-    val cands = bucketPairs(postings.groupBy("tbl", "bucket")
-      .agg(smallestIds(base.schema("rid").dataType, F.col("rid"),
-        maxBucket).as("rids")))
+    val cands = cappedPairs(postings, maxBucket, "tbl", "bucket")
     // one join attaches both vectors (exactly one non-null per role per
     // pair → max picks it), same shape as verifiedJaccard
     cands.select(F.col("id1"), F.col("id2"),
@@ -1017,8 +1017,8 @@ object Dedup {
     * semantically tight, so near-dups co-cluster by construction).
     *
     * Scale posture mirrors [[embeddingCosinePairs]]: per-cluster
-    * membership is capped at `maxCluster` ids through the bounded
-    * [[graft.expressions.CollectSmallest]] aggregate, so a degenerate
+    * membership is capped at `maxCluster` ids through [[cappedPairs]]
+    * (the bounded fused aggregate for long ids), so a degenerate
     * corpus (everything in one cluster) emits at most maxCluster²/2
     * candidate pairs, never |cluster|²/2. One membership shuffle + the
     * verify join; the k-means stages are documented at
@@ -1033,9 +1033,7 @@ object Dedup {
       .localCheckpoint(false)
     val members = base
       .join(assigned.select(F.col(id).as("rid"), F.col("cluster")), "rid")
-    val cands = bucketPairs(members.groupBy("cluster")
-      .agg(smallestIds(base.schema("rid").dataType, F.col("rid"),
-        maxCluster).as("rids")))
+    val cands = cappedPairs(members, maxCluster, "cluster")
     cands.select(F.col("id1"), F.col("id2"),
         F.explode(F.array(F.col("id1"), F.col("id2"))).as("rid"))
       .join(base, "rid")

@@ -152,6 +152,47 @@ class EagerCountPushdownSpec extends SparkSpec {
       agg(withHint = false).orderBy("name").collect().toSeq)
   }
 
+  test("through a Project: entries feeding only pushed calls are dropped " +
+    "(plan-change validation on)") {
+    // the struct group key is read twice, so CollapseProject keeps the
+    // Project under the aggregate; `a1` reads the fact's `amt`, which
+    // the pushed per-key aggregate consumes
+    val f = Seq((1L, 10), (1L, 3), (2L, 7), (2L, 5), (4L, 100))
+      .toDF("fk", "amt")
+    def agg(withHint: Boolean): DataFrame = {
+      val d = if (withHint) dim.hint("shuffle_hash") else dim
+      f.join(d, F.col("fk") === F.col("k"))
+        .select(F.struct(F.col("name"), F.length(F.col("name"))).as("g"),
+          (F.col("amt") + 1).as("a1"))
+        .groupBy("g").agg(F.sum("a1").as("s"), F.count(F.lit(1)).as("cnt"))
+        .select(F.col("g.name").as("name"), F.col("s"), F.col("cnt"))
+    }
+    // the rule's own output: plan-change validation does not flag a
+    // Project that reads a column its child no longer produces, so the
+    // check looks at every node's missing inputs directly
+    val direct = graft.optimizer.EagerCountPushdown(
+      org.apache.spark.sql.catalyst.optimizer.EliminateResolvedHint(
+        agg(withHint = true).queryExecution.analyzed))
+    assert(direct.toString.contains("__graft_a"), direct.toString)
+    assert(direct.collect { case n if n.missingInput.nonEmpty => n }.isEmpty,
+      s"the rewrite reads aggregated-away columns:\n$direct")
+    val key = "spark.sql.planChangeValidation"
+    val was = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "true")
+      val rewritten = agg(withHint = true)
+      assert(firedIn(rewritten), "expected the pushdown to fire through the Project")
+      val got = rewritten.orderBy("name").collect().map(r =>
+        (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+      assert(got === Seq(("a", 15L, 2L), ("b", 14L, 2L), ("b2", 14L, 2L)))
+      assert(got === agg(withHint = false).orderBy("name").collect().map(r =>
+        (r.getString(0), r.getLong(1), r.getLong(2))).toSeq)
+    } finally was match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("keep-side-only MIN/MAX (nothing to push) does not fire") {
     val df = fact.join(dim.hint("shuffle_hash"), F.col("fk") === F.col("k"))
       .groupBy("name").agg(F.max("name").as("m"))
