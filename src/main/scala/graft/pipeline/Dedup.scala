@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.types._
+import graft.sources.Sidecar
+import graft.sources.Sidecar.Json
 
 /** Deduplication operators for training-data pipelines, each designed as a
   * distributed dataflow that survives 100× scale-up:
@@ -397,9 +399,8 @@ object Dedup {
     def save(path: String): Unit = {
       shingles.write.mode("overwrite").parquet(s"$path/shingles")
       bandRows.write.mode("overwrite").parquet(s"$path/bands")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(path, MinHashSeenIndex.SIDECAR),
-        s"""{"k": $k, "numHashes": $numHashes, "bands": $bands}""")
+      Sidecar.save(shingles.sparkSession, path, MinHashSeenIndex.SIDECAR,
+        "k" -> k, "numHashes" -> numHashes, "bands" -> bands)
     }
   }
 
@@ -423,18 +424,12 @@ object Dedup {
     /** Reload an index persisted by [[MinHashSeenIndex.save]]. */
     def load(spark: org.apache.spark.sql.SparkSession,
         path: String): MinHashSeenIndex = {
-      val meta =
-        """\{"k": (\d+), "numHashes": (\d+), "bands": (\d+)\}""".r
-      java.nio.file.Files.readString(
-          java.nio.file.Paths.get(path, SIDECAR)) match {
-        case meta(k, numHashes, bands) =>
-          new MinHashSeenIndex(
-            spark.read.parquet(s"$path/shingles"),
-            spark.read.parquet(s"$path/bands"),
-            k.toInt, numHashes.toInt, bands.toInt)
-        case other => throw new IllegalArgumentException(
-          s"not a MinHash index (bad $SIDECAR): $other")
-      }
+      val (k, numHashes, bands) =
+        Sidecar.load(spark, path, SIDECAR, "a MinHash index") { j =>
+          (j.int("k"), j.int("numHashes"), j.int("bands"))
+        }
+      new MinHashSeenIndex(spark.read.parquet(s"$path/shingles"),
+        spark.read.parquet(s"$path/bands"), k, numHashes, bands)
     }
   }
 

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.types._
+import graft.sources.Sidecar
+import graft.sources.Sidecar.Json
 
 /** IVF-PQ: the inverted-file coarse quantizer ([[Similarity.IvfIndex]])
   * composed with product-quantized RESIDUAL codes ([[Pq]]) — the
@@ -40,57 +42,25 @@ object IvfPq {
       * of `nprobe` directories of m-int codes. */
     def save(path: String): Unit = {
       codes.write.mode("overwrite").partitionBy("__list").parquet(path)
-      val cs = centers.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-      val cb = pq.codebooks.map(_.map(_.mkString("[", ",", "]"))
-        .mkString("[", ",", "]")).mkString("[", ",", "]")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(path, IvfPq.Sidecar),
-        s"""{"id": "$id", "m": ${pq.m}, "k": ${pq.k}, "subDim": ${pq.subDim}, """ +
-          s""""offset": ${pq.offset}, "centers": $cs, "codebooks": $cb}""")
+      Sidecar.save(codes.sparkSession, path, IvfPq.SIDECAR,
+        "id" -> id, "m" -> pq.m, "k" -> pq.k, "subDim" -> pq.subDim,
+        "offset" -> pq.offset, "centers" -> centers,
+        "codebooks" -> pq.codebooks)
     }
   }
 
-  private[pipeline] val Sidecar = "_ivfpq_meta.json"
+  private[pipeline] val SIDECAR = "_ivfpq_meta.json"
 
   /** Load a [[IvfPqIndex#save]]d index; the codes scan stays lazy and
     * partition-aware. */
   def load(spark: SparkSession, path: String): IvfPqIndex = {
-    val text = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(path, Sidecar))
-    val meta = ("""\{"id": "([^"]*)", "m": (\d+), "k": (\d+), """ +
-      """"subDim": (\d+), "offset": ([0-9.Ee+-]+), "centers": \[(.*)\], """ +
-      """"codebooks": \[(.*)\]\}""").r
-    text match {
-      case meta(id, m, k, subDim, offset, cs, cb) =>
-        def splitTop(s: String): Seq[String] = {
-          // split a bracketed list body on top-level commas
-          val out = scala.collection.mutable.ArrayBuffer.empty[String]
-          var depth = 0
-          var start = 0
-          for (i <- s.indices) s.charAt(i) match {
-            case '[' => depth += 1
-            case ']' => depth -= 1
-            case ',' if depth == 0 => out += s.substring(start, i); start = i + 1
-            case _ =>
-          }
-          if (s.nonEmpty) out += s.substring(start)
-          out.toSeq
-        }
-        def floats(s: String): Seq[Float] =
-          s.stripPrefix("[").stripSuffix("]").split(",")
-            .filter(_.nonEmpty).map(_.toFloat).toSeq
-        def longs(s: String): Seq[Long] =
-          s.stripPrefix("[").stripSuffix("]").split(",")
-            .filter(_.nonEmpty).map(_.toLong).toSeq
-        val centers = splitTop(cs).map(floats)
-        val codebooks = splitTop(cb).map(sub =>
-          splitTop(sub.stripPrefix("[").stripSuffix("]")).map(longs))
-        new IvfPqIndex(spark.read.parquet(path), centers,
-          Pq.Model(m.toInt, k.toInt, subDim.toInt, offset.toDouble,
-            codebooks), id)
-      case _ => throw new IllegalArgumentException(
-        s"not an IVF-PQ index (bad $Sidecar): $path")
-    }
+    val (id, centers, pq) =
+      Sidecar.load(spark, path, SIDECAR, "an IVF-PQ index") { j =>
+        (j.str("id"), j.arr("centers").map(_.floats),
+          Pq.Model(j.int("m"), j.int("k"), j.int("subDim"),
+            j.double("offset"), j.arr("codebooks").map(_.arr.map(_.longs))))
+      }
+    new IvfPqIndex(spark.read.parquet(path), centers, pq, id)
   }
 
   /** Residual of `vec` against its list's centroid, in float (both

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.types._
+import graft.sources.Sidecar
+import graft.sources.Sidecar.Json
 
 /** Corpus-statistics relevance / quality scoring for training-data
   * pipelines: Okapi BM25 keyword relevance and a smoothed unigram
@@ -430,9 +432,8 @@ object Relevance {
     /** Persist postings partitioned by term bucket + a stats sidecar. */
     def save(path: String): Unit = {
       postings.write.mode("overwrite").partitionBy("__bucket").parquet(path)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(path, TextIndex.SIDECAR),
-        s"""{"n": $nDocs, "tot": $totalTokens, "buckets": $buckets}""")
+      Sidecar.save(postings.sparkSession, path, TextIndex.SIDECAR,
+        "n" -> nDocs, "tot" -> totalTokens, "buckets" -> buckets)
     }
   }
 
@@ -472,15 +473,11 @@ object Relevance {
     /** Reload an index persisted by [[TextIndex.save]]. */
     def load(spark: org.apache.spark.sql.SparkSession,
         path: String): TextIndex = {
-      val meta = """\{"n": (\d+), "tot": (\d+), "buckets": (\d+)\}""".r
-      java.nio.file.Files.readString(
-          java.nio.file.Paths.get(path, SIDECAR)) match {
-        case meta(n, tot, buckets) =>
-          new TextIndex(spark.read.parquet(path),
-            n.toLong, tot.toLong, buckets.toInt)
-        case other => throw new IllegalArgumentException(
-          s"not a text index (bad $SIDECAR): $other")
-      }
+      val (n, tot, buckets) =
+        Sidecar.load(spark, path, SIDECAR, "a text index") { j =>
+          (j.long("n"), j.long("tot"), j.int("buckets"))
+        }
+      new TextIndex(spark.read.parquet(path), n, tot, buckets)
     }
   }
 }

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.types._
+import graft.sources.Sidecar
+import graft.sources.Sidecar.Json
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -178,10 +180,9 @@ object Similarity {
     def save(path: String): Unit = {
       bucketed.write.mode("overwrite").partitionBy("__tbl", "__bucket")
         .parquet(path)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(path, LshIndex.SIDECAR),
-        s"""{"id": "$id", "vec": "$vec", "planes": $planes, """ +
-          s""""tables": $tables, "hash": "${LshIndex.HASH_FAMILY}"}""")
+      Sidecar.save(bucketed.sparkSession, path, LshIndex.SIDECAR,
+        "id" -> id, "vec" -> vec, "planes" -> planes, "tables" -> tables,
+        "hash" -> LshIndex.HASH_FAMILY)
     }
   }
 
@@ -212,22 +213,15 @@ object Similarity {
     /** Load a [[LshIndex#save]]d index; the scan stays lazy and
       * partition-aware. */
     def load(spark: org.apache.spark.sql.SparkSession, path: String): LshIndex = {
-      val text = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(path, SIDECAR))
-      val meta =
-        ("""\{"id": "([^"]*)", "vec": "([^"]*)", "planes": (\d+), """ +
-          """"tables": (\d+), "hash": "([^"]*)"\}""").r
-      text match {
-        case meta(id, vec, planes, tables, hash) =>
-          require(hash == HASH_FAMILY,
-            s"LSH index at $path was built with hash family '$hash'; " +
-              s"this build probes with '$HASH_FAMILY' — re-fit the index")
-          new LshIndex(spark.read.parquet(path), id, vec,
-            planes.toInt, tables.toInt)
-        case _ => throw new IllegalArgumentException(
-          s"not a compatible LSH index (bad or pre-versioned $SIDECAR): " +
-            path)
-      }
+      val (id, vec, planes, tables, hash) =
+        Sidecar.load(spark, path, SIDECAR, "an LSH index") { j =>
+          (j.str("id"), j.str("vec"), j.int("planes"), j.int("tables"),
+            j.str("hash"))
+        }
+      require(hash == HASH_FAMILY,
+        s"LSH index at $path was built with hash family '$hash'; " +
+          s"this build probes with '$HASH_FAMILY' — re-fit the index")
+      new LshIndex(spark.read.parquet(path), id, vec, planes, tables)
     }
   }
 
@@ -355,11 +349,9 @@ object Similarity {
       * row groups, not a corpus scan (IvfSpec pins PartitionFilters). */
     def save(path: String): Unit = {
       assigned.write.mode("overwrite").partitionBy("__list").parquet(path)
-      val cs = centers.map(_.toArray.mkString("[", ",", "]"))
-        .mkString("[", ",", "]")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(path, IvfIndex.SIDECAR),
-        s"""{"id": "$id", "vec": "$vec", "centers": $cs}""")
+      Sidecar.save(assigned.sparkSession, path, IvfIndex.SIDECAR,
+        "id" -> id, "vec" -> vec,
+        "centers" -> centers.map(_.toArray.toSeq).toSeq)
     }
   }
 
@@ -369,19 +361,12 @@ object Similarity {
     /** Load a [[save]]d index. The assignment scan stays lazy and
       * partition-aware; centroids come from the sidecar. */
     def load(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
-      import org.apache.spark.ml.linalg.Vectors
-      val text = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(path, SIDECAR))
-      val meta = """\{"id": "([^"]*)", "vec": "([^"]*)", "centers": \[(.*)\]\}""".r
-      text match {
-        case meta(id, vec, inner) =>
-          val centers = inner.stripPrefix("[").stripSuffix("]")
-            .split("\\],\\s*\\[").filter(_.nonEmpty)
-            .map(s => Vectors.dense(s.split(",").map(_.toDouble)))
-          new IvfIndex(spark.read.parquet(path), centers, id, vec)
-        case _ => throw new IllegalArgumentException(
-          s"not an IVF index (bad $SIDECAR): $path")
-      }
+      val (id, vec, centers) =
+        Sidecar.load(spark, path, SIDECAR, "an IVF index") { j =>
+          (j.str("id"), j.str("vec"), j.arr("centers").map(c =>
+            org.apache.spark.ml.linalg.Vectors.dense(c.doubles.toArray)))
+        }
+      new IvfIndex(spark.read.parquet(path), centers.toArray, id, vec)
     }
     /** Observability for tests: total quantizer fits ever run — queries
       * against a fitted index must not move it. */
@@ -536,9 +521,8 @@ object Similarity {
 
     def save(path: String): Unit = {
       coded.write.mode("overwrite").parquet(path)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(path, BinaryIndex.SIDECAR),
-        s"""{"id": "$id", "vec": "$vec"}""")
+      Sidecar.save(coded.sparkSession, path, BinaryIndex.SIDECAR,
+        "id" -> id, "vec" -> vec)
     }
   }
 
@@ -553,15 +537,10 @@ object Similarity {
 
     def load(spark: org.apache.spark.sql.SparkSession,
         path: String): BinaryIndex = {
-      val text = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(path, SIDECAR))
-      val meta = """\{"id": "([^"]*)", "vec": "([^"]*)"\}""".r
-      text match {
-        case meta(id, vec) =>
-          new BinaryIndex(spark.read.parquet(path), id, vec)
-        case _ => throw new IllegalArgumentException(
-          s"not a binary index (bad $SIDECAR): $path")
+      val (id, vec) = Sidecar.load(spark, path, SIDECAR, "a binary index") {
+        j => (j.str("id"), j.str("vec"))
       }
+      new BinaryIndex(spark.read.parquet(path), id, vec)
     }
   }
 

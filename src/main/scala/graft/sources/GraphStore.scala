@@ -1,11 +1,13 @@
 package graft.sources
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
 import org.apache.spark.util.sketch.BloomFilter
 import graft.GraftException
 import graft.rdf.{RdfGraph, Terms}
+import Sidecar.Json
 
 /** Persistent RDF graph layout: parquet PARTITIONED BY PREDICATE — the
   * S2RDF vertical partitioning made physical (SURVEY.md §1.4). Writing
@@ -114,7 +116,7 @@ object GraphStore {
         .sortWithinPartitions(partCols.map(F.col) :+ F.col("s.value"): _*)
         .write.mode(mode).partitionBy(partCols: _*).parquet(path)
       if (crashBeforeSidecars) return // test seam: die after the commit
-      writePrefixes(spark, path, g.prefixes)
+      Sidecar.save(spark, path, PREFIX_FILE, g.prefixes.toSeq.sortBy(_._1): _*)
       // per-DIRECTORY counts from parquet FOOTERS — zero data pages
       // (r16 ran a full groupBy-count read here, so a save cost one
       // write plus TWO reads of the just-written store): the counts
@@ -125,9 +127,9 @@ object GraphStore {
       // blooms. The single remaining data read is the bloom build.
       val dirCounts = leafDirs(fs, root, quads)
         .map(d => d -> dirRowCount(fs, conf, new Path(root, d))).toMap
-      writeStatsSidecar(spark, path,
+      Sidecar.save(spark, path, STATS_FILE,
         dirCounts.groupBy { case (d, _) => predOfKey(dirKey(d)) }
-          .view.mapValues(_.values.sum).toMap)
+          .view.mapValues(_.values.sum).toSeq.sortBy(_._1): _*)
       val expected = dirCounts.map { case (d, n) =>
         dirKey(d) -> bloomSize(n)
       }
@@ -147,13 +149,6 @@ object GraphStore {
     else fs.globStatus(new Path(root,
         s"${Terms.GPART_COL}=*/$PRED_COL=*")).toSeq
       .map(st => s"${st.getPath.getParent.getName}/${st.getPath.getName}")
-
-  private def writeStatsSidecar(spark: SparkSession, path: String,
-      counts: Map[String, Long]): Unit =
-    writeSidecar(spark, path, STATS_FILE,
-      counts.toSeq.sortBy(_._1).map { case (p, n) =>
-        "\"" + esc(p) + "\": " + n
-      }.mkString("{", ", ", "}"))
 
   private def deleteAllBlooms(fs: FileSystem, root: Path): Unit =
     for (pat <- Seq(s"*/$BLOOM_FILE", s"*/*/$BLOOM_FILE");
@@ -200,9 +195,9 @@ object GraphStore {
       (if (df.columns.contains(Terms.GPART_COL)) Seq(Terms.GPART_COL)
        else Nil)
     RdfGraph(df.select(cols.map(F.col): _*),
-      RdfGraph.defaultPrefixes ++ readPrefixes(spark, path),
+      RdfGraph.defaultPrefixes ++ readMap(spark, path, PREFIX_FILE)(_.str(_)),
       predIndex = new LazyPredIndex(df),
-      predCounts = readStats(spark, path))
+      predCounts = readMap(spark, path, STATS_FILE)(_.long(_)))
   }
 
   /** Continuous N-Triples ingest INTO a persisted store: watches
@@ -568,10 +563,9 @@ object GraphStore {
       dirs.map(d => d -> dirRowCount(fs, conf, new Path(root, d))).toMap
     val touched = dirCounts.groupBy { case (d, _) => predOfKey(dirKey(d)) }
       .view.mapValues(_.values.sum).toMap
-    val merged = (readStats(spark, path) ++ touched).toSeq.sortBy(_._1)
-    writeSidecar(spark, path, STATS_FILE,
-      merged.map { case (p, n) => "\"" + esc(p) + "\": " + n }
-        .mkString("{", ", ", "}"))
+    Sidecar.save(spark, path, STATS_FILE,
+      (readMap(spark, path, STATS_FILE)(_.long(_)) ++ touched)
+        .toSeq.sortBy(_._1): _*)
     // (re)build: absent bloom, or saturated AND still below the cap —
     // a capped bloom must never re-trigger a full-directory read every
     // batch; it stays capped and degrades gradually instead
@@ -588,8 +582,9 @@ object GraphStore {
         }.toMap
         rebuildBlooms(spark, path, rows, quads, expected)
       }
-    if (readSidecar(spark, path, PREFIX_FILE).isEmpty)
-      writePrefixes(spark, path, RdfGraph.defaultPrefixes)
+    if (!fs.exists(new Path(root, PREFIX_FILE)))
+      Sidecar.save(spark, path, PREFIX_FILE,
+        RdfGraph.defaultPrefixes.toSeq.sortBy(_._1): _*)
   }
 
   /** The data files of one leaf directory (sidecars and markers have a
@@ -733,7 +728,7 @@ object GraphStore {
     if (big.nonEmpty) {
       // manifest FIRST, then the renames: healing restores exactly the
       // listed names that made it into tmp, wherever the crash hit
-      writeTextFile(fs, new Path(tmp, CARRIED_FILE),
+      Sidecar.write(conf, tmp.toString, CARRIED_FILE,
         big.map(_.getPath.getName).mkString("\n"))
       for (st <- big)
         if (!fs.rename(st.getPath, new Path(tmp, st.getPath.getName)))
@@ -850,9 +845,8 @@ object GraphStore {
     * interrupted and re-run). */
   private def restoreCarried(fs: FileSystem, tmp: Path,
       dest: Path): Unit = {
-    val mf = new Path(tmp, CARRIED_FILE)
-    if (!fs.exists(mf)) return
-    for (name <- readTextFile(fs, mf).split('\n') if name.nonEmpty) {
+    for (carried <- Sidecar.read(fs.getConf, tmp.toString, CARRIED_FILE);
+         name <- carried.split('\n') if name.nonEmpty) {
       val src = new Path(tmp, name)
       if (fs.exists(src)) {
         if (!fs.exists(dest)) fs.mkdirs(dest)
@@ -897,16 +891,16 @@ object GraphStore {
   private def acquireLock(fs: FileSystem, root: Path,
       owner: String): Unit = {
     if (!fs.exists(root)) fs.mkdirs(root)
-    val p = new Path(root, LOCK_FILE)
-    val payload = s"""{"owner": "${esc(owner)}",""" +
-      s""" "acquired_ms": ${System.currentTimeMillis()}}"""
+    val payload = Sidecar.encode("owner" -> owner,
+      "acquired_ms" -> System.currentTimeMillis())
     try {
-      val out = fs.create(p, false) // create-exclusive: the claim itself
-      try out.write(payload.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      // create-exclusive: the claim itself
+      Sidecar.write(fs.getConf, root.toString, LOCK_FILE, payload,
+        overwrite = false)
     } catch {
       case _: java.io.IOException =>
-        val held = scala.util.Try(readTextFile(fs, p))
+        val held = scala.util.Try(
+          Sidecar.read(fs.getConf, root.toString, LOCK_FILE).get)
           .getOrElse("<unreadable>")
         throw new GraftException(
           s"graph store at $root is locked by another writer: $held — " +
@@ -927,20 +921,6 @@ object GraphStore {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(root, LOCK_FILE), false)
-  }
-
-  private def writeTextFile(fs: FileSystem, p: Path,
-      text: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private def readTextFile(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
   }
 
   // ---- membership blooms ------------------------------------------------
@@ -1027,40 +1007,6 @@ object GraphStore {
     }.toOption
   }
 
-  private def writePrefixes(spark: SparkSession, path: String,
-      prefixes: Map[String, String]): Unit = {
-    val json = prefixes.toSeq.sortBy(_._1).map { case (k, v) =>
-      "\"" + esc(k) + "\": \"" + esc(v) + "\""
-    }.mkString("{", ", ", "}")
-    writeSidecar(spark, path, PREFIX_FILE, json)
-  }
-
-  // Sidecar IO goes through the store path's Hadoop FileSystem, never
-  // java.nio — a 100 TB store lives on HDFS/S3, and the parquet data
-  // already travels that API. Local paths resolve to RawLocalFileSystem,
-  // so single-box behavior is unchanged.
-  private def writeSidecar(spark: SparkSession, path: String,
-      name: String, text: String): Unit = {
-    val p = new Path(path, name)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private def readSidecar(spark: SparkSession, path: String,
-      name: String): Option[String] = {
-    val p = new Path(path, name)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally in.close()
-    }
-  }
-
   /** On-demand vertical index over the predicate-partitioned layout.
     * `get` needs NO predicate listing: a lookup of a predicate with no
     * partition directory prunes to an empty scan, which IS that
@@ -1091,39 +1037,14 @@ object GraphStore {
       iterator.toMap.updated(key, value)
   }
 
-  private def esc(s: String): String =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
-
-  private def readPrefixes(spark: SparkSession,
-      path: String): Map[String, String] = {
-    val text = readSidecar(spark, path, PREFIX_FILE) match {
-      case None => return Map.empty
-      case Some(t) => t.trim.stripPrefix("{").stripSuffix("}")
-    }
-    // sidecar is written by `save` above — flat string map, no nesting
-    val entry = """"((?:[^"\\]|\\.)*)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-    entry.findAllMatchIn(text).map { m =>
-      unesc(m.group(1)) -> unesc(m.group(2))
-    }.toMap
-  }
-
-  private def unesc(s: String): String =
-    s.replace("\\\"", "\"").replace("\\\\", "\\")
-
-  /** Predicate counts from the `_stats.json` sidecar; empty for stores
-    * written before the sidecar existed (the heuristic degrades to the
-    * static constant-shape score). */
-  private def readStats(spark: SparkSession,
-      path: String): Map[String, Long] = {
-    val text = readSidecar(spark, path, STATS_FILE) match {
-      case None => return Map.empty
-      case Some(t) => t.trim.stripPrefix("{").stripSuffix("}")
-    }
-    val entry = """"((?:[^"\\]|\\.)*)"\s*:\s*(\d+)""".r
-    entry.findAllMatchIn(text).map { m =>
-      unesc(m.group(1)) -> m.group(2).toLong
-    }.toMap
-  }
+  /** A flat JSON map sidecar; empty for a store written before the
+    * sidecar existed (without `_stats.json` the join-order heuristic
+    * degrades to the static constant-shape score). */
+  private def readMap[V](spark: SparkSession, path: String, name: String)(
+      value: (JsonNode, String) => V): Map[String, V] =
+    Sidecar.loadOpt(spark, path, name, "a graph store") { j =>
+      j.keys.map(k => k -> value(j, k)).toMap
+    }.getOrElse(Map.empty)
 
   /** Test seam: the store-side probe for one batch's touched directory
     * keys ((gpart SP) pred — see [[bloomKey]]); the specs pin that

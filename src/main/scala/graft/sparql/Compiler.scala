@@ -178,7 +178,7 @@ final class Compiler(rdfGraph: RdfGraph, spark: SparkSession) {
     * signatures can't collide: signatures are namespaced), so a bare id
     * match implies the same flavor AND the same template/signature. */
   private val tmplIds = mutable.HashMap[String, Int]()
-  private val LitSig = " lit:"
+  private val LitSig = "\u0000lit:"
   private def nkName(tmpl: String, v: String): String =
     s"__nk:${tmplIds.getOrElseUpdate(tmpl, tmplIds.size)}:$v"
   private def lvName(dt: String, v: String): String =

@@ -15,12 +15,14 @@ class GraphStoreSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft-store").toFile.getAbsolutePath
     val g = Tables.graph(spark, dir, "region", "nation")
       .withPrefix("gp", "urn:graft:p/")
+      .withPrefix("q\"b\\s", "urn:a\"b\\c/")
     GraphStore.save(g, out)
     val loaded = GraphStore.load(spark, out)
     assert(loaded.size == g.size)
     assert(loaded.triples.except(g.triples).isEmpty)
     assert(g.triples.except(loaded.triples).isEmpty)
     assert(loaded.prefixes("gp") == "urn:graft:p/")
+    assert(loaded.prefixes("q\"b\\s") == "urn:a\"b\\c/")
   }
 
   test("a saved QUAD store round-trips its named graphs") {
