@@ -575,8 +575,10 @@ class Engine(initial: RdfGraph) {
       val lower = path.toLowerCase
       val loaded =
         if (lower.endsWith(".ttl") || lower.endsWith(".turtle"))
-          sources.Turtle.parse(new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(path)), "UTF-8"), spark)
+          sources.Turtle.parse(sources.Sidecar.read(
+            spark.sparkContext.hadoopConfiguration,
+            new org.apache.hadoop.fs.Path(path))
+            .getOrElse(throw new java.io.FileNotFoundException(path)), spark)
         else if (lower.endsWith(".nt") || lower.endsWith(".nt.gz"))
           sources.NTriples.read(spark, path)
         else if (lower.endsWith(".rdf") || lower.endsWith(".owl") ||

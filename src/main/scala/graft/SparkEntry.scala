@@ -37,16 +37,16 @@ object SparkEntry {
     * frees its blocks regardless — this bounds the within-session case.) */
   private val IvfCacheMax = 4
   private val ivfCache =
-    new java.util.LinkedHashMap[(SparkSession, String), Similarity.IvfDetIndex](
+    new java.util.LinkedHashMap[(SparkSession, String), Similarity.IvfIndex](
       8, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), Similarity.IvfDetIndex])
+          e: java.util.Map.Entry[(SparkSession, String), Similarity.IvfIndex])
           : Boolean =
         if (size > IvfCacheMax) { e.getValue.unpersist(); true } else false
     }
 
   private def ivfIndex(s: SparkSession, dir: String)(
-      fit: => Similarity.IvfDetIndex): Similarity.IvfDetIndex =
+      fit: => Similarity.IvfIndex): Similarity.IvfIndex =
     ivfCache.synchronized {
       val k = (s, dir)
       val hit = ivfCache.get(k)
@@ -1333,28 +1333,28 @@ object SparkEntry {
       val q = emb.where(F.col("vec_id") === 0)
         .select("embedding").collect()(0).getSeq[Float](0)
       // fit-once index, memoized: repeated queries run zero fit jobs.
-      // Deterministic coarse quantizer (integer k-means, r13) — the
-      // oracle unrolls the fit, the integer probe ranking, and the
-      // exact-cosine scan of the probed lists
+      // The coarse quantizer is integer k-means — the oracle unrolls
+      // the fit, the integer probe ranking, and the exact-cosine scan
+      // of the probed lists
       val idx = ivfIndex(s, dir)(
-        Similarity.fitIvfDeterministic(emb.where(F.col("vec_id") =!= 0),
+        Similarity.IvfIndex.fit(emb.where(F.col("vec_id") =!= 0),
           "vec_id", "embedding", nlist = 8).persist())
       Similarity.ivfTopK(idx, q, 10, nprobe = 3)
         .select(F.col("vec_id"), F.round(F.col("cosine"), 6).as("cosine"))
     }),
     "q_knn_ivfpq" -> ((s, dir) => {
       // IVF-PQ: partition-prunable coarse lists + residual PQ codes +
-      // exact-cosine refinement. Promoted to a full oracle in r13: the
-      // deterministic coarse quantizer (integer k-means -> float
-      // centers), float residuals, integer PQ fit/encode, the integer
-      // ADC shortlist and the refinement all restate in DuckDB.
+      // exact-cosine refinement. Fully oracled: the coarse quantizer
+      // (integer k-means -> float centers), float residuals, integer
+      // PQ fit/encode, the integer ADC shortlist and the refinement all
+      // restate in DuckDB.
       // IvfPqSpec still pins brute-force equality at full probe and
       // recall>=0.9 at partial probe
       val emb = read(s, dir, "embeddings")
       val q = emb.where(F.col("vec_id") === 0)
         .select("embedding").collect()(0).getSeq[Float](0)
       val corpus = emb.where(F.col("vec_id") =!= 0)
-      val idx = graft.pipeline.IvfPq.fitDeterministic(corpus, "vec_id",
+      val idx = graft.pipeline.IvfPq.fit(corpus, "vec_id",
         "embedding", nlist = 8, m = 4, k = 8, pqIters = 1)
       graft.pipeline.IvfPq.topKRefined(idx, corpus, "embedding", q,
         k = 10, nprobe = 4, refineFactor = 4)

@@ -5,8 +5,8 @@ import org.apache.spark.sql.types._
 
 /** Deterministic k-means over embedding columns — the clustering
   * primitive behind semantic dedup, diversity sampling, and
-  * domain-discovery over a pretraining corpus (and the same Lloyd's
-  * loop [[Similarity.IvfIndex]] uses a single step of).
+  * domain-discovery over a pretraining corpus, and the coarse quantizer
+  * of every IVF index ([[Similarity.IvfIndex]], [[IvfPq]]).
   *
   * Exactness contract (the [[Graphs.pageRank]] discipline applied to
   * geometry): components quantize ONCE to non-negative scaled integers
@@ -46,9 +46,14 @@ object Clustering {
 
   /** [[kmeans]] plus the FINAL integer centroids — what a coarse
     * quantizer needs to rank probe lists deterministically
-    * ([[Similarity.fitIvfDeterministic]]): with the centroids exact
-    * integers, the probe ranking is exact integer arithmetic too, and
-    * the whole IVF query restates in a SQL oracle. */
+    * ([[Similarity.IvfIndex.fit]]): with the centroids exact integers,
+    * the probe ranking is exact integer arithmetic too, and the whole
+    * IVF query restates in a SQL oracle.
+    *
+    * The first update also folds in the global min and max of the
+    * quantized components: when `d·(max − min)²` exceeds a long, an
+    * integer distance could wrap (silently, outside ANSI mode), so the
+    * fit is refused naming `offset`. */
   def kmeansFit(df: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int = 2, offset: Double = 2.0): (DataFrame, Array[Seq[Long]]) = {
     require(k >= 1 && k <= 4096, s"k must be in [1,4096], got $k")
@@ -67,8 +72,10 @@ object Clustering {
       val stats = assign(base, centroids)
         .select(F.col("cluster"), F.posexplode(F.col("q")).as(Seq("pos", "v")))
         .groupBy("cluster", "pos")
-        .agg(F.sum(F.col("v")).as("s"), F.count(F.lit(1)).as("n"))
+        .agg(F.sum(F.col("v")).as("s"), F.count(F.lit(1)).as("n"),
+          F.min(F.col("v")).as("lo"), F.max(F.col("v")).as("hi"))
         .collect()
+      if (it == 0) checkRange(stats, centroids.head.length, offset)
       val next = centroids.map(_.toArray) // empty cluster → previous
       stats.foreach { r =>
         val (c, p) = (r.getInt(0), r.getInt(1))
@@ -80,6 +87,22 @@ object Clustering {
     (assign(base, centroids).select(F.col("id").as(idCol),
       F.col("cluster").cast(LongType).as("cluster")), centroids)
   }
+
+  /** Refuse a fit whose integer distances could overflow a long: each
+    * squared component difference is at most `(max − min)²`, since every
+    * centroid is a mean of quantized values. */
+  private def checkRange(stats: Array[org.apache.spark.sql.Row], d: Int,
+      offset: Double): Unit =
+    if (stats.nonEmpty) {
+      val lo = stats.map(_.getLong(4)).min
+      val hi = stats.map(_.getLong(5)).max
+      val span = BigInt(hi) - BigInt(lo)
+      if (span * span * d > BigInt(Long.MaxValue))
+        throw new IllegalArgumentException(
+          s"k-means input out of range for offset $offset: quantized " +
+            s"components span [$lo, $hi] in $d dims, so a squared " +
+            "distance overflows a long; keep |x| <= offset")
+    }
 
   /** Driver-side twin of [[quantize]] (for quantizing a query vector
     * against a fitted model — same floor((x+offset)·10⁶) contract). */

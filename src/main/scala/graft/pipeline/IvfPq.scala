@@ -5,14 +5,15 @@ import org.apache.spark.sql.types._
 import graft.sources.Sidecar
 import graft.sources.Sidecar.Json
 
-/** IVF-PQ: the inverted-file coarse quantizer ([[Similarity.IvfIndex]])
-  * composed with product-quantized RESIDUAL codes ([[Pq]]) — the
-  * standard billion-scale ANN layout (Jégou et al. 2011; FAISS
-  * `IndexIVFPQ`). Why both: IVF prunes the SCAN (a probe reads `nprobe`
-  * of `nlist` partition directories), PQ shrinks the BYTES (a row
-  * scanned is `m` small ints, not 4·d floats), and residual encoding
-  * (vector − its list centroid) keeps the codebooks tight because
-  * within-list offsets are far smaller than absolute positions.
+/** IVF-PQ: the inverted-file coarse quantizer ([[Similarity.IvfIndex]],
+  * exact integer k-means) composed with product-quantized RESIDUAL
+  * codes ([[Pq]]) — the standard billion-scale ANN layout (Jégou et al.
+  * 2011; FAISS `IndexIVFPQ`). Why both: IVF prunes the SCAN (a probe
+  * reads `nprobe` of `nlist` partition directories), PQ shrinks the
+  * BYTES (a row scanned is `m` small ints, not 4·d floats), and
+  * residual encoding (vector − its list centroid) keeps the codebooks
+  * tight because within-list offsets are far smaller than absolute
+  * positions.
   *
   * Query shape: rank the `nlist` centroids driver-side (tiny), build
   * one exact-integer ADC table per probed list from the query's
@@ -71,43 +72,23 @@ object IvfPq {
         list.cast(IntegerType) + 1),
       (x, c) => (x.cast(FloatType) - c).cast(FloatType))
 
-  /** Fit: coarse IVF quantizer (optionally sampled — at 100 TB k-means
-    * never sees the full corpus), then the deterministic integer PQ on
-    * the RESIDUALS, then one narrow encode pass. `offset` must bound
-    * |residual| (4.0 covers unit vectors vs unit centroids). */
+  /** Fit: the coarse IVF quantizer ([[Similarity.IvfIndex.fit]] — exact
+    * integer k-means over every row), then the deterministic integer PQ
+    * on the RESIDUALS, then one narrow encode pass. Every stage restates
+    * in a SQL oracle. `coarseOffset` is the k-means quantization shift
+    * (2.0 for unit vectors); `offset` bounds |residual| for the PQ stage
+    * (4.0 covers unit vectors vs unit centroids). */
   def fit(corpus: DataFrame, id: String, vec: String, nlist: Int = 16,
       m: Int = 8, k: Int = 256, pqIters: Int = 2,
-      sampleFraction: Double = 1.0, seed: Long = 42,
-      offset: Double = 4.0): IvfPqIndex = {
-    val coarse = Similarity.IvfIndex.fit(corpus, id, vec, nlist,
-      sampleFraction, seed)
-    val centers = coarse.centers.map(_.toArray.map(_.toFloat).toSeq).toSeq
-    fromCoarse(coarse.assigned, centers, id, vec, m, k, pqIters, offset)
-  }
-
-  /** [[fit]] with the DETERMINISTIC coarse quantizer
-    * ([[Similarity.fitIvfDeterministic]] — exact-integer k-means) in
-    * place of ml.KMeans: same index/probe shape, but coarse centroids
-    * are integer-derived floats and every stage restates in a SQL
-    * oracle. `coarseOffset` is the k-means quantization shift (2.0 for
-    * unit vectors), `offset` bounds |residual| for the PQ stage. */
-  def fitDeterministic(corpus: DataFrame, id: String, vec: String,
-      nlist: Int = 16, m: Int = 8, k: Int = 256, pqIters: Int = 2,
       coarseIters: Int = 2, coarseOffset: Double = 2.0,
       offset: Double = 4.0): IvfPqIndex = {
-    val coarse = Similarity.fitIvfDeterministic(corpus, id, vec, nlist,
+    val coarse = Similarity.IvfIndex.fit(corpus, id, vec, nlist,
       coarseIters, coarseOffset)
     // integer centroid → float center: c/10⁶ − offset, double-rounded
     // to float — one deterministic IEEE conversion both engines share
     val centers = coarse.centers.map(_.map(c =>
       (c.toDouble / 1000000.0 - coarseOffset).toFloat).toSeq).toSeq
-    fromCoarse(coarse.assigned, centers, id, vec, m, k, pqIters, offset)
-  }
-
-  private def fromCoarse(assigned: DataFrame, centers: Seq[Seq[Float]],
-      id: String, vec: String, m: Int, k: Int, pqIters: Int,
-      offset: Double): IvfPqIndex = {
-    val withRes = assigned.withColumn("__res",
+    val withRes = coarse.assigned.withColumn("__res",
       residual(F.col(vec), F.col("__list"), centers))
     val pq = Pq.fit(withRes, id, "__res", m, k, pqIters, offset)
     val codes = withRes.select(F.col(id), F.col("__list"),

@@ -226,17 +226,17 @@ object Similarity {
   }
 
   /** IVF (inverted-file) approximate top-k against a PRE-FIT [[IvfIndex]]:
-    * the query runs zero fitting jobs — it ranks the quantizer centroids
-    * driver-side (nlist tiny) and scans only the `nprobe` nearest lists
-    * (corpus scan ÷ nlist·nprobe⁻¹, or a partition-pruned read when the
-    * assignment is stored partitioned by list — see [[IvfIndex.fit]]). */
+    * the query runs zero fitting jobs. The quantized query ranks the
+    * integer centroids by EXACT integer distance on the driver (nlist is
+    * tiny; ties go to the lowest list), then only the `nprobe` nearest
+    * lists are scanned — a partition-pruned read on a [[IvfIndex#save]]d
+    * index — for exact cosine + TakeOrdered. */
   def ivfTopK(index: IvfIndex, query: Seq[Float], k: Int,
       nprobe: Int = 4): DataFrame = {
-    import org.apache.spark.ml.linalg.Vectors
-    val qv = Vectors.dense(query.map(_.toDouble).toArray)
-    val probeLists = index.centers.zipWithIndex
-      .sortBy { case (c, _) => Vectors.sqdist(c, qv) }
-      .take(nprobe).map(_._2.toLong).toSeq
+    val qq = Clustering.quantizeLocal(query, index.offset)
+    val probeLists = index.centers.zipWithIndex.map { case (c, j) =>
+      (c.zip(qq).map { case (a, b) => val d = a - b; d * d }.sum, j)
+    }.sorted.take(nprobe).map(_._2.toLong).toSeq
     val q = F.typedlit(query)
     index.assigned.where(F.col("__list").isin(probeLists: _*))
       .select(F.col(index.id), cosine(F.col(index.vec), q).as("cosine"))
@@ -251,55 +251,75 @@ object Similarity {
       query: Seq[Float], k: Int, nlist: Int, nprobe: Int): DataFrame =
     ivfTopK(IvfIndex.fit(corpus, id, vec, nlist), query, k, nprobe)
 
-  /** Deterministic IVF index: [[Clustering]]'s exact-integer k-means as
-    * the coarse quantizer (smallest-id init, fixed iterations, integer
-    * centroids) instead of ml.KMeans. Same index shape and probe path
-    * as [[IvfIndex]] — assignment partitioned/pruned by `__list` — but
-    * every stage (assignment, centroids, probe ranking) is exact
-    * integer arithmetic, so the whole query restates in a SQL oracle
-    * and results are bit-identical across engines and partitionings. */
-  final class IvfDetIndex private[pipeline] (
+  /** Fit-once IVF index, queried via [[ivfTopK]]: every corpus vector's
+    * coarse list, plus the final integer centroids of [[Clustering]]'s
+    * exact k-means (smallest-id init, fixed iterations). Assignment,
+    * centroids and probe ranking are exact integer arithmetic, so a
+    * whole IVF query restates in a SQL oracle and is bit-identical
+    * across engines and partitionings. */
+  final class IvfIndex private[pipeline] (
       /** corpus + `__list` (long) — the coarse-quantizer cell id. */
       val assigned: DataFrame,
-      /** FINAL integer centroids (quantized space). */
+      /** Final integer centroids, in the quantized space of `offset`. */
       val centers: Array[Seq[Long]],
       val offset: Double, val id: String, val vec: String) {
-    def persist(): IvfDetIndex = { assigned.persist(); this }
-    def unpersist(): IvfDetIndex = { assigned.unpersist(); this }
+    /** Pin the assignment (in-memory analogue of [[save]]). */
+    def persist(): IvfIndex = { assigned.persist(); this }
+    def unpersist(): IvfIndex = { assigned.unpersist(); this }
+
+    /** Persist the index: the assignment written PARTITIONED BY `__list`
+      * (one directory per inverted list), plus a JSON sidecar with the
+      * integer centroids, the quantization offset and the column names.
+      * A probe against the loaded index is then a partition-pruned read
+      * — `nprobe` directories' row groups, not a corpus scan (RecallSpec
+      * pins PartitionFilters). */
+    def save(path: String): Unit = {
+      assigned.write.mode("overwrite").partitionBy("__list").parquet(path)
+      Sidecar.save(assigned.sparkSession, path, IvfIndex.SIDECAR,
+        "id" -> id, "vec" -> vec, "centers" -> centers.toSeq,
+        "offset" -> offset)
+    }
   }
 
-  /** Fit the deterministic coarse quantizer once (see [[IvfDetIndex]]).
-    * At 100 TB the fit runs on a sample the same way [[IvfIndex.fit]]
-    * does — pass a pre-sampled `corpus` (determinism then rests on the
-    * sample being pinned, e.g. a stored id range). */
-  def fitIvfDeterministic(corpus: DataFrame, id: String, vec: String,
-      nlist: Int, iters: Int = 2, offset: Double = 2.0): IvfDetIndex = {
-    val (assignedIds, centers) =
-      Clustering.kmeansFit(corpus, id, vec, nlist, iters, offset)
-    val assigned = corpus.join(
-      assignedIds.withColumnRenamed("cluster", "__list"), id)
-    new IvfDetIndex(assigned, centers, offset, id, vec)
+  object IvfIndex {
+    private[pipeline] val SIDECAR = "_ivf_centers.json"
+
+    /** Load a [[IvfIndex#save]]d index. The assignment scan stays lazy
+      * and partition-aware; centroids come from the sidecar. */
+    def load(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
+      val (id, vec, centers, offset) =
+        Sidecar.load(spark, path, SIDECAR, "an IVF index") { j =>
+          (j.str("id"), j.str("vec"), j.arr("centers").map(_.longs),
+            j.double("offset"))
+        }
+      new IvfIndex(spark.read.parquet(path), centers.toArray, offset, id, vec)
+    }
+
+    /** Observability for tests: total quantizer fits ever run — queries
+      * against a fitted index must not move it. */
+    val fits = new java.util.concurrent.atomic.AtomicLong
+
+    /** Fit the coarse quantizer ONCE — [[Clustering.kmeansFit]] over
+      * every row, `iters` fixed Lloyd's steps — and keep each vector's
+      * final list. Components quantize as `floor((x + offset)·10⁶)`:
+      * with `|x| ≤ offset` every quantized value is non-negative and
+      * the centroid update is an exact floor division (2.0 covers
+      * unit-normalized embeddings); an input whose integer distances
+      * could overflow a long is refused naming `offset`. The scale
+      * deployment [[IvfIndex#save]]s the index partitioned by `__list`
+      * so a probe becomes a partition-pruned scan; locally `persist()`
+      * serves the same role. */
+    def fit(corpus: DataFrame, id: String, vec: String, nlist: Int = 16,
+        iters: Int = 2, offset: Double = 2.0): IvfIndex = {
+      fits.incrementAndGet()
+      val (assignedIds, centers) =
+        Clustering.kmeansFit(corpus, id, vec, nlist, iters, offset)
+      val assigned = corpus.join(
+        assignedIds.withColumnRenamed("cluster", "__list"), id)
+      new IvfIndex(assigned, centers, offset, id, vec)
+    }
   }
 
-  /** IVF probe against a deterministic index: centroids rank by EXACT
-    * integer distance to the quantized query (ties to the lowest list
-    * index), then the usual nprobe-list scan + exact cosine top-k. */
-  def ivfTopK(index: IvfDetIndex, query: Seq[Float], k: Int,
-      nprobe: Int): DataFrame = {
-    val qq = Clustering.quantizeLocal(query, index.offset)
-    val probeLists = index.centers.zipWithIndex.map { case (c, j) =>
-      (c.zip(qq).map { case (a, b) => val d = a - b; d * d }.sum, j)
-    }.sorted.take(nprobe).map(_._2.toLong).toSeq
-    val q = F.typedlit(query)
-    index.assigned.where(F.col("__list").isin(probeLists: _*))
-      .select(F.col(index.id), cosine(F.col(index.vec), q).as("cosine"))
-      .orderBy(F.col("cosine").desc, F.col(index.id))
-      .limit(k)
-  }
-
-  /** Fit-once IVF index (queried via [[ivfTopK]]). Holds the centroid
-    * list assignment of every corpus vector plus the quantizer centroids;
-    * queries never re-fit. */
   /** Symmetric per-vector int8 scalar quantization: embeddings shrink 4×
     * (the standard storage/IO lever before ANN at 100 TB — scan 25 TB
     * instead of 100). The per-vector scale rides along; reconstruction
@@ -332,68 +352,6 @@ object Similarity {
   def dequantizeInt8(qv: Column): Column =
     F.transform(qv.getField("q"),
       x => x.cast(DoubleType) * qv.getField("scale"))
-
-  final class IvfIndex private[pipeline] (
-      /** corpus + `__list` (long) — the coarse-quantizer cell id. */
-      val assigned: DataFrame,
-      val centers: Array[org.apache.spark.ml.linalg.Vector],
-      val id: String, val vec: String) {
-    /** Pin the assignment (in-memory analogue of [[save]]). */
-    def persist(): IvfIndex = { assigned.persist(); this }
-    def unpersist(): IvfIndex = { assigned.unpersist(); this }
-
-    /** Persist the index: the assignment written PARTITIONED BY `__list`
-      * (one directory per inverted list), plus a JSON sidecar with the
-      * quantizer centroids and column names. A probe against the loaded
-      * index is then a partition-pruned read — `nprobe` directories'
-      * row groups, not a corpus scan (IvfSpec pins PartitionFilters). */
-    def save(path: String): Unit = {
-      assigned.write.mode("overwrite").partitionBy("__list").parquet(path)
-      Sidecar.save(assigned.sparkSession, path, IvfIndex.SIDECAR,
-        "id" -> id, "vec" -> vec,
-        "centers" -> centers.map(_.toArray.toSeq).toSeq)
-    }
-  }
-
-  object IvfIndex {
-    private[pipeline] val SIDECAR = "_ivf_centers.json"
-
-    /** Load a [[save]]d index. The assignment scan stays lazy and
-      * partition-aware; centroids come from the sidecar. */
-    def load(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
-      val (id, vec, centers) =
-        Sidecar.load(spark, path, SIDECAR, "an IVF index") { j =>
-          (j.str("id"), j.str("vec"), j.arr("centers").map(c =>
-            org.apache.spark.ml.linalg.Vectors.dense(c.doubles.toArray)))
-        }
-      new IvfIndex(spark.read.parquet(path), centers.toArray, id, vec)
-    }
-    /** Observability for tests: total quantizer fits ever run — queries
-      * against a fitted index must not move it. */
-    val fits = new java.util.concurrent.atomic.AtomicLong
-
-    /** Fit the coarse quantizer ONCE (optionally on a sample — at 100 TB
-      * k-means never sees the full corpus) and assign every vector to its
-      * nearest centroid list in one narrow map. The scale deployment
-      * writes `assigned` out partitioned by `__list` so a probe becomes a
-      * partition-pruned scan; locally `persist()` serves the same role. */
-    def fit(corpus: DataFrame, id: String, vec: String, nlist: Int = 16,
-        sampleFraction: Double = 1.0, seed: Long = 42): IvfIndex = {
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.functions.array_to_vector
-      fits.incrementAndGet()
-      val fv = corpus.select(F.col(id), F.col(vec))
-        .withColumn("__fv", array_to_vector(F.col(vec)))
-      val train =
-        if (sampleFraction >= 1.0) fv
-        else fv.sample(withReplacement = false, sampleFraction, seed)
-      val model = new KMeans().setK(nlist).setSeed(seed).setMaxIter(5)
-        .setFeaturesCol("__fv").setPredictionCol("__list")
-        .fit(train.select("__fv"))
-      new IvfIndex(model.transform(fv).drop("__fv"),
-        model.clusterCenters, id, vec)
-    }
-  }
 
   /** All-pairs k-NN join (each left row → top-k right rows by cosine) via
     * multi-table LSH co-bucketing with CAPPED right-side posting lists —

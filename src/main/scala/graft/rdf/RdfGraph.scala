@@ -181,15 +181,11 @@ final case class RdfGraph(triples: DataFrame, prefixes: Map[String, String],
   def unpersist(): RdfGraph = { triples.unpersist(); this }
 
   private[rdf] def collectQuads(): Seq[Canon.Quad] = {
-    def term(r: org.apache.spark.sql.Row): RdfTerm = r.getByte(0) match {
-      case Terms.KIND_IRI => Iri(r.getString(1))
-      case Terms.KIND_BLANK => Blank(r.getString(1))
-      case Terms.KIND_TRIPLE => Terms.unpackString(r.getString(1))
-      case _ => Lit(r.getString(1), r.getString(2), r.getString(3))
-    }
+    import Terms.rowTerm
     triples.collect().toSeq.map { r =>
-      (term(r.getStruct(0)), term(r.getStruct(1)), term(r.getStruct(2)),
-        if (isQuads && !r.isNullAt(3)) term(r.getStruct(3)) else null)
+      (rowTerm(r.getStruct(0)), rowTerm(r.getStruct(1)),
+        rowTerm(r.getStruct(2)),
+        if (isQuads && !r.isNullAt(3)) rowTerm(r.getStruct(3)) else null)
     }
   }
 

@@ -213,6 +213,14 @@ object Terms {
     case q: QuotedTriple    => Row(KIND_TRIPLE, packString(q), null, null)
   }
 
+  /** Term-struct Row → Scala term value: the inverse of [[termRow]]. */
+  def rowTerm(r: Row): RdfTerm = r.getByte(0) match {
+    case KIND_IRI    => Iri(r.getString(1))
+    case KIND_BLANK  => Blank(r.getString(1))
+    case KIND_TRIPLE => unpackString(r.getString(1))
+    case _           => Lit(r.getString(1), r.getString(2), r.getString(3))
+  }
+
   // ---- RDF-star quoted-triple encoding --------------------------------------
   //
   // A quoted triple packs its nine component fields (s.kind, s.value,

@@ -108,14 +108,8 @@ object NTriples {
         while (end < s.length && Character.isWhitespace(s.charAt(end))) end += 1
         require(end + 1 < s.length && s.charAt(end) == '>' &&
           s.charAt(end + 1) == '>', s"unterminated quoted triple: $s")
-        def term(r: Row): RdfTerm = r.getByte(0) match {
-          case Terms.KIND_IRI => Iri(r.getString(1))
-          case Terms.KIND_BLANK => Blank(r.getString(1))
-          case Terms.KIND_TRIPLE => Terms.unpackString(r.getString(1))
-          case _ => Lit(r.getString(1), r.getString(2), r.getString(3))
-        }
-        val packed = Terms.packString(
-          QuotedTriple(term(qs), term(qp), term(qo)))
+        val packed = Terms.packString(QuotedTriple(
+          Terms.rowTerm(qs), Terms.rowTerm(qp), Terms.rowTerm(qo)))
         (Row(Terms.KIND_TRIPLE, packed, null, null), end + 2)
       case '<' =>
         val (iri, end) = readIriRef(s, pos)

@@ -131,11 +131,18 @@ object RdfXml {
     RdfGraph.fromTriples(spark, triples, prefixes)
   }
 
-  /** Driver-side read of an .rdf/.owl file (small-document contract). */
+  /** Driver-side read of an .rdf/.owl file (small-document contract)
+    * at a local path or any Hadoop-FS URI. The default base is the
+    * document's own URI: a path that already carries a scheme is used
+    * as it is, a bare path gets `file://`. */
   def read(spark: SparkSession, path: String, base: String = ""): RdfGraph = {
-    val text = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
-    parse(text, spark, if (base.nonEmpty) base else s"file://$path")
+    val p = new org.apache.hadoop.fs.Path(path)
+    val text = Sidecar.read(spark.sparkContext.hadoopConfiguration, p)
+      .getOrElse(throw new java.io.FileNotFoundException(path))
+    parse(text, spark,
+      if (base.nonEmpty) base
+      else if (p.toUri.getScheme != null) path
+      else s"file://$path")
   }
 
   // ---------------------------------------------------------- serializer
@@ -583,16 +590,6 @@ object RdfXml {
     * rendering, not exclusive canonical XML). */
   private def xmlLiteralText(r: XMLStreamReader): String = {
     val sb = new StringBuilder
-    def esc(s: String): String = s.flatMap {
-      case '&' => "&amp;"; case '<' => "&lt;"; case '>' => "&gt;"
-      case '\r' => "&#xD;" // survives §2.11 line-end normalization
-      case c => c.toString
-    }
-    // char-reference \n/\t so §3.3.3 attribute normalization can't
-    // fold them to spaces when the literal's XML is reparsed
-    def escAttr(s: String): String =
-      esc(s).replace("\"", "&quot;")
-        .replace("\n", "&#xA;").replace("\t", "&#x9;")
     var depth = 1
     var ev = r.next()
     while (depth > 0) {

@@ -11,7 +11,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The one codec for the small files stored beside parquet data: the
   * JSON sidecars of the six stored indexes and of [[GraphStore]], plus
-  * the store's `_lock` and compaction manifest.
+  * the store's `_lock` and compaction manifest. Its text [[read]] also
+  * serves the driver-side document parsers (Turtle LOAD, RDF/XML).
   *
   * IO goes through the directory's Hadoop FileSystem, never java.nio: a
   * 100 TB store lives on HDFS/S3 and its parquet already travels that
@@ -32,8 +33,11 @@ private[graft] object Sidecar {
   private val nf = JsonNodeFactory.instance
 
   /** Text of `dir/name`, or None when there is no such file. */
-  def read(conf: Configuration, dir: String, name: String): Option[String] = {
-    val p = new Path(dir, name)
+  def read(conf: Configuration, dir: String, name: String): Option[String] =
+    read(conf, new Path(dir, name))
+
+  /** Text of the file at `p`, or None when there is no such file. */
+  def read(conf: Configuration, p: Path): Option[String] = {
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) None
     else {

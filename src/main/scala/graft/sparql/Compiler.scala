@@ -386,7 +386,7 @@ final class Compiler(rdfGraph: RdfGraph, spark: SparkSession) {
           s"(scan-less group or property path); this store has more " +
           s"than $GraphUnionMax named graphs — name the graph or " +
           "anchor the group with a plain triple pattern")
-    val names = nameRows.toSeq.map(r => termOfRow(r.getStruct(0)))
+    val names = nameRows.toSeq.map(r => rowTerm(r.getStruct(0)))
     val prev = activeGraph
     val prevPin = graphVarPin
     val branches = names.map { nm =>
@@ -436,12 +436,6 @@ final class Compiler(rdfGraph: RdfGraph, spark: SparkSession) {
       maybeUnbound(local) -- maybeUnbound(s.p))
       .filterNot(_.startsWith("_:")).toSeq.sorted
 
-  private def termOfRow(r: Row): RdfTerm = r.getByte(0) match {
-    case KIND_IRI => Iri(r.getString(1))
-    case KIND_BLANK => Blank(r.getString(1))
-    case _ => Lit(r.getString(1), r.getString(2), r.getString(3))
-  }
-
   private def compileService(ep: Node, p: GraphPattern,
       silent: Boolean,
       seed: Option[(DataFrame, Seq[String])] = None): DataFrame = {
@@ -484,7 +478,7 @@ final class Compiler(rdfGraph: RdfGraph, spark: SparkSession) {
           if (rows.length > ServiceBoundMax || hasBlank) p
           else Join(TableData(sv, rows.toSeq.map(row => sv.indices.map(i =>
             if (row.isNullAt(i)) None
-            else Some(termOfRow(row.getStruct(i)))))), p)
+            else Some(rowTerm(row.getStruct(i)))))), p)
         case _ => p
       }
       val text =

@@ -11,6 +11,17 @@ class ClusteringSpec extends SparkSpec {
 
   private val Scale = 1000000L
 
+  test("an input whose integer distances overflow a long is refused, naming offset") {
+    // 8 dims of ±1e3 at offset 2.0: quantized components span ~2·10⁹,
+    // so 8·span² exceeds Long.MaxValue and a distance would wrap
+    val rnd = new scala.util.Random(7)
+    val rows = (0 until 20).map(i =>
+      (i.toLong, Seq.fill(8)(if (rnd.nextBoolean()) 1e3f else -1e3f)))
+    val e = intercept[IllegalArgumentException](
+      Clustering.kmeans(rows.toDF("id", "vec"), "id", "vec", k = 2))
+    assert(e.getMessage.contains("offset 2.0"), e.getMessage)
+  }
+
   /** Local reference: identical quantized algorithm, plain Scala. */
   private def local(rows: Seq[(Long, Seq[Float])], k: Int, iters: Int,
       offset: Double = 2.0): Map[Long, Int] = {

@@ -383,6 +383,20 @@ class RdfXmlSpec extends SparkSpec {
     assert(rows.map(_.get(1).toString).toSeq == Seq("from-xml", "inline"))
   }
 
+  test("read() takes a file:// URI and resolves relative IRIs against it") {
+    val f = java.nio.file.Files.createTempFile("uri", ".rdf").toAbsolutePath
+    java.nio.file.Files.writeString(f,
+      """<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+        |         xmlns:ex="http://example.org/">
+        |  <rdf:Description rdf:about="#x"><ex:v>1</ex:v></rdf:Description>
+        |</rdf:RDF>""".stripMargin)
+    val uri = "file://" + f
+    def subjects(path: String): Set[String] = RdfXml.read(spark, path)
+      .triples.select("s.value").collect().map(_.getString(0)).toSet
+    assert(subjects(uri) == Set(uri + "#x"))
+    assert(subjects(f.toString) == Set(uri + "#x")) // bare path, same base
+  }
+
   test("parse() builds a queryable graph with root-namespace prefixes") {
     val g = RdfXml.parse(
       """<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"

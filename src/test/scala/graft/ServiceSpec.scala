@@ -135,6 +135,35 @@ class ServiceSpec extends SparkSpec {
     }
   }
 
+  test("bound join ships a local quoted triple as << … >>") {
+    val starJson =
+      """{ "head": { "vars": ["t", "src"] },
+        |  "results": { "bindings": [
+        |    { "t": {"type": "triple", "value": {
+        |        "subject": {"type": "uri", "value": "http://example.com/alice"},
+        |        "predicate": {"type": "uri", "value": "http://example.com/knows"},
+        |        "object": {"type": "uri", "value": "http://example.com/bob"} } },
+        |      "src": {"type": "literal", "value": "survey"} }
+        |  ] } }""".stripMargin
+    withServer(starJson) { (url, seen) =>
+      val e = Engine.inline(
+        """@prefix ex: <http://example.com/> .
+          |<< ex:alice ex:knows ex:bob >> ex:since 2020 .
+          |""".stripMargin)
+      val rows = e.select(
+        s"""SELECT ?src {
+              ?t <http://example.com/since> ?y
+              SERVICE <$url> { ?t <http://example.com/source> ?src }
+            }""").collect()
+      assert(rows.map(_.get(0).toString).toSeq == Seq("survey"))
+      val body = java.net.URLDecoder.decode(seen(), "UTF-8")
+      assert(body.contains("VALUES (?t)"), body)
+      assert(body.contains("(<< <http://example.com/alice> " +
+        "<http://example.com/knows> <http://example.com/bob> >>)"), body)
+      assert(!body.contains("\u001f"), body)
+    }
+  }
+
   test("maybe-unbound shared vars are never injected") {
     withServer(remoteJson) { (url, seen) =>
       val e = Engine.inline(localTtl)

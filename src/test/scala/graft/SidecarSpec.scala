@@ -8,8 +8,8 @@ import graft.sources.GraphStore
 /** The JSON sidecars beside every stored index and graph store: they
   * save and load under a Hadoop-FS URI, carry names holding any
   * character, still load when written in the earlier hand-formatted
-  * layout, and fail naming the index kind and the path when missing or
-  * foreign. */
+  * layout (all but IVF's, whose double centers are refused), and fail
+  * naming the index kind and the path when missing or foreign. */
 class SidecarSpec extends SparkSpec {
   import spark.implicits._
 
@@ -141,13 +141,26 @@ class SidecarSpec extends SparkSpec {
     assert((t.nDocs, t.totalTokens, t.buckets) ==
       ((40L, txtIdx.totalTokens, 8)))
 
+    // IVF: integer centers round-trip exactly, extremes included (2⁵³+1
+    // has no double); the earlier layout, double centers and no offset,
+    // is refused rather than misread
     val ivf = tmp("sc-old-ivf")
-    Similarity.IvfIndex.fit(vecDf, "id", "vec", nlist = 2).save(ivf)
+    val ivfIdx = Similarity.IvfIndex.fit(vecDf, "id", "vec", nlist = 2)
+    ivfIdx.save(ivf)
+    val iv = Similarity.IvfIndex.load(spark, ivf)
+    assert(iv.centers.toSeq == ivfIdx.centers.toSeq)
+    assert((iv.offset, iv.id, iv.vec) == ((ivfIdx.offset, "id", "vec")))
+    legacy(ivf, "_ivf_centers.json", """{"id":"id","vec":"vec","centers":""" +
+      """[[9223372036854775807,0,-9223372036854775808],[1,-1,9007199254740993]],""" +
+      """"offset":2.0}""")
+    assert(Similarity.IvfIndex.load(spark, ivf).centers.toSeq == Seq(
+      Seq(Long.MaxValue, 0L, Long.MinValue), Seq(1L, -1L, 9007199254740993L)))
     legacy(ivf, "_ivf_centers.json", """{"id": "id", "vec": "vec", """ +
       """"centers": [[0.1,-2.5E-7,3.0],[1.7976931348623157E308,0.0,4.9E-324]]}""")
-    val iv = Similarity.IvfIndex.load(spark, ivf)
-    assert(iv.centers.map(_.toArray.toSeq).toSeq == Seq(
-      Seq(0.1, -2.5e-7, 3.0), Seq(Double.MaxValue, 0.0, Double.MinPositiveValue)))
+    val refused = intercept[IllegalArgumentException](
+      Similarity.IvfIndex.load(spark, ivf))
+    assert(refused.getMessage.contains("not an IVF index") &&
+      refused.getMessage.contains(s"$ivf/_ivf_centers.json"), refused.getMessage)
 
     // IVF-PQ: the earlier writer's exact string building over a fitted
     // model, then over extreme floats; both read back bit-identical, as
