@@ -10,8 +10,8 @@ import org.apache.spark.sql.types._
   * MinHash pipeline's per-document hot loop): token xxhash64s combined
   * over sliding windows, first-occurrence-deduplicated.
   *
-  * Bit-identical to the `functions._`-composed recipe in
-  * `Dedup.shingleHashes` (PipelineSpec pins it on random texts):
+  * Bit-identical to the `functions._`-composed recipe (PipelineSpec
+  * pins it on random texts):
   * per-token `F.xxhash64(tok)`, window combination `F.xxhash64(a, b)`
   * (= hashLong(b, hashLong(a, 42))), `< k` fallback `F.xxhash64(th)`
   * over the token-hash array, and `array_distinct` order semantics.

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   *
   * Hyperplane family is bit-identical to the HOF-composed form
   * (`aggregate(zip_with(vec, sequence, ...))` in
-  * `Similarity.signBitsComposed`): component (p, i) =
+  * the test-scope `ComposedForms.signBits`): component (p, i) =
   * `(parseLong(md5Hex("p#i").take(15), 16) % 1e6) / 1e6 - 0.5` — the
   * same oracle-restatable md5 seed recipe as the CMS bucket matrix, so
   * DuckDB regenerates the exact plane matrix for the q_knn_lsh /

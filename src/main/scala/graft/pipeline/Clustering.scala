@@ -50,10 +50,11 @@ object Clustering {
     * the probe ranking is exact integer arithmetic too, and the whole
     * IVF query restates in a SQL oracle.
     *
-    * The first update also folds in the global min and max of the
-    * quantized components: when `d·(max − min)²` exceeds a long, an
-    * integer distance could wrap (silently, outside ANSI mode), so the
-    * fit is refused naming `offset`. */
+    * Before the first distance, one aggregate reads the global min and
+    * max of the quantized components: when `d·(max − min)²` exceeds a
+    * long, an integer distance could overflow — a silent wrap outside
+    * ANSI mode, an overflow error in it — so the fit is refused naming
+    * `offset`. */
   def kmeansFit(df: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int = 2, offset: Double = 2.0): (DataFrame, Array[Seq[Long]]) = {
     require(k >= 1 && k <= 4096, s"k must be in [1,4096], got $k")
@@ -61,6 +62,7 @@ object Clustering {
     val base = df.select(F.col(idCol).as("id"),
         quantize(F.col(vecCol), offset).as("q"))
       .localCheckpoint(false)
+    checkRange(base, offset)
 
     var centroids: Array[Seq[Long]] = base.orderBy(F.col("id")).limit(k)
       .select(F.col("q")).collect()
@@ -72,10 +74,8 @@ object Clustering {
       val stats = assign(base, centroids)
         .select(F.col("cluster"), F.posexplode(F.col("q")).as(Seq("pos", "v")))
         .groupBy("cluster", "pos")
-        .agg(F.sum(F.col("v")).as("s"), F.count(F.lit(1)).as("n"),
-          F.min(F.col("v")).as("lo"), F.max(F.col("v")).as("hi"))
+        .agg(F.sum(F.col("v")).as("s"), F.count(F.lit(1)).as("n"))
         .collect()
-      if (it == 0) checkRange(stats, centroids.head.length, offset)
       val next = centroids.map(_.toArray) // empty cluster → previous
       stats.foreach { r =>
         val (c, p) = (r.getInt(0), r.getInt(1))
@@ -91,11 +91,11 @@ object Clustering {
   /** Refuse a fit whose integer distances could overflow a long: each
     * squared component difference is at most `(max − min)²`, since every
     * centroid is a mean of quantized values. */
-  private def checkRange(stats: Array[org.apache.spark.sql.Row], d: Int,
-      offset: Double): Unit =
-    if (stats.nonEmpty) {
-      val lo = stats.map(_.getLong(4)).min
-      val hi = stats.map(_.getLong(5)).max
+  private def checkRange(base: DataFrame, offset: Double): Unit = {
+    val q = F.col("q")
+    val r = base.agg(F.min(F.array_min(q)), F.max(F.array_max(q)), F.max(F.size(q))).head()
+    if (!r.isNullAt(0)) {
+      val (lo, hi, d) = (r.getLong(0), r.getLong(1), r.getInt(2))
       val span = BigInt(hi) - BigInt(lo)
       if (span * span * d > BigInt(Long.MaxValue))
         throw new IllegalArgumentException(
@@ -103,6 +103,7 @@ object Clustering {
             s"components span [$lo, $hi] in $d dims, so a squared " +
             "distance overflows a long; keep |x| <= offset")
     }
+  }
 
   /** Driver-side twin of [[quantize]] (for quantizing a query vector
     * against a fitted model — same floor((x+offset)·10⁶) contract). */

@@ -15,9 +15,10 @@ import org.apache.spark.sql.{Column, DataFrame, functions => F}
   *      bigram-perplexity) gate ([[TextAnalysis.qualityScore]],
   *      [[TextAnalysis.langId]], [[TextAnalysis.mojibakeRatio]],
   *      [[TextAnalysis.compressionRatio]], [[Relevance.bigramNllCol]])
-  *      — all narrow, shuffle-free, one scan stage (the perplexity
-  *      model fit runs two aggregate jobs at plan-build time, over the
-  *      rows that survive the gates BEFORE it);
+  *      — narrow, shuffle-free, one scan stage, quality and language on
+  *      one native signals pass (the perplexity model fit runs two
+  *      aggregate jobs at plan-build time, over the rows that survive
+  *      the gates BEFORE it);
   *   2½. (optional) trained-classifier gate ([[Classifier.score]] over
   *      caller-supplied feature columns — narrow, same scan stage) and
   *      (optional) INCREMENTAL dedup against a stored corpus
@@ -60,6 +61,26 @@ import org.apache.spark.sql.{Column, DataFrame, functions => F}
   * q_dedup_minhash/q_dedup_groups, q_tfidf/q_kmeans/q_semantic_dedup).
   */
 object Curation {
+
+  /** The text gate of every curation path: mojibake ceiling, `extra`,
+    * [[TextAnalysis.qualityScore]] floor, [[TextAnalysis.langId]] set.
+    * A one-element explode binds the signals pass once per row: Spark's
+    * codegen'd Filter shares no common subexpressions and would re-run
+    * it for each of the gate's 17 field reads (3–4× the gate's time),
+    * and it can be pushed through a Project but not below a Generate it
+    * reads from. */
+  private def textGate(df: DataFrame, text: String, minQuality: Double, langs: Seq[String],
+      maxMojibake: Option[Double], extra: Column = F.lit(true)): DataFrame = {
+    val encodingOk = maxMojibake match {
+      case Some(m) => TextAnalysis.mojibakeRatio(F.col(text)) <= m
+      case None => F.lit(true)
+    }
+    val s = F.col("__sig")
+    df.withColumn("__sig", F.explode(F.array(TextAnalysis.signals(F.col(text)))))
+      .where(encodingOk && extra && TextAnalysis.qualityOf(s) >= minQuality &&
+        TextAnalysis.langOf(s).isInCollection(langs))
+      .drop("__sig")
+  }
 
   /** Curate `docs` into training chunks. Returns
     * (id, chunk_id, chunk_text, n_chunk_tokens) for the surviving corpus.
@@ -139,8 +160,8 @@ object Curation {
       classifierGate: Option[(Classifier.LogisticModel, Map[String, Column], Double)] = None,
       seenCorpus: Option[(DataFrame, String)] = None,
       normalize: Boolean = false): DataFrame = {
-    require(!docs.columns.contains("__digest"),
-      "docs must not contain the internal marker column __digest")
+    require(!docs.columns.contains("__digest") && !docs.columns.contains("__sig"),
+      "docs must not contain the internal marker columns __digest/__sig")
     val urlGated = urlBlocklist match {
       case Some((urlCol, blocked)) =>
         TextAnalysis.filterByDomainBlocklist(docs, urlCol, blocked)
@@ -154,17 +175,11 @@ object Curation {
       if (normalize)
         extracted.withColumn(text, TextAnalysis.normalizeText(F.col(text)))
       else extracted
-    val encodingOk = maxMojibake match {
-      case Some(t) => TextAnalysis.mojibakeRatio(F.col(text)) <= t
-      case None => F.lit(true)
-    }
     val compressionOk = minCompressionRatio match {
       case Some(t) => TextAnalysis.compressionRatio(F.col(text)) >= t
       case None => F.lit(true)
     }
-    val gated = input.where(encodingOk && compressionOk &&
-      TextAnalysis.qualityScore(F.col(text)) >= minQuality &&
-        TextAnalysis.langId(F.col(text)).isInCollection(langs))
+    val gated = textGate(input, text, minQuality, langs, maxMojibake, compressionOk)
     val classified = classifierGate match {
       case Some((model, feats, minScore)) =>
         val withF = feats.foldLeft(gated) {
@@ -242,22 +257,15 @@ object Curation {
       maxMojibake: Option[Double] = None,
       imageHashKind: String = "dhash",
       imageMaxBits: Int = 3, maxBucket: Int = 256): DataFrame = {
-    require(!docs.columns.contains("__digest") &&
-        !docs.columns.contains("__sh"),
-      "docs must not contain the internal marker columns __digest/__sh")
-    val encodingOk = maxMojibake match {
-      case Some(t) => TextAnalysis.mojibakeRatio(F.col(text)) <= t
-      case None => F.lit(true)
-    }
+    require(Seq("__digest", "__sh", "__sig").forall(c => !docs.columns.contains(c)),
+      "docs must not contain the internal marker columns __digest/__sh/__sig")
     // decode+hash each image ONCE: the triage gate filters on the hash
     // and the banded dedup pass reuses the same column — the decode is
     // the dominant per-row cost on a pair corpus
     val hashed = docs.withColumn("__sh",
       Multimodal.imageHash(F.col(media), imageHashKind))
-    val gated = hashed.where(encodingOk &&
-      TextAnalysis.qualityScore(F.col(text)) >= minQuality &&
-      TextAnalysis.langId(F.col(text)).isInCollection(langs) &&
-      F.col("__sh").isNotNull)
+    val gated = textGate(hashed, text, minQuality, langs, maxMojibake)
+      .where(F.col("__sh").isNotNull)
     // the survivor set feeds BOTH the pair pass and the final
     // anti-join; checkpoint it so the decode+gate stages run once, not
     // once per consumer
@@ -306,8 +314,8 @@ object Curation {
       normalize: Boolean = false): DataFrame = {
     require(docs.isStreaming, "curateStream needs a streaming frame; " +
       "use curate for batch input")
-    require(!docs.columns.contains("__digest"),
-      "docs must not contain the internal marker column __digest")
+    require(!docs.columns.contains("__digest") && !docs.columns.contains("__sig"),
+      "docs must not contain the internal marker columns __digest/__sig")
     val extracted =
       if (htmlInput) docs.withColumn(text, TextAnalysis.htmlText(F.col(text)))
       else docs
@@ -317,13 +325,7 @@ object Curation {
       if (normalize)
         extracted.withColumn(text, TextAnalysis.normalizeText(F.col(text)))
       else extracted
-    val encodingOk = maxMojibake match {
-      case Some(t) => TextAnalysis.mojibakeRatio(F.col(text)) <= t
-      case None => F.lit(true)
-    }
-    val gated = input.where(encodingOk &&
-      TextAnalysis.qualityScore(F.col(text)) >= minQuality &&
-        TextAnalysis.langId(F.col(text)).isInCollection(langs))
+    val gated = textGate(input, text, minQuality, langs, maxMojibake)
     val deduped = gated.withColumn("__digest", F.md5(F.col(text)))
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("__digest")

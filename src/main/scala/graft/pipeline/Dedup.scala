@@ -89,7 +89,7 @@ object Dedup {
     * array inside a per-element lambda re-evaluates the whole tokenize
     * per shingle (O(tokens²) on one pathological document; the same
     * capture the r15 straggler audit removed from wordNgrams — and the
-    * hazard [[shingleHashesComposed]]'s comment already warned about). */
+    * hazard the composed shingle-hash reference form warns about). */
   def shingles(text: Column, k: Int = 3): Column = {
     val t = TextAnalysis.tokens(text)
     val g = F.greatest(F.size(t) - (k - 1), F.lit(0))
@@ -107,39 +107,11 @@ object Dedup {
     * the k token hashes. Equal shingles ⇒ equal hashes; collisions are
     * ~n²/2⁶⁴. Evaluated by the native
     * [[graft.expressions.ShingleHashes]] expression (one JVM loop inside
-    * whole-stage codegen); bit-identical to the composed reference form
-    * below (PipelineSpec pins it). */
+    * whole-stage codegen); PipelineSpec pins it to its composed form. */
   def shingleHashes(text: Column, k: Int = 3): Column =
     graft.expressions.ColumnBridge.column(
       graft.expressions.ShingleHashes(
         graft.expressions.ColumnBridge.expression(F.split(text, " ")), k))
-
-  /** The `functions._`-composed reference form of [[shingleHashes]] —
-    * kept for the native-vs-composed parity test. */
-  private[graft] def shingleHashesComposed(text: Column, k: Int = 3): Column = {
-    val th = F.transform(TextAnalysis.tokens(text), t => F.xxhash64(t))
-    // combine k consecutive token hashes via zip_with against shifted
-    // views — each shift evaluates the token-hash array once per ROW.
-    // (Indexing th inside a per-element lambda would re-inline the whole
-    // tokenization per element: O(tokens²).)
-    val windowed = (2 to k).foldLeft(th)((acc, j) =>
-      F.zip_with(acc, F.slice(th, F.lit(j), F.size(th)), (a, b) => F.xxhash64(a, b)))
-    F.array_distinct(
-      F.when(F.size(th) >= k,
-        F.slice(windowed, F.lit(1), F.size(th) - (k - 1)))
-        .otherwise(F.array(F.xxhash64(th))))
-  }
-
-  /** MinHash signature of a STRING shingle-set column via `functions._`
-    * composition — kept for explainability and ad-hoc use over string
-    * shingles; the pipeline path is [[minhashSigColumn]] (native, over
-    * hashed shingles). */
-  def minhashSignature(shingleCol: Column, numHashes: Int = 32): Column = {
-    val base = F.transform(shingleCol, s => F.xxhash64(s))
-    F.transform(F.sequence(F.lit(0), F.lit(numHashes - 1)),
-      i => F.coalesce(F.array_min(F.transform(base, h => F.xxhash64(i, h))),
-        F.lit(Long.MaxValue)))
-  }
 
   /** MinHash signature column over a shingle-hash array — NARROW: the
     * native [[graft.expressions.MinHashSig]] loop computes all seeded
@@ -163,20 +135,6 @@ object Dedup {
       k: Int, numHashes: Int): DataFrame =
     df.select(F.col(id).as("rid"),
       minhashSigColumn(shingleHashes(F.col(text), k), numHashes).as("sig"))
-
-  /** The explode + MIN-aggregate reference form — kept for the
-    * native-vs-aggregate parity test. */
-  private[graft] def minhashSignaturesAgg(df: DataFrame, id: String,
-      text: String, k: Int, numHashes: Int): DataFrame = {
-    val exploded = df
-      .select(F.col(id).as("rid"), F.explode(shingleHashes(F.col(text), k)).as("h"))
-    val aggs = (0 until numHashes)
-      .map(i => F.min(F.xxhash64(F.lit(i), F.col("h"))).as(s"m$i"))
-    exploded.groupBy("rid").agg(aggs.head, aggs.tail: _*)
-      .select(F.col("rid"), F.array(
-        (0 until numHashes).map(i =>
-          F.coalesce(F.col(s"m$i"), F.lit(Long.MaxValue))): _*).as("sig"))
-  }
 
   /** Per-group "smallest `cap` ids" aggregation column, for id lists
     * that are not expanded to pairs (k-NN candidates): the bounded
@@ -481,8 +439,8 @@ object Dedup {
     * bit. Near-dups share the hash (or differ in few bits). Narrow map,
     * evaluated by the native [[graft.expressions.SimHash64]] Catalyst
     * expression (a tight JVM loop inside whole-stage codegen — the
-    * functions-composed form below allocates two 64-element arrays per
-    * TOKEN). Both forms produce identical hashes (PipelineSpec pins it). */
+    * functions-composed form allocates two 64-element arrays per TOKEN).
+    * Both forms produce identical hashes (PipelineSpec pins it). */
   def simhash(text: Column): Column = simhash(text, md5Tokens = false)
 
   /** [[simhash]] with a choice of token hash: xxhash64 (default — the
@@ -498,28 +456,6 @@ object Dedup {
       graft.expressions.SimHash64(
         graft.expressions.ColumnBridge.expression(F.split(text, " ")),
         md5Tokens))
-
-  /** The `functions._`-composed reference form of [[simhash]] — kept for
-    * the native-vs-composed parity test. */
-  private[graft] def simhashComposed(text: Column): Column = {
-    val t = TextAnalysis.tokens(text)
-    val votes = F.aggregate(t,
-      F.array_repeat(F.lit(0L), 64),
-      (acc, tok) => {
-        val h = F.xxhash64(tok)
-        F.zip_with(acc, F.sequence(F.lit(0), F.lit(63)),
-          (v, b) => v + F.when(
-            F.call_function("shiftright", h, b.cast(IntegerType))
-              .bitwiseAND(F.lit(1L)) === 1L,
-            F.lit(1L)).otherwise(F.lit(-1L)))
-      })
-    F.aggregate(
-      F.zip_with(votes, F.sequence(F.lit(0), F.lit(63)),
-        (v, b) => F.when(v > 0,
-          F.call_function("shiftleft", F.lit(1L), b.cast(IntegerType)))
-          .otherwise(F.lit(0L))),
-      F.lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
 
   /** SimHash dedup groups: rows with IDENTICAL simhash — the cheap exact
     * bucket. Near-dups that differ in a few bits need the banded variant

@@ -358,27 +358,4 @@ object Multimodal {
     graft.expressions.ColumnBridge.column(
       graft.expressions.ResizeImage(
         graft.expressions.ColumnBridge.expression(bin), maxSide))
-
-  /** The `functions._`-composed PNG/GIF-only reference form of
-    * [[headerImageMeta]] — kept for the native-vs-composed parity test
-    * (JPEG needs a segment walk that fixed-offset column arithmetic
-    * can't express, which is why the pipeline path is native). */
-  private[graft] def headerImageMetaComposed(bin: Column): Column = {
-    def be(start: Int, len: Int): Column =
-      F.conv(F.hex(F.substring(bin, start, len)), 16, 10).cast(IntegerType)
-    // little-endian 16-bit: swap the two bytes before the hex decode
-    def le16(start: Int): Column =
-      F.conv(F.hex(F.concat(F.substring(bin, start + 1, 1),
-        F.substring(bin, start, 1))), 16, 10).cast(IntegerType)
-    val isPng = F.hex(F.substring(bin, 1, 8)) === "89504E470D0A1A0A"
-    val isGif = F.substring(bin, 1, 6).cast(StringType)
-      .isin("GIF87a", "GIF89a")
-    F.when(isPng, F.struct(F.lit("image/png").as("mime"),
-        be(17, 4).as("width"), be(21, 4).as("height")))
-      .when(isGif, F.struct(F.lit("image/gif").as("mime"),
-        le16(7).as("width"), le16(9).as("height")))
-      .otherwise(F.lit(null).cast(StructType(Seq(
-        StructField("mime", StringType), StructField("width", IntegerType),
-        StructField("height", IntegerType)))))
-  }
 }

@@ -15,28 +15,15 @@ import graft.sources.Sidecar.Json
   */
 object Similarity {
 
-  /** Dot product of two float-array columns (codegen'd, no UDF). */
-  def dot(a: Column, b: Column): Column =
-    F.aggregate(F.zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
-      F.lit(0.0), (acc, x) => acc + x)
-
-  def norm(a: Column): Column = F.sqrt(dot(a, a))
-
   /** Cosine similarity — evaluated by the native
     * [[graft.expressions.CosineSim]] expression (one allocation-free
     * pass over both vectors inside whole-stage codegen); bit-identical
-    * to the composed form below (PipelineSpec parity). */
+    * to its composed form (PipelineSpec parity). */
   def cosine(a: Column, b: Column): Column =
     graft.expressions.ColumnBridge.column(
       graft.expressions.CosineSim(
         graft.expressions.ColumnBridge.expression(a),
         graft.expressions.ColumnBridge.expression(b)))
-
-  /** The `functions._`-composed reference form of [[cosine]]. */
-  private[graft] def cosineComposed(a: Column, b: Column): Column = {
-    val d = norm(a) * norm(b)
-    F.when(d > 0, dot(a, b) / d).otherwise(F.lit(0.0))
-  }
 
   /** Exact brute-force top-k by cosine against one query vector.
     * `orderBy(desc).limit(k)` plans as TakeOrderedAndProject: per-partition
@@ -50,18 +37,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** Deterministic pseudo-random hyperplane component: plane `p`,
-    * dimension `d` → value in [-0.5, 0.5). md5-derived (top 60 bits of
-    * md5("p#d") mod 1e6) — the oracle-restatable seed recipe shared with
-    * the CMS bucket matrix, so DuckDB regenerates identical planes and
-    * every executor materializes them with zero coordination. Must stay
-    * bit-identical to [[graft.expressions.SignBits.component]]. */
-  private def planeComponent(p: Int, d: Column): Column =
-    (F.conv(F.substring(F.md5(
-        F.concat(F.lit(s"$p#"), d.cast(StringType)).cast(BinaryType)),
-      1, 15), 16, 10).cast(LongType) % 1000000L).cast(DoubleType) /
-      1000000.0 - 0.5
-
   /** Sign-bit LSH bucket id: for each of `planes` hyperplanes, the sign of
     * the projection; packed into a long. Vectors in the same bucket are
     * likely cosine-close (random-hyperplane LSH). `planeOffset` selects an
@@ -71,26 +46,11 @@ object Similarity {
     *
     * Evaluated by the native [[graft.expressions.SignBits]] expression —
     * one read of the vector, `planes` accumulators, whole-stage codegen;
-    * bit-identical to [[signBitsComposed]] (PipelineSpec parity). */
+    * bit-identical to its composed form (PipelineSpec parity). */
   def signBits(vec: Column, planes: Int, planeOffset: Int = 0): Column =
     graft.expressions.ColumnBridge.column(
       graft.expressions.SignBits(
         graft.expressions.ColumnBridge.expression(vec), planes, planeOffset))
-
-  /** The `functions._`-composed reference form of [[signBits]] — planes
-    * nested HOF folds, each re-hashing every component per row. Kept for
-    * the native-vs-composed parity test (PipelineSpec). */
-  private[graft] def signBitsComposed(vec: Column, planes: Int,
-      planeOffset: Int = 0): Column = {
-    val proj = (0 until planes).map { p =>
-      val s = F.aggregate(
-        F.zip_with(vec, F.sequence(F.lit(0), F.size(vec) - 1),
-          (x, i) => x.cast(DoubleType) * planeComponent(planeOffset + p, i)),
-        F.lit(0.0), (acc, x) => acc + x)
-      F.when(s >= 0, F.shiftleft(F.lit(1L), p)).otherwise(F.lit(0L))
-    }
-    proj.reduce((a, b) => a.bitwiseOR(b))
-  }
 
   /** Query-side LSH buckets, computed ON THE DRIVER — the same native
     * [[graft.expressions.SignBits.pack]] loop the corpus side runs, on a
@@ -329,24 +289,6 @@ object Similarity {
     graft.expressions.ColumnBridge.column(
       graft.expressions.QuantizeInt8(
         graft.expressions.ColumnBridge.expression(vec)))
-
-  /** The `functions._`-composed reference form of [[quantizeInt8]] —
-    * kept for the native-vs-composed parity test (PipelineSpec). NOTE its
-    * lambda embeds the array_max subtree, re-evaluating the scale per
-    * ELEMENT (O(d²) per row) — the reason the pipeline path is the native
-    * expression. Null elements stay null and an empty/all-null vector
-    * gets scale 0.0, matching the native expression exactly. */
-  private[graft] def quantizeInt8Composed(vec: Column): Column = {
-    val scale = F.coalesce(
-      F.array_max(F.transform(vec, x => F.abs(x.cast(DoubleType)))) / 127.0,
-      F.lit(0.0))
-    F.struct(
-      F.when(scale > 0, F.transform(vec,
-          x => F.round(x.cast(DoubleType) / scale, 0).cast(ByteType)))
-        .otherwise(F.transform(vec,
-          x => F.when(x.isNotNull, F.lit(0).cast(ByteType)))).as("q"),
-      scale.as("scale"))
-  }
 
   /** Inverse of [[quantizeInt8]]: approximate float reconstruction. */
   def dequantizeInt8(qv: Column): Column =

@@ -5,9 +5,11 @@ import org.apache.spark.sql.types._
 
 /** Text-analysis operators for large-scale training-data pipelines.
   *
-  * Everything is `org.apache.spark.sql.functions` composition over a string
-  * column — no UDFs, fully inside whole-stage codegen, linear scans with no
-  * shuffle — so each scales to 100 TB as a narrow map stage.
+  * No UDFs: `functions._` composition over a string column or a native
+  * `graft.expressions` Catalyst expression; the per-row ones are linear
+  * scans with no shuffle, so each scales to 100 TB as a narrow map stage.
+  * Higher-order functions (as over [[tokens]]) run interpreted per row,
+  * outside whole-stage codegen, so the hot curation signals are native.
   */
 object TextAnalysis {
 
@@ -95,7 +97,18 @@ object TextAnalysis {
   def tokens(text: Column): Column =
     F.filter(F.split(text, " "), t => F.length(t) > 0)
 
-  def tokenCount(text: Column): Column = F.size(tokens(text))
+  /** The counts behind [[tokenCount]], the quality signals and [[langId]]
+    * in one native pass ([[graft.expressions.TextSignals]]). */
+  private[pipeline] def signals(text: Column, stopwords: Seq[String] = stopwordsEn): Column =
+    graft.expressions.ColumnBridge.column(
+      graft.expressions.TextSignals(
+        graft.expressions.ColumnBridge.expression(text), stopwords, langProfiles))
+
+  /** Number of [[tokens]]; NULL text gives what `size` gives a NULL array
+    * (-1 outside ANSI mode, NULL in it). */
+  def tokenCount(text: Column): Column =
+    F.coalesce(signals(text).getField("n_tokens"),
+      F.size(F.lit(null).cast(ArrayType(StringType))))
 
   /** BPE-ish subword count: word pieces + punctuation marks, the usual
     * pre-tokenizer regex (≈ GPT-2's splitter simplified). */
@@ -104,46 +117,44 @@ object TextAnalysis {
 
   def charCount(text: Column): Column = F.length(text)
 
-  def avgWordLen(text: Column): Column = {
-    val t = tokens(text)
-    F.when(F.size(t) > 0,
-      F.aggregate(t, F.lit(0L), (acc, x) => acc + F.length(x))
-        .cast(DoubleType) / F.size(t).cast(DoubleType))
+  /** `num / den` over two [[signals]] fields; 0.0 when `den` is 0. */
+  private def ratio(s: Column, num: String, den: String): Column =
+    F.when(s.getField(den) > 0,
+      s.getField(num).cast(DoubleType) / s.getField(den).cast(DoubleType))
       .otherwise(F.lit(0.0))
-  }
+
+  /** Mean code-point length of the [[tokens]]; 0.0 without any. */
+  def avgWordLen(text: Column): Column =
+    ratio(signals(text), "token_chars", "n_tokens")
 
   val stopwordsEn: Seq[String] = Seq("the", "a", "an", "of", "and", "or",
     "to", "in", "is", "it", "that", "this", "for", "on", "with", "as")
 
   /** Fraction of tokens that are (English) stopwords. */
-  def stopwordRatio(text: Column, stopwords: Seq[String] = stopwordsEn): Column = {
-    val t = tokens(text)
-    val sw = F.size(F.filter(t, x => x.isInCollection(stopwords)))
-    F.when(F.size(t) > 0, sw.cast(DoubleType) / F.size(t).cast(DoubleType))
-      .otherwise(F.lit(0.0))
-  }
+  def stopwordRatio(text: Column, stopwords: Seq[String] = stopwordsEn): Column =
+    ratio(signals(text, stopwords), "stopword_hits", "n_tokens")
 
   /** Fraction of non-alphanumeric, non-space characters. */
   def punctRatio(text: Column): Column =
-    F.when(F.length(text) > 0,
-      (F.length(text) - F.length(F.regexp_replace(text, "[^A-Za-z0-9 ]", "")))
-        .cast(DoubleType) / F.length(text).cast(DoubleType))
-      .otherwise(F.lit(0.0))
+    ratio(signals(text), "punct_chars", "n_chars")
 
   /** Heuristic quality score in [0,1]: length sweet-spot, moderate word
     * length, some-but-not-too-many stopwords, low punctuation noise.
     * Deterministic (single divisions, no float accumulation ordering). */
-  def qualityScore(text: Column): Column = {
-    val lenScore = F.least(charCount(text).cast(DoubleType) / 200.0, F.lit(1.0))
+  def qualityScore(text: Column): Column = qualityOf(signals(text))
+
+  /** [[qualityScore]] over a [[signals]] struct. */
+  private[pipeline] def qualityOf(s: Column): Column = {
+    val lenScore = F.least(s.getField("n_chars").cast(DoubleType) / 200.0, F.lit(1.0))
     val wordScore = {
-      val a = avgWordLen(text)
+      val a = ratio(s, "token_chars", "n_tokens")
       F.when(a >= 3.0 && a <= 8.0, 1.0).otherwise(0.5)
     }
     val swScore = {
-      val r = stopwordRatio(text)
+      val r = ratio(s, "stopword_hits", "n_tokens")
       F.when(r >= 0.05 && r <= 0.5, 1.0).otherwise(0.5)
     }
-    val punctScore = F.lit(1.0) - F.least(punctRatio(text) * 4.0, F.lit(1.0))
+    val punctScore = F.lit(1.0) - F.least(ratio(s, "punct_chars", "n_chars") * 4.0, F.lit(1.0))
     F.round((lenScore * 0.3 + wordScore * 0.2 + swScore * 0.3 + punctScore * 0.2), 6)
   }
 
@@ -167,33 +178,22 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "les", "et", "est", "pas", "une", "pour", "avec", "dans"),
     "es" -> Seq("el", "la", "los", "las", "es", "no", "una", "para", "con", "por"))
 
-  /** Language-ID: argmax of stopword hits per language profile; "und"
-    * (undetermined) when no profile scores. Ties break by profile order
-    * (deterministic). */
-  def langId(text: Column): Column = {
-    val t = tokens(text)
-    val scored = langProfiles.map { case (lang, words) =>
-      (lang, F.size(F.filter(t, x => F.lower(x).isInCollection(words))))
-    }
-    // fold: keep (bestScore, bestLang); strict > keeps first-listed on ties
-    val init = F.struct(F.lit(0).as("score"), F.lit("und").as("lang"))
-    val best = scored.foldLeft(init) { case (acc, (lang, score)) =>
-      F.when(score > acc.getField("score"),
-        F.struct(score.as("score"), F.lit(lang).as("lang"))).otherwise(acc)
-    }
-    best.getField("lang")
-  }
+  /** Language-ID: argmax of stopword hits per language profile over the
+    * lower-cased [[tokens]]; "und" (undetermined) when no profile scores,
+    * NULL text included. Ties break by profile order (deterministic). */
+  def langId(text: Column): Column = langOf(signals(text))
 
-  /** 64-bit document fingerprint: polynomial rolling hash over token
-    * xxhash64s — order-sensitive (unlike a bag-of-words hash), one pass,
-    * no shuffle. */
+  /** [[langId]] over a [[signals]] struct. */
+  private[pipeline] def langOf(s: Column): Column =
+    F.coalesce(s.getField("lang"), F.lit("und"))
+
   /** Order-sensitive document fingerprint: polynomial rolling hash over
     * whitespace tokens, `acc = acc*1000003 + h(tok)` with 64-bit wrap.
     * The token hash is md5-derived (top 60 bits of the hex digest) —
     * the same oracle-restatable seed recipe as the CMS bucket matrix
     * (`Sketches.cmsSketch`), so DuckDB regenerates fingerprints
     * bit-exactly with HUGEINT mod-2^64 arithmetic (q_fingerprint's
-    * hash oracle). Narrow codegen'd fold, no shuffle. */
+    * hash oracle). Narrow fold, no shuffle. */
   def fingerprint(text: Column): Column =
     F.aggregate(tokens(text), F.lit(0L),
       (acc, x) => acc * F.lit(1000003L) +
@@ -866,12 +866,6 @@ object TextAnalysis {
           F.coalesce(F.col("__nkept"), F.lit(0L))).as("n_dropped_units"))
   }
 
-  /** Split each document into overlapping token-window chunks (training
-    * context-window prep): chunk i covers tokens
-    * [i*stride, i*stride + size). Every token is covered; the final
-    * chunk may be short. Narrow transform + explode — no shuffle, the
-    * standard pre-tokenization pass before packing. Returns
-    * (id, chunk_id, chunk_text, n_chunk_tokens). */
   /** One-shot corpus analytics report: the summary a curation run
     * prints before and after — doc counts, token/char mass, length
     * distribution (exact interpolated percentiles), exact-duplicate
@@ -920,6 +914,12 @@ object TextAnalysis {
     )).as(Seq("metric", "value")))
   }
 
+  /** Split each document into overlapping token-window chunks (training
+    * context-window prep): chunk i covers tokens
+    * [i*stride, i*stride + size). Every token is covered; the final
+    * chunk may be short. Narrow transform + explode — no shuffle, the
+    * standard pre-tokenization pass before packing. Returns
+    * (id, chunk_id, chunk_text, n_chunk_tokens). */
   def chunk(df: DataFrame, idCol: String, textCol: String,
       size: Int, stride: Int): DataFrame = {
     require(size > 0 && stride > 0 && stride <= size,

@@ -13,13 +13,22 @@ class ClusteringSpec extends SparkSpec {
 
   test("an input whose integer distances overflow a long is refused, naming offset") {
     // 8 dims of ±1e3 at offset 2.0: quantized components span ~2·10⁹,
-    // so 8·span² exceeds Long.MaxValue and a distance would wrap
+    // so 8·span² exceeds Long.MaxValue and a distance would wrap. Under
+    // ANSI mode the first assignment would instead fail with an overflow
+    // error advising to turn ANSI off, so the guard must run first.
     val rnd = new scala.util.Random(7)
     val rows = (0 until 20).map(i =>
       (i.toLong, Seq.fill(8)(if (rnd.nextBoolean()) 1e3f else -1e3f)))
-    val e = intercept[IllegalArgumentException](
-      Clustering.kmeans(rows.toDF("id", "vec"), "id", "vec", k = 2))
-    assert(e.getMessage.contains("offset 2.0"), e.getMessage)
+    val key = "spark.sql.ansi.enabled"
+    val before = spark.conf.get(key)
+    try {
+      for (ansi <- Seq("false", "true")) {
+        spark.conf.set(key, ansi)
+        val e = intercept[IllegalArgumentException](
+          Clustering.kmeans(rows.toDF("id", "vec"), "id", "vec", k = 2))
+        assert(e.getMessage.contains("offset 2.0"), s"ansi=$ansi: ${e.getMessage}")
+      }
+    } finally spark.conf.set(key, before)
   }
 
   /** Local reference: identical quantized algorithm, plain Scala. */

@@ -176,7 +176,7 @@ class MultimodalSpec extends SparkSpec {
     val df = Seq((1L, png), (2L, gif), (3L, junk)).toDF("id", "content")
     val both = df.select(
       graft.pipeline.Multimodal.headerImageMeta(F.col("content")).as("n"),
-      graft.pipeline.Multimodal.headerImageMetaComposed(F.col("content")).as("c"))
+      ComposedForms.headerImageMeta(F.col("content")).as("c"))
     assert(both.where(F.col("n") =!= F.col("c") ||
       F.col("n").isNull =!= F.col("c").isNull).count() == 0)
   }

@@ -255,7 +255,7 @@ class PipelineSpec extends SparkSpec {
     val df = texts.toDF("id", "text")
     val mismatches = df.select(
         Dedup.simhash(F.col("text")).as("native"),
-        Dedup.simhashComposed(F.col("text")).as("composed"))
+        ComposedForms.simhash(F.col("text")).as("composed"))
       .where(F.col("native") =!= F.col("composed")).count()
     assert(mismatches == 0,
       "native SimHash64 must be bit-identical to the composed recipe")
@@ -290,7 +290,7 @@ class PipelineSpec extends SparkSpec {
     val both = emb.select(F.col("embedding").as("v"))
       .crossJoin(emb.select(F.col("embedding").as("w")).limit(3))
       .select(Similarity.cosine(F.col("v"), F.col("w")).as("native"),
-        Similarity.cosineComposed(F.col("v"), F.col("w")).as("composed"))
+        ComposedForms.cosine(F.col("v"), F.col("w")).as("composed"))
     assert(both.where(F.col("native") =!= F.col("composed")).count() == 0)
     // zero vector → 0.0 in both forms
     import spark.implicits._
@@ -304,7 +304,7 @@ class PipelineSpec extends SparkSpec {
     for ((planes, offset) <- Seq((6, 0), (16, 64), (12, 192))) {
       val mismatches = emb.select(
           Similarity.signBits(F.col("embedding"), planes, offset).as("native"),
-          Similarity.signBitsComposed(F.col("embedding"), planes, offset)
+          ComposedForms.signBits(F.col("embedding"), planes, offset)
             .as("composed"))
         .where(F.col("native") =!= F.col("composed")).count()
       assert(mismatches == 0, s"planes=$planes offset=$offset")
@@ -316,7 +316,7 @@ class PipelineSpec extends SparkSpec {
       (2L, Seq[java.lang.Float](1.0f, null, 3.0f))).toDF("id", "v")
     val got = edges.select(F.col("id"),
         Similarity.signBits(F.col("v"), 6).as("n"),
-        Similarity.signBitsComposed(F.col("v"), 6).as("c"))
+        ComposedForms.signBits(F.col("v"), 6).as("c"))
       .collect().map(r => (r.getLong(1), r.getLong(2)))
     assert(got.forall { case (n, c) => n == c && n == 0L }, got.toSeq)
     // null vector stays null
@@ -328,7 +328,7 @@ class PipelineSpec extends SparkSpec {
   test("narrow MinHash signatures match the explode+aggregate form") {
     val narrow = Dedup.minhashSignatures(docs, "doc_id", "text", 3, 32)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val agg = Dedup.minhashSignaturesAgg(docs, "doc_id", "text", 3, 32)
+    val agg = ComposedForms.minhashSignatures(docs, "doc_id", "text", 3, 32)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(narrow == agg,
       "narrow native signatures must be bit-identical to the agg form")
@@ -349,7 +349,7 @@ class PipelineSpec extends SparkSpec {
     for (k <- Seq(1, 3, 5)) {
       val mismatches = df.select(
           Dedup.shingleHashes(F.col("text"), k).as("native"),
-          Dedup.shingleHashesComposed(F.col("text"), k).as("composed"))
+          ComposedForms.shingleHashes(F.col("text"), k).as("composed"))
         .where(F.col("native") =!= F.col("composed")).count()
       assert(mismatches == 0, s"k=$k: native must equal composed")
     }
@@ -403,7 +403,7 @@ class PipelineSpec extends SparkSpec {
       .unionByName(corners.select(F.col("embedding").cast("array<float>")))
     val both = all.select(
       Similarity.quantizeInt8(F.col("embedding")).as("n"),
-      Similarity.quantizeInt8Composed(F.col("embedding")).as("c"))
+      ComposedForms.quantizeInt8(F.col("embedding")).as("c"))
     assert(both.where(F.col("n") =!= F.col("c") ||
       F.col("n").isNull =!= F.col("c").isNull).count() == 0)
   }
