@@ -716,18 +716,11 @@ class Engine(initial: RdfGraph) {
   /** Flatten an rdf:Seq/Bag/Alt container (decollect,
     * gastrodon/__init__.py:403-463): Seq → ordered List by rdf:_N index,
     * Bag/Alt → value→count Map. Dispatches on the container's rdf:type
-    * (the reference probes with a VALUES query). */
-  /** The DEFAULT-graph triples view (s, p, o): on a quad store the
-    * node-centric walks (decollect, peel/DESCRIBE's CBD) range over the
-    * default graph, consistent with un-scoped SELECT patterns — named
-    * graphs are reachable through GRAPH queries, not through container
-    * probing or bnode closures. */
-  private def defaultGraphTriples: DataFrame =
-    if (!graph.isQuads) graph.triples
-    else graph.triples.where(F.col("g").isNull).select("s", "p", "o")
-
+    * (the reference probes with a VALUES query). On a quad store it
+    * ranges over the default graph, like peel/DESCRIBE and un-scoped
+    * SELECT patterns; named graphs are reached through GRAPH queries. */
   def decollect(node: RdfTerm): Any = {
-    val t = defaultGraphTriples
+    val t = graph.defaultGraph
     val typeRow = t.where(F.col("s") === termCol(node) &&
         F.col("p") === termCol(Iri(RDF.typ)))
       .select(F.col("o.value")).collect()
@@ -761,7 +754,7 @@ class Engine(initial: RdfGraph) {
     * term-struct column `n`): outbound triples plus the blank-node
     * closure — the shared walk behind [[peel]] and [[describe]]. */
   private def cbd(frontier0: DataFrame): RdfGraph = {
-    val t = defaultGraphTriples
+    val t = graph.defaultGraph
     var frontier = frontier0.distinct()
     var seen = frontier
     var acc: DataFrame = null

@@ -1701,7 +1701,7 @@ object SparkEntry {
       // (url, html) survives, which DuckDB restates directly
       val docId = F.col("doc_id")
       val url = F.concat(F.lit("http://ex.org/doc/"), docId)
-      def record(ct: String, payload: Column) = F.concat(
+      def record(payload: Column) = F.concat(
         F.lit("WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: "), url,
         F.lit("\r\nWARC-Date: 2024-01-02T00:00:00Z\r\nWARC-Record-ID: <u:"),
         docId, F.lit(">\r\nContent-Type: application/http;msgtype=response" +
@@ -1714,12 +1714,9 @@ object SparkEntry {
         F.lit(" crawl body</p><a href=\"/n"), docId,
         F.lit("\">n</a></body></html>"))
       val seg = F.encode(F.concat(
-        record("application/http;msgtype=response",
-          http(200, "text/html; charset=utf-8", html)),
-        record("application/http;msgtype=response",
-          http(404, "text/html", F.lit("<html>gone</html>"))),
-        record("application/http;msgtype=response",
-          http(200, "image/png", F.lit("PNGBYTES")))), "UTF-8")
+        record(http(200, "text/html; charset=utf-8", html)),
+        record(http(404, "text/html", F.lit("<html>gone</html>"))),
+        record(http(200, "image/png", F.lit("PNGBYTES")))), "UTF-8")
       val records = read(s, dir, "documents")
         .select(F.lit("mem").as("file"),
           F.explode(sources.Warc.records(seg)).as("r"))

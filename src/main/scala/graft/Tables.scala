@@ -114,7 +114,7 @@ object Tables {
       if (!fs.exists(src)) "missing"
       else {
         val it = fs.listFiles(src, true)
-        var acc = new StringBuilder(sfDir)
+        val acc = new StringBuilder(sfDir)
         while (it.hasNext) {
           val f = it.next()
           acc.append('|').append(f.getPath.getName).append(':')

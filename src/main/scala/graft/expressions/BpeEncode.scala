@@ -44,7 +44,7 @@ case class BpeEncode(child: Expression, merges: Seq[Seq[String]])
   /** Greedy rank-order BPE of one word. */
   def bpeWord(word: String, out: java.util.ArrayList[UTF8String]): Unit = {
     if (word.isEmpty) return
-    var syms = new java.util.ArrayList[String](word.length)
+    val syms = new java.util.ArrayList[String](word.length)
     var i = 0
     while (i < word.length) { syms.add(String.valueOf(word.charAt(i))); i += 1 }
     var done = syms.size < 2

@@ -128,7 +128,6 @@ object Relevance {
   def unigramNll(df: DataFrame, idCol: String, textCol: String,
       vocabSize: Int = 1024): DataFrame = {
     require(vocabSize > 0)
-    val spark = df.sparkSession
     val counts = df
       .select(F.explode(TextAnalysis.tokens(F.col(textCol))).as("token"))
       .groupBy("token").agg(F.count(F.lit(1)).as("n"))

@@ -104,16 +104,15 @@ object TextAnalysis {
       graft.expressions.TextSignals(
         graft.expressions.ColumnBridge.expression(text), stopwords, langProfiles))
 
-  /** Number of [[tokens]]; NULL text gives what `size` gives a NULL array
-    * (-1 outside ANSI mode, NULL in it). */
-  def tokenCount(text: Column): Column =
-    F.coalesce(signals(text).getField("n_tokens"),
-      F.size(F.lit(null).cast(ArrayType(StringType))))
+  /** Number of [[tokens]]; NULL for a NULL text. */
+  def tokenCount(text: Column): Column = signals(text).getField("n_tokens")
 
   /** BPE-ish subword count: word pieces + punctuation marks, the usual
-    * pre-tokenizer regex (≈ GPT-2's splitter simplified). */
+    * pre-tokenizer regex (≈ GPT-2's splitter simplified). NULL for a
+    * NULL text, which `size` would count as -1 outside ANSI mode. */
   def bpeTokenCount(text: Column): Column =
-    F.size(F.regexp_extract_all(text, F.lit("""[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"""), F.lit(0)))
+    F.when(text.isNotNull, F.size(F.regexp_extract_all(text,
+      F.lit("""[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"""), F.lit(0))))
 
   def charCount(text: Column): Column = F.length(text)
 
@@ -806,8 +805,7 @@ object TextAnalysis {
     * pair join, no driver state. */
   def c4SpanDedup(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3): DataFrame =
-    spanDedupBy(df, idCol, textCol, n,
-      F.split(F.col(textCol), "\n"), "\n")
+    spanDedupBy(df, idCol, n, F.split(F.col(textCol), "\n"), "\n")
 
   /** [[c4SpanDedup]] at SENTENCE granularity — the paper's actual unit
     * ("any three-sentence span"): units come from [[sentences]] and
@@ -817,10 +815,10 @@ object TextAnalysis {
     * same scale shape. */
   def c4SpanDedupSentences(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3): DataFrame =
-    spanDedupBy(df, idCol, textCol, n, sentences(F.col(textCol)), " ")
+    spanDedupBy(df, idCol, n, sentences(F.col(textCol)), " ")
 
-  private def spanDedupBy(df: DataFrame, idCol: String, textCol: String,
-      n: Int, arr: Column, sep: String): DataFrame = {
+  private def spanDedupBy(df: DataFrame, idCol: String, n: Int,
+      arr: Column, sep: String): DataFrame = {
     require(n >= 1, s"span length must be positive, got $n")
     // PERF SHAPE: bind the unit array to an ATTRIBUTE below the
     // Generate before any lambda slices it — slicing `arr` (a split /

@@ -250,26 +250,6 @@ object Canon {
 
   import org.apache.spark.sql.{Column, DataFrame, functions => F}
 
-  /** Canonical N-Quads line escaping, columnar (must byte-match
-    * [[Lit.escape]]). Backslash first, then the four specials. */
-  private def escCol(c: Column): Column = {
-    val b = F.regexp_replace(c, """\\""", """\\\\""")
-    val q = F.regexp_replace(b, "\"", "\\\\\"")
-    val n = F.regexp_replace(q, "\n", """\\n""")
-    val r = F.regexp_replace(n, "\r", """\\r""")
-    F.regexp_replace(r, "\t", """\\t""")
-  }
-
-  private def termNqCol(c: Column): Column = {
-    val v = Terms.value(c); val dt = Terms.dt(c); val lang = Terms.lang(c)
-    F.when(Terms.kind(c) === Terms.KIND_IRI,
-        F.concat(F.lit("<"), v, F.lit(">")))
-      .otherwise(F.concat(F.lit("\""), escCol(v), F.lit("\""),
-        F.when(lang.isNotNull, F.concat(F.lit("@"), lang))
-          .when(dt === XSD.string, F.lit(""))
-          .otherwise(F.concat(F.lit("^^<"), dt, F.lit(">")))))
-  }
-
   /** Canonical N-Quads of a WHOLE [[RdfGraph]] as a distributed `line`
     * column — the scale path for content-addressing and diffing large
     * stores. GROUND rows (no blank node, no quoted triple in any
@@ -292,16 +272,16 @@ object Canon {
     val gPart: Column =
       if (g.isQuads)
         F.when(F.col("g").isNotNull,
-          F.concat(termNqCol(F.col("g")), F.lit(" "))).otherwise(F.lit(""))
+          F.concat(Terms.ntText(F.col("g")), F.lit(" "))).otherwise(F.lit(""))
       else F.lit("")
     // distinct: the driver serializer dedupes quads, so the distributed
     // document must too — a store carrying duplicate rows (set semantics
     // are a property of RdfGraph's loaders, not of arbitrary quad
     // frames) would otherwise break byte-equality with canonicalNQuads
     val groundLines = ground.select(F.concat(
-      termNqCol(F.col("s")), F.lit(" "),
-      termNqCol(F.col("p")), F.lit(" "),
-      termNqCol(F.col("o")), F.lit(" "), gPart, F.lit(".")).as("line"))
+      Terms.ntText(F.col("s")), F.lit(" "),
+      Terms.ntText(F.col("p")), F.lit(" "),
+      Terms.ntText(F.col("o")), F.lit(" "), gPart, F.lit(".")).as("line"))
       .distinct()
 
     val driverQuads = RdfGraph(t.filter(bnodeish), g.prefixes).collectQuads()

@@ -99,6 +99,14 @@ final case class RdfGraph(triples: DataFrame, prefixes: Map[String, String],
     * compiler scopes scans by `g` for GRAPH / FROM / FROM NAMED. */
   def isQuads: Boolean = triples.columns.contains("g")
 
+  /** The default graph as (s, p, o): the rows whose `g` is null on a
+    * quad store, every row of a triple store. The view of the formats
+    * without quad syntax (Turtle, N-Triples, RDF/XML) and of the
+    * node-centric walks (decollect, peel/DESCRIBE, reasoning). */
+  private[graft] def defaultGraph: DataFrame =
+    (if (isQuads) triples.where(F.col("g").isNull) else triples)
+      .select("s", "p", "o")
+
   /** Number of triples (set cardinality). */
   def size: Long = triples.count()
 

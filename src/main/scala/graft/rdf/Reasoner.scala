@@ -37,15 +37,6 @@ object Reasoner {
   private def predIs(iri: String) =
     F.col("p.kind") === KIND_IRI && F.col("p.value") === iri
 
-  /** Default-graph triples of `g` as (s, p, o) — reasoning scopes to
-    * the default graph on quad stores, the engine's node-centric-walk
-    * posture (decollect / peel / DESCRIBE do the same). */
-  private def defaultTriples(g: RdfGraph): DataFrame = {
-    val t = g.triples.drop(Terms.GPART_COL)
-    if (g.isQuads) t.where(F.col("g").isNull).select("s", "p", "o")
-    else t.select("s", "p", "o")
-  }
-
   /** Transitive closure of a (small) edge set by path doubling:
     * ⌈log₂ diameter⌉ rounds, localCheckpoint per round to cut lineage,
     * RDD re-wrap before each union for fresh attribute ids (the
@@ -96,7 +87,7 @@ object Reasoner {
     * named graphs pass through untouched. Source metadata (vertical
     * index, star tables, stats) drops like any UPDATE. */
   def rdfsClosure(g: RdfGraph): RdfGraph = {
-    val triples = defaultTriples(g)
+    val triples = g.defaultGraph
 
     // rdfs5: closed property hierarchy (schema-sized fixpoint).
     val spStar = transitiveClosure(
@@ -163,7 +154,7 @@ object Reasoner {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val spark = g.spark
     var cur = rdfsClosure(g)
-    var prevCount = defaultTriples(cur).count()
+    var prevCount = cur.defaultGraph.count()
     var i = 1
     var fixed = false
     while (!fixed && i < rounds) {
@@ -172,7 +163,7 @@ object Reasoner {
       val snap0 = cur.triples.localCheckpoint(true)
       val snap = spark.createDataFrame(snap0.rdd, snap0.schema)
       val next = rdfsClosure(cur.copy(triples = snap))
-      val nextCount = defaultTriples(next).count()
+      val nextCount = next.defaultGraph.count()
       fixed = nextCount == prevCount
       cur = next
       prevCount = nextCount
@@ -181,7 +172,7 @@ object Reasoner {
     if (!fixed && i == rounds && rounds > 1) {
       // one more count-only probe so a capped run can't silently
       // under-derive: if the last pass still grew, say so
-      val probe = defaultTriples(rdfsClosure(cur)).count()
+      val probe = rdfsClosure(cur).defaultGraph.count()
       if (probe != prevCount) throw new IllegalArgumentException(
         s"rdfsClosure did not reach a fixpoint within $rounds rounds " +
           s"(still deriving new triples; raise rounds)")
@@ -198,7 +189,7 @@ object Reasoner {
     * checksum detects the fixpoint — the dedupGroups discipline). */
   def sameAsMap(g: RdfGraph): DataFrame = {
     val spark = g.spark
-    val pairs = defaultTriples(g).where(predIs(OWL.sameAs))
+    val pairs = g.defaultGraph.where(predIs(OWL.sameAs))
       .where(F.col("o.kind") =!= KIND_LIT)
       .select(F.col("s").as("a"), F.col("o").as("b"))
     val edges = pairs
@@ -250,7 +241,7 @@ object Reasoner {
     * untouched; source metadata drops like any UPDATE. */
   def smushSameAs(g: RdfGraph): RdfGraph = {
     val m = sameAsMap(g).localCheckpoint(true)
-    val kept = defaultTriples(g).where(!predIs(OWL.sameAs))
+    val kept = g.defaultGraph.where(!predIs(OWL.sameAs))
     val sm = m.select(F.col("n").as("__sn"), F.col("c").as("__sc"))
     val om = m.select(F.col("n").as("__on"), F.col("c").as("__oc"))
     val rewritten = kept

@@ -336,6 +336,37 @@ object Terms {
       F.lit(" >>"))
   }
 
+  /** Exact recursive Turtle-star text of a quoted-triple term — ECHAR
+    * escapes on component literals, unlimited nesting; the
+    * display-oriented [[quotedN3]] guarantees neither. */
+  def quotedText(t: Column): Column =
+    graft.expressions.ColumnBridge.column(graft.expressions.QuotedN3Text(
+      graft.expressions.ColumnBridge.expression(value(t))))
+
+  /** The ECHAR escapes of a literal's lexical form ([[Lit.escape]]),
+    * backslash first. */
+  private val echars = Seq("\\" -> "\\\\", "\"" -> "\\\"",
+    "\n" -> "\\n", "\r" -> "\\r", "\t" -> "\\t")
+
+  /** N-Triples text of a term column, byte-equal to `RdfTerm.n3()`:
+    * `<iri>`, `_:label`, a literal quoted with ECHAR escapes plus
+    * `@lang` or `^^<dt>` (xsd:string stays bare), and a quoted triple's
+    * [[quotedText]]. NULL for an unbound term. The N-Quads writer, the
+    * canonical N-Quads lines and the TSV results format render with it. */
+  def ntText(t: Column): Column = {
+    val lex = echars.foldLeft(value(t)) { case (c, (raw, esc)) =>
+      F.replace(c, F.lit(raw), F.lit(esc))
+    }
+    F.when(isIri(t), F.concat(F.lit("<"), value(t), F.lit(">")))
+      .when(isBlank(t), F.concat(F.lit("_:"), value(t)))
+      .when(isQuoted(t), quotedText(t))
+      .when(isLiteral(t), F.concat(F.lit("\""), lex, F.lit("\""),
+        F.when(lang(t).isNotNull, F.concat(F.lit("@"), lang(t)))
+          .when(dt(t).isNotNull && dt(t) =!= XSD.string,
+            F.concat(F.lit("^^<"), dt(t), F.lit(">")))
+          .otherwise(F.lit(""))))
+  }
+
   // ---- field accessors -----------------------------------------------------
 
   def kind(c: Column): Column = c.getField("kind")

@@ -71,7 +71,8 @@ import graft.rdf._
   *    IRIs, no context needed) whose graphs union to the store — the
   *    same per-part contract as the Turtle/RDF-XML writers, with
   *    [[read]] folding the parts back under one blank-node scope in
-  *    name-sorted order (concatenation semantics, see `Turtle.read`).
+  *    name-sorted order (concatenation semantics, see
+  *    `Sidecar.readParts`).
   *
   * Quoted triples (RDF-star) have no REC JSON-LD syntax and are
   * rejected by both writers, like RDF/XML.
@@ -127,8 +128,7 @@ object JsonLd {
         * engine never fetches. Constant through one parse. */
       docs: Map[String, String] = Map.empty)
 
-  private def initialCtx(docBase: String,
-      docs: Map[String, String] = Map.empty): Ctx =
+  private def initialCtx(docBase: String, docs: Map[String, String]): Ctx =
     Ctx(docBase, None, None, Map.empty, docs = docs)
 
   private def processContext(active: Ctx, value: JsonNode,
@@ -463,7 +463,7 @@ object JsonLd {
 
   /** Shared mutable state for one logical document (or one name-sorted
     * directory of parts — blank-node labels scope across parts, like
-    * `Turtle.read`'s concatenation semantics). */
+    * the concatenation semantics of `Sidecar.readParts`). */
   private final class ToRdf {
     val out = mutable.ArrayBuffer[(RdfTerm, RdfTerm, RdfTerm, Option[RdfTerm])]()
     val prefixes = mutable.Map[String, String]()
@@ -959,7 +959,7 @@ object JsonLd {
     parseQuads(json, base, contexts).map { case (s, p, o, _) => (s, p, o) }
 
   private def parseInto(json: String, base: String, st: ToRdf,
-      contexts: Map[String, String] = Map.empty): Unit = {
+      contexts: Map[String, String]): Unit = {
     val root =
       try mapper().readTree(json)
       catch { case e: Exception =>
@@ -999,40 +999,18 @@ object JsonLd {
   }
 
   /** Read a file, or a [[write]]-produced directory of part files,
-    * back into a graph. Directory parts fold in name-sorted order into
-    * ONE blank-node scope (concatenation semantics — a labeled bnode
-    * split across parts stays one node), matching `Turtle.read`. */
+    * back into a graph. Directory parts fold in name order into ONE
+    * blank-node scope (concatenation semantics — a labeled bnode split
+    * across parts stays one node; see `Sidecar.readParts`). */
   def read(spark: SparkSession, path: String, base: String = "",
       contexts: Map[String, String] = Map.empty): RdfGraph = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(path)
     val st = new ToRdf
-    val files =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).toSeq
-          .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith("."))
-          .sortBy(_.getPath.getName)
-          .map(_.getPath)
-      else Seq(p)
-    files.foreach { f =>
-      val in = fs.open(f)
-      val text =
-        try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      parseInto(text, base, st, contexts)
-    }
+    Sidecar.readParts(spark.sparkContext.hadoopConfiguration, path)
+      .foreach(parseInto(_, base, st, contexts))
     graphOf(spark, st)
   }
 
   // -------------------------------------------------------- serializers
-
-  private def defaultGraphOf(g: RdfGraph) =
-    if (g.isQuads)
-      g.triples.filter(org.apache.spark.sql.functions.col("g").isNull)
-        .select("s", "p", "o")
-    else g.triples.select("s", "p", "o")
 
   /** Compact an IRI against the prefix map (longest namespace wins);
     * suffixes that would not re-expand (a "//" start) stay full. */
@@ -1420,70 +1398,33 @@ object JsonLd {
     mapper().writerWithDefaultPrettyPrinter().writeValueAsString(doc) + "\n"
   }
 
-  /** Distributed JSON-LD sink in EXPANDED form: subjects co-locate via
-    * a hash repartition; every part file is a standalone-valid JSON-LD
-    * document (a top-level array of node objects with full IRIs — no
-    * context, so the parts need no shared header) whose union is the
-    * store. Named-graph rows wrap as `{"@id": g, "@graph": [node]}`
+  /** Distributed JSON-LD sink in EXPANDED form over the shared part
+    * layout ([[PartFiles]]): every part file is a standalone-valid
+    * JSON-LD document (a top-level array of node objects with full
+    * IRIs — no context, so the parts need no shared header) whose union
+    * is the store. Named-graph rows wrap as `{"@id": g, "@graph": [node]}`
     * graph objects (same-@id graph objects union on read). */
-  def write(g: RdfGraph, path: String, numPartitions: Int = 0): Unit = {
-    val F = org.apache.spark.sql.functions
-    val isQuads = g.isQuads
-    val base = if (isQuads) g.triples.select("s", "p", "o", "g")
-      else g.triples.select("s", "p", "o")
-    val keyCols = if (isQuads) Seq(F.col("g"), F.col("s")) else Seq(F.col("s"))
-    val parts =
-      if (numPartitions > 0) base.repartition(numPartitions, keyCols: _*)
-      else base.repartition(keyCols: _*)
-    val sorted =
-      if (isQuads) parts.sortWithinPartitions("g", "s", "p", "o")
-      else parts.sortWithinPartitions("s", "p", "o")
-    implicit val enc: org.apache.spark.sql.Encoder[String] =
-      org.apache.spark.sql.Encoders.STRING
-    sorted.mapPartitions { it =>
+  def write(g: RdfGraph, path: String, numPartitions: Int = 0): Unit =
+    PartFiles.write(g.triples, path, numPartitions,
+      open = Some("["), sep = ",", close = Some("]")) { rows =>
       val nf = JsonNodeFactory.instance
-      val m = new ObjectMapper()
-      val buf = it.buffered
-      def sameGroup(a: org.apache.spark.sql.Row,
-          b: org.apache.spark.sql.Row): Boolean =
-        a.getStruct(0) == b.getStruct(0) &&
-          (!isQuads || (a.isNullAt(3) && b.isNullAt(3)) ||
-            (!a.isNullAt(3) && !b.isNullAt(3) &&
-              a.getStruct(3) == b.getStruct(3)))
-      val blocks = new Iterator[String] {
-        def hasNext: Boolean = buf.hasNext
-        def next(): String = {
-          val head = buf.head
-          val ts = mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-          while (buf.hasNext && sameGroup(buf.head, head)) ts += buf.next()
-          val node = nodeOf(head.getStruct(0), ts.toSeq, nf, Nil, full = true)
-          val wrapped: JsonNode =
-            if (isQuads && !head.isNullAt(3)) {
-              val gt = head.getStruct(3)
-              val go = nf.objectNode()
-              go.put("@id", gt.getByte(0) match {
-                case Terms.KIND_IRI => gt.getString(1)
-                case Terms.KIND_BLANK => "_:" + gt.getString(1)
-                case _ => throw new IllegalArgumentException("bad graph name")
-              })
-              go.putArray("@graph").add(node)
-              go
-            } else node
-          m.writeValueAsString(wrapped)
+      val head = rows.head
+      val node = nodeOf(head.getStruct(0), rows, nf, Nil, full = true)
+      val wrapped: JsonNode =
+        if (head.isNullAt(3)) node
+        else {
+          val gt = head.getStruct(3)
+          val go = nf.objectNode()
+          go.put("@id", gt.getByte(0) match {
+            case Terms.KIND_IRI => gt.getString(1)
+            case Terms.KIND_BLANK => "_:" + gt.getString(1)
+            case _ => throw new IllegalArgumentException("bad graph name")
+          })
+          go.putArray("@graph").add(node)
+          go
         }
-      }
-      if (!blocks.hasNext) Iterator.empty
-      else new Iterator[String] {
-        private var opened = false
-        private var closed = false
-        def hasNext: Boolean = !closed
-        def next(): String =
-          if (!opened) { opened = true; "[" }
-          else if (blocks.hasNext) {
-            val b = blocks.next()
-            if (blocks.hasNext) b + "," else b
-          } else { closed = true; "]" }
-      }
-    }.write.mode("overwrite").text(path)
-  }
+      blockWriter.writeValueAsString(wrapped)
+    }
+
+  private lazy val blockWriter = new ObjectMapper()
 }

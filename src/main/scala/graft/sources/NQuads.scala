@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession, functions => F}
 import graft.rdf._
 
 /** Distributed N-Quads reader/writer — the line-delimited text format
@@ -87,21 +87,10 @@ object NQuads {
     * default-graph rows serialize as plain triples. A triple-only graph
     * writes as all-default (valid N-Quads AND valid N-Triples). */
   def write(g: RdfGraph, path: String): Unit = {
-    implicit val enc: org.apache.spark.sql.Encoder[String] =
-      org.apache.spark.sql.Encoders.STRING
-    val hasG = g.isQuads
-    g.triples.map { r =>
-      val s = r.getStruct(0); val p = r.getStruct(1); val o = r.getStruct(2)
-      val base =
-        NTriples.fmt(s.getByte(0), s.getString(1), s.getString(2), s.getString(3)) + " " +
-          NTriples.fmt(p.getByte(0), p.getString(1), p.getString(2), p.getString(3)) + " " +
-          NTriples.fmt(o.getByte(0), o.getString(1), o.getString(2), o.getString(3))
-      val gTerm = if (hasG && !r.isNullAt(3)) {
-        val gt = r.getStruct(3)
-        " " + NTriples.fmt(gt.getByte(0), gt.getString(1),
-          gt.getString(2), gt.getString(3))
-      } else ""
-      base + gTerm + " ."
-    }.write.mode("overwrite").text(path)
+    // concat_ws skips the NULL text of a default-graph row's g
+    val terms = Seq("s", "p", "o") ++ (if (g.isQuads) Seq("g") else Nil)
+    g.triples.select(F.concat_ws(" ",
+      terms.map(c => Terms.ntText(F.col(c))) :+ F.lit("."): _*))
+      .write.mode("overwrite").text(path)
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, functions => F}
+import org.apache.spark.sql.{Row, SparkSession}
 import graft.rdf._
 
 /** Distributed N-Triples reader/writer.
@@ -58,7 +58,7 @@ object NTriples {
     * UCHAR escape cannot smuggle in a space, a '>', a backslash, … that
     * the grammar forbids raw (REC N-Triples §2.1 — IRIREF excludes
     * #x00-#x20 and `<>"{}|^\`` plus '\' in either form). And since
-    * [[fmt]] writes IRIs raw, accepting ` ` here would emit an IRI
+    * [[write]] writes IRIs raw, accepting ` ` here would emit an IRI
     * the reader itself rejects — a broken round trip. */
   private def checkedIriCp(cp: Int, line: String): Int = {
     require(cp > 0x20 && "<>\"{}|^`\\".indexOf(cp) < 0,
@@ -147,7 +147,7 @@ object NTriples {
           } else { sb += s.charAt(i); i += 1 }
         }
         val lex = sb.toString
-        var next = i + 1
+        val next = i + 1
         if (next < s.length && s.charAt(next) == '@') {
           var end = next + 1
           while (end < s.length && { val c = s.charAt(end)
@@ -258,30 +258,10 @@ object NTriples {
     RdfGraph(df, RdfGraph.defaultPrefixes)
   }
 
-  private[sources] def fmt(kind: Byte, v: String, dt: String, lang: String): String =
-    kind match {
-      case Terms.KIND_IRI => s"<$v>"
-      case Terms.KIND_BLANK => s"_:$v"
-      case Terms.KIND_TRIPLE => Terms.unpackString(v).n3()
-      case _ => Lit(v, dt, lang).n3()
-    }
-
-  /** Distributed N-Triples sink (one line per triple). N-Triples has no
-    * quad syntax, so a quad store writes its DEFAULT graph only — the
-    * same boundary as the Turtle serializer. */
-  def write(g: RdfGraph, path: String): Unit = {
-    implicit val enc: org.apache.spark.sql.Encoder[String] =
-      org.apache.spark.sql.Encoders.STRING
-    val base =
-      if (g.isQuads)
-        g.triples.where(org.apache.spark.sql.functions.col("g").isNull)
-          .select("s", "p", "o")
-      else g.triples
-    base.map { r =>
-      val s = r.getStruct(0); val p = r.getStruct(1); val o = r.getStruct(2)
-      fmt(s.getByte(0), s.getString(1), s.getString(2), s.getString(3)) + " " +
-        fmt(p.getByte(0), p.getString(1), p.getString(2), p.getString(3)) + " " +
-        fmt(o.getByte(0), o.getString(1), o.getString(2), o.getString(3)) + " ."
-    }.write.mode("overwrite").text(path)
-  }
+  /** Distributed N-Triples sink (one line per triple): [[NQuads.write]]
+    * of the default graph, whose lines are N-Triples lines. N-Triples
+    * has no quad syntax, so a quad store writes its DEFAULT graph only
+    * — the same boundary as the Turtle serializer. */
+  def write(g: RdfGraph, path: String): Unit =
+    NQuads.write(RdfGraph(g.defaultGraph, g.prefixes), path)
 }

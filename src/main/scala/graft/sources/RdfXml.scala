@@ -154,7 +154,7 @@ object RdfXml {
     * triples have no RDF/XML syntax and are rejected. A quad store
     * serializes its default graph. */
   def serialize(g: RdfGraph): String = {
-    val rows = defaultGraphOf(g)
+    val rows = g.defaultGraph
       .orderBy("s.value", "p.value", "o.value").collect()
     val sb = new StringBuilder
     sb.append(docOpen(g.prefixes))
@@ -165,45 +165,20 @@ object RdfXml {
     sb.toString
   }
 
-  /** Distributed RDF/XML sink: subjects co-locate via a hash
-    * repartition, rows sort within partitions only, and every part file
-    * is a STANDALONE-VALID document (its own `<rdf:RDF>` wrapper) whose
+  /** Distributed RDF/XML sink over the shared part layout
+    * ([[PartFiles]]) of the default graph: every part file is a
+    * STANDALONE-VALID document (its own `<rdf:RDF>` wrapper) whose
     * graphs union to the store — the same per-part contract as the
     * Turtle and results-format writers, no driver materialization. */
   def write(g: RdfGraph, path: String, numPartitions: Int = 0): Unit = {
-    val F = org.apache.spark.sql.functions
     val prefixes = g.prefixes
-    val base = defaultGraphOf(g)
-    val parts =
-      if (numPartitions > 0) base.repartition(numPartitions, F.col("s"))
-      else base.repartition(F.col("s"))
-    implicit val enc: org.apache.spark.sql.Encoder[String] =
-      org.apache.spark.sql.Encoders.STRING
-    parts.sortWithinPartitions("s", "p", "o")
-      .mapPartitions { it =>
-        val buf = it.buffered
-        val blocks = new Iterator[String] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): String = {
-            val s = buf.head.getStruct(0)
-            val ts = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-            while (buf.hasNext && buf.head.getStruct(0) == s) ts += buf.next()
-            val sb = new StringBuilder
-            appendBlock(sb, s, ts.toSeq, prefixes)
-            sb.toString
-          }
-        }
-        if (blocks.hasNext)
-          Iterator(docOpen(prefixes)) ++ blocks ++ Iterator(docClose)
-        else Iterator.empty
-      }.write.mode("overwrite").text(path)
+    PartFiles.write(g.defaultGraph, path, numPartitions,
+      open = Some(docOpen(prefixes)), close = Some(docClose)) { rows =>
+      val sb = new StringBuilder
+      appendBlock(sb, rows.head.getStruct(0), rows, prefixes)
+      sb.toString
+    }
   }
-
-  private def defaultGraphOf(g: RdfGraph) =
-    if (g.isQuads)
-      g.triples.where(org.apache.spark.sql.functions.col("g").isNull)
-        .select("s", "p", "o")
-    else g.triples
 
   private def docOpen(prefixes: Map[String, String]): String =
     """<?xml version="1.0" encoding="UTF-8"?>""" + "\n<rdf:RDF" +
@@ -512,7 +487,7 @@ object RdfXml {
       val text = new StringBuilder
       var nested: RdfTerm = null
       var sawElement = false
-      var hasPropAttrs = hasPropertyAttributes(r)
+      val hasPropAttrs = hasPropertyAttributes(r)
       val attrObj = if (hasPropAttrs) st.freshBnode() else null
       if (hasPropAttrs) propertyAttributes(r, st, attrObj, base, lang)
       var ev = r.next()

@@ -6,13 +6,15 @@ import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.JsonNodeFactory
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The one codec for the small files stored beside parquet data: the
   * JSON sidecars of the six stored indexes and of [[GraphStore]], plus
   * the store's `_lock` and compaction manifest. Its text [[read]] also
-  * serves the driver-side document parsers (Turtle LOAD, RDF/XML).
+  * serves the driver-side document parsers (Turtle LOAD, RDF/XML), and
+  * [[readParts]] reads a Turtle, TriG or JSON-LD document that is one
+  * file or a directory of part files.
   *
   * IO goes through the directory's Hadoop FileSystem, never java.nio: a
   * 100 TB store lives on HDFS/S3 and its parquet already travels that
@@ -39,11 +41,28 @@ private[graft] object Sidecar {
   /** Text of the file at `p`, or None when there is no such file. */
   def read(conf: Configuration, p: Path): Option[String] = {
     val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), UTF_8)) finally in.close()
-    }
+    if (!fs.exists(p)) None else Some(text(fs, p))
+  }
+
+  /** The text of the file at `path`, or the texts of a directory's
+    * visible files (names not starting with `_` or `.`) in name order:
+    * the parts of a distributed document ([[PartFiles]]), which its
+    * reader folds as one document with one blank-node scope. */
+  def readParts(conf: Configuration, path: String): Seq[String] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val files =
+      if (!fs.getFileStatus(p).isDirectory) Seq(p)
+      else fs.listStatus(p).toSeq
+        .filter { st => val n = st.getPath.getName
+          st.isFile && !n.startsWith("_") && !n.startsWith(".") }
+        .map(_.getPath).sortBy(_.getName)
+    files.map(text(fs, _))
+  }
+
+  private def text(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), UTF_8) finally in.close()
   }
 
   /** Write `text` to `dir/name`. `overwrite = false` is create-exclusive:

@@ -42,27 +42,8 @@ object SparqlResults {
     * `_:label`, quoted triples `<< ... >>`. Backslash, quote, tab,
     * newline, CR escape as Turtle ECHARs (tab MUST escape — it is the
     * field separator). Unbound → empty field. */
-  private def tsvTerm(t: Column): Column = {
-    def esc(v: Column): Column = {
-      // literal (non-regex) replacements; backslash first
-      val a = F.regexp_replace(v, "\\\\", "\\\\\\\\")
-      val b = F.regexp_replace(a, "\"", "\\\\\"")
-      val c = F.regexp_replace(b, "\t", "\\\\t")
-      val d = F.regexp_replace(c, "\n", "\\\\n")
-      F.regexp_replace(d, "\r", "\\\\r")
-    }
-    val v = Terms.value(t)
-    F.when(t.isNull, F.lit(""))
-      .when(Terms.isIri(t), F.concat(F.lit("<"), v, F.lit(">")))
-      .when(Terms.isBlank(t), F.concat(F.lit("_:"), v))
-      .when(Terms.isQuoted(t), quotedText(t))
-      .otherwise(F.concat(
-        F.lit("\""), esc(v), F.lit("\""),
-        F.when(Terms.lang(t).isNotNull, F.concat(F.lit("@"), Terms.lang(t)))
-          .when(Terms.dt(t).isNotNull && Terms.dt(t) =!= XSD.string,
-            F.concat(F.lit("^^<"), Terms.dt(t), F.lit(">")))
-          .otherwise(F.lit(""))))
-  }
+  private def tsvTerm(t: Column): Column =
+    F.when(t.isNull, F.lit("")).otherwise(Terms.ntText(t))
 
   /** CSV per the REC: the term's LEXICAL form only — IRIs bare, no
     * quotes/datatype/lang on literals, blank nodes `_:label` (quoted
@@ -72,21 +53,12 @@ object SparqlResults {
   private def csvTerm(t: Column): Column = {
     val raw = F.when(t.isNull, F.lit(""))
       .when(Terms.isBlank(t), F.concat(F.lit("_:"), Terms.value(t)))
-      .when(Terms.isQuoted(t), quotedText(t))
+      .when(Terms.isQuoted(t), Terms.quotedText(t))
       .otherwise(Terms.value(t)) // IRI and literal: bare lexical form
     F.when(raw.rlike("[\",\n\r]"),
       F.concat(F.lit("\""), F.regexp_replace(raw, "\"", "\"\""), F.lit("\"")))
       .otherwise(raw)
   }
-
-  /** Exact recursive Turtle-star text of a quoted-triple term — ECHAR
-    * escapes on component literals (a raw tab would split a TSV field),
-    * unlimited nesting; the display-oriented `Terms.quotedN3` guarantees
-    * neither. */
-  private def quotedText(t: Column): Column =
-    graft.expressions.ColumnBridge.column(
-      graft.expressions.QuotedN3Text(
-        graft.expressions.ColumnBridge.expression(Terms.value(t))))
 
   private def vars(df: DataFrame): Seq[String] = df.columns.toSeq
 

@@ -1,8 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import graft.rdf._
-import graft.sparql.{Parser => SparqlParser}
 import graft.sparql.Ast._
 
 /** TriG reader/writer — the Turtle of quad stores (W3C TriG: Turtle
@@ -53,30 +52,29 @@ object Trig {
       parseWhole(trigDoc, text)
   }
 
+  /** The statements of one document, parsed by `p` (whose prefix
+    * declarations carry over to the next document it parses). */
+  private def statements(p: TrigParser, doc: String)
+      : Seq[(RdfTerm, RdfTerm, RdfTerm, Option[RdfTerm])] =
+    p.parseTrigDoc(doc).map { case (tp, g) =>
+      (Turtle.nodeTerm(tp.s, "TriG"), Turtle.verbTerm(tp, "TriG"),
+        Turtle.nodeTerm(tp.o, "TriG"), g)
+    }
+
   /** Driver-side parse to a quad list (None = default graph) — the
     * term-level view the conformance harness compares against N-Quads
     * expected files; [[parse]] wraps it into a Spark-backed store. */
   def parseQuads(text: String,
       extraPrefixes: Map[String, String] = Map.empty)
-      : Seq[(RdfTerm, RdfTerm, RdfTerm, Option[RdfTerm])] = {
-    val p = new TrigParser(RdfGraph.defaultPrefixes ++ extraPrefixes)
-    p.parseTrigDoc(text).map { case (tp, g) =>
-      (Turtle.nodeTerm(tp.s, "TriG"), Turtle.verbTerm(tp, "TriG"),
-        Turtle.nodeTerm(tp.o, "TriG"), g)
-    }
-  }
+      : Seq[(RdfTerm, RdfTerm, RdfTerm, Option[RdfTerm])] =
+    statements(new TrigParser(RdfGraph.defaultPrefixes ++ extraPrefixes), text)
 
   /** Parse a TriG document into a QUAD store (set semantics; g null =
     * default graph). */
   def parse(text: String, spark: SparkSession,
       extraPrefixes: Map[String, String] = Map.empty): RdfGraph = {
     val p = new TrigParser(RdfGraph.defaultPrefixes ++ extraPrefixes)
-    val patterns = p.parseTrigDoc(text)
-    val quads = patterns.map { case (tp, g) =>
-      (Turtle.nodeTerm(tp.s, "TriG"), Turtle.verbTerm(tp, "TriG"),
-        Turtle.nodeTerm(tp.o, "TriG"), g)
-    }
-    RdfGraph.fromQuads(spark, quads, p.declaredPrefixes)
+    RdfGraph.fromQuads(spark, statements(p, text), p.declaredPrefixes)
   }
 
   /** Serialize to TriG text: default graph as bare statements, one
@@ -86,27 +84,19 @@ object Trig {
     * [[NQuads.write]] (line-oriented). A triple-only graph writes as
     * pure Turtle (valid TriG). */
   def serialize(g: RdfGraph): String = {
-    val sb = new StringBuilder
-    val prefixOrder = g.prefixes.toSeq.sortBy(_._1)
-    prefixOrder.foreach { case (p, ns) => sb.append(s"@prefix $p: <$ns> .\n") }
-    if (prefixOrder.nonEmpty) sb.append("\n")
-    def fmt(r: org.apache.spark.sql.Row): String =
-      Turtle.fmtTerm(r, g.prefixes)
+    val sb = new StringBuilder(header(g.prefixes))
+    if (sb.nonEmpty) sb.append("\n\n")
+    def fmt(r: Row): String = Turtle.fmtTerm(r, g.prefixes)
+    val (named, dflt) = g.triples.orderBy("s.value", "p.value", "o.value")
+      .collect().partition(r => g.isQuads && !r.isNullAt(3))
 
-    val rows =
-      if (g.isQuads) g.triples.orderBy("s.value", "p.value", "o.value").collect()
-      else g.triples.orderBy("s.value", "p.value", "o.value").collect()
-        .map(r => org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2), null))
-    val (named, dflt) = rows.partition(r => !r.isNullAt(3))
-
-    def emit(ts: Array[org.apache.spark.sql.Row], indent: String): Unit =
+    def emit(ts: Array[Row], indent: String): Unit =
       ts.groupBy(r => fmt(r.getStruct(0))).toSeq.sortBy(_._1).foreach {
         case (subj, grp) =>
-          val body = grp
-            .sortBy(r => (r.getStruct(1).getString(1), r.getStruct(2).getString(1)))
-            .map(r => s"$indent  ${fmt(r.getStruct(1))} ${fmt(r.getStruct(2))}")
-            .mkString(" ;\n")
-          sb.append(s"$indent$subj\n$body .\n")
+          subjectBlock(sb, indent, subj, grp.toSeq
+            .sortBy(r => (r.getStruct(1).getString(1), r.getStruct(2).getString(1))),
+            g.prefixes)
+          sb.append('\n')
       }
 
     emit(dflt, "")
@@ -120,91 +110,60 @@ object Trig {
     sb.toString
   }
 
-  /** Distributed TriG sink, the quad-store analogue of [[Turtle.write]]:
-    * (graph, subject)-grouped blocks streamed per-partition under a
-    * shared `@prefix` header. Default-graph triples write as bare
-    * subject blocks; named-graph triples write one `<label> { … }` block
-    * per subject group — TriG 1.1 permits the same graph label in any
-    * number of graph statements (their contents union), and Turtle's
-    * re-declared-prefix / re-opened-subject allowances carry over, so
-    * the part files concatenate to the same store with no global sort
-    * and no driver materialization. */
-  def write(g: RdfGraph, path: String, numPartitions: Int = 0): Unit = {
-    val prefixes = g.prefixes
-    val header = prefixes.toSeq.sortBy(_._1)
+  /** The `@prefix` lines of `prefixes`, in prefix order. */
+  private def header(prefixes: Map[String, String]): String =
+    prefixes.toSeq.sortBy(_._1)
       .map { case (p, ns) => s"@prefix $p: <$ns> ." }.mkString("\n")
-    val F = org.apache.spark.sql.functions
-    val base =
-      if (g.isQuads) g.triples.select("g", "s", "p", "o")
-      else g.triples.select(F.lit(null).cast(graft.rdf.Terms.termType).as("g"),
-        F.col("s"), F.col("p"), F.col("o"))
-    val parts =
-      if (numPartitions > 0) base.repartition(numPartitions, F.col("g"), F.col("s"))
-      else base.repartition(F.col("g"), F.col("s"))
-    implicit val enc: org.apache.spark.sql.Encoder[String] =
-      org.apache.spark.sql.Encoders.STRING
-    parts.sortWithinPartitions("g", "s", "p", "o")
-      .mapPartitions { it =>
-        val buf = it.buffered
-        val blocks = new Iterator[String] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): String = {
-            val head = buf.head
-            val gTerm = if (head.isNullAt(0)) null else head.getStruct(0)
-            val s = head.getStruct(1)
-            val named = gTerm != null
-            val indent = if (named) "  " else ""
-            val sb = new StringBuilder
-            if (named)
-              sb.append(Turtle.fmtTerm(gTerm, prefixes)).append(" {\n")
-            sb.append(indent).append(Turtle.fmtTerm(s, prefixes)).append('\n')
-            var first = true
-            def sameGroup: Boolean = buf.hasNext && {
-              val r = buf.head
-              (if (r.isNullAt(0)) null else r.getStruct(0)) == gTerm &&
-                r.getStruct(1) == s
-            }
-            while (sameGroup) {
-              val r = buf.next()
-              if (!first) sb.append(" ;\n")
-              sb.append(indent).append("  ")
-                .append(Turtle.fmtTerm(r.getStruct(2), prefixes))
-                .append(' ').append(Turtle.fmtTerm(r.getStruct(3), prefixes))
-              first = false
-            }
-            sb.append(" .")
-            if (named) sb.append("\n}")
-            sb.toString
-          }
-        }
-        if (blocks.hasNext && header.nonEmpty) Iterator(header) ++ blocks
-        else blocks
-      }.write.mode("overwrite").text(path)
+
+  /** One subject's statements: the subject, then `p o` pairs joined by
+    * ` ;`, closed by ` .`, each line under `indent`. */
+  private def subjectBlock(sb: StringBuilder, indent: String, subj: String,
+      rows: Seq[Row], prefixes: Map[String, String]): StringBuilder = {
+    sb.append(indent).append(subj).append('\n')
+    var first = true
+    rows.foreach { r =>
+      if (!first) sb.append(" ;\n")
+      sb.append(indent).append("  ")
+        .append(Turtle.fmtTerm(r.getStruct(1), prefixes))
+        .append(' ').append(Turtle.fmtTerm(r.getStruct(2), prefixes))
+      first = false
+    }
+    sb.append(" .")
   }
 
-  /** Read a [[write]]-produced directory back into a quad store: each
-    * part file is standalone TriG; repeated graph labels across files
-    * union (set semantics at load). */
+  /** Distributed TriG sink over the shared part layout ([[PartFiles]]):
+    * (graph, subject)-grouped blocks under a shared `@prefix` header.
+    * Default-graph triples write as bare subject blocks; named-graph
+    * triples write one `<label> { … }` block per subject group — TriG
+    * 1.1 permits the same graph label in any number of graph statements
+    * (their contents union), and Turtle's re-declared-prefix /
+    * re-opened-subject allowances carry over, so the part files
+    * concatenate to the same store. */
+  def write(g: RdfGraph, path: String, numPartitions: Int = 0): Unit = {
+    val prefixes = g.prefixes
+    PartFiles.write(g.triples, path, numPartitions,
+      open = Some(header(prefixes)).filter(_.nonEmpty)) { rows =>
+      val head = rows.head
+      val sb = new StringBuilder
+      val subj = Turtle.fmtTerm(head.getStruct(0), prefixes)
+      if (head.isNullAt(3)) subjectBlock(sb, "", subj, rows, prefixes)
+      else {
+        sb.append(Turtle.fmtTerm(head.getStruct(3), prefixes)).append(" {\n")
+        subjectBlock(sb, "  ", subj, rows, prefixes).append("\n}")
+      }
+      sb.toString
+    }
+  }
+
+  /** Read a TriG file, or a [[write]]-produced directory of part
+    * files, into a quad store: the parts fold in name order as one
+    * document ([[Sidecar.readParts]]); repeated graph labels union (set
+    * semantics at load). */
   def read(spark: SparkSession, path: String,
       extraPrefixes: Map[String, String] = Map.empty): RdfGraph = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // concatenation semantics in name-sorted order — see Turtle.read
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .sortBy(_.getPath.getName)
     val p = new TrigParser(RdfGraph.defaultPrefixes ++ extraPrefixes)
-    val quads = files.flatMap { st =>
-      val in = fs.open(st.getPath)
-      val doc =
-        try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      p.parseTrigDoc(doc).map { case (tp, gl) =>
-        (Turtle.nodeTerm(tp.s, "TriG"), Turtle.verbTerm(tp, "TriG"),
-          Turtle.nodeTerm(tp.o, "TriG"), gl)
-      }
-    }
+    val quads = Sidecar.readParts(spark.sparkContext.hadoopConfiguration, path)
+      .flatMap(statements(p, _))
     RdfGraph.fromQuads(spark, quads, p.declaredPrefixes)
   }
 }

@@ -102,16 +102,20 @@ object Turtle {
           s"property path not allowed in $format")
     }
 
+  /** The statements of one document, parsed by `p` (whose prefix
+    * declarations carry over to the next document it parses). */
+  private def statements(p: TurtleParser, doc: String)
+      : Seq[(RdfTerm, RdfTerm, RdfTerm)] =
+    p.parseDoc(doc).map { tp =>
+      (nodeTerm(tp.s, "Turtle"), verbTerm(tp, "Turtle"),
+        nodeTerm(tp.o, "Turtle"))
+    }
+
   /** Parse a Turtle document into an RdfGraph (set semantics applied). */
   def parse(text: String, spark: SparkSession,
       extraPrefixes: Map[String, String] = Map.empty): RdfGraph = {
     val p = new TurtleParser(RdfGraph.defaultPrefixes ++ extraPrefixes)
-    val patterns = p.parseDoc(text)
-    val triples = patterns.map { tp =>
-      (nodeTerm(tp.s, "Turtle"), verbTerm(tp, "Turtle"),
-        nodeTerm(tp.o, "Turtle"))
-    }
-    RdfGraph.fromTriples(spark, triples, p.declaredPrefixes)
+    RdfGraph.fromTriples(spark, statements(p, text), p.declaredPrefixes)
   }
 
   /** Driver-side parse to a plain triple Seq — for small CONTROL
@@ -121,16 +125,11 @@ object Turtle {
     * data destined for querying should go through [[parse]] instead. */
   def parseTriples(text: String,
       extraPrefixes: Map[String, String] = Map.empty)
-      : Seq[(RdfTerm, RdfTerm, RdfTerm)] = {
-    val p = new TurtleParser(RdfGraph.defaultPrefixes ++ extraPrefixes)
-    p.parseDoc(text).map { tp =>
-      (nodeTerm(tp.s, "Turtle"), verbTerm(tp, "Turtle"),
-        nodeTerm(tp.o, "Turtle"))
-    }
-  }
+      : Seq[(RdfTerm, RdfTerm, RdfTerm)] =
+    statements(new TurtleParser(RdfGraph.defaultPrefixes ++ extraPrefixes), text)
 
   /** One term struct → its Turtle/TriG token, QName-shortened against
-    * `prefixes` (shared by [[serialize]] and [[Trig.serialize]]). */
+    * `prefixes` (the [[Trig]] serializer and writer). */
   private[sources] def fmtTerm(r: org.apache.spark.sql.Row,
       prefixes: Map[String, String]): String = {
     val kind = r.getByte(0); val v = r.getString(1)
@@ -152,114 +151,43 @@ object Turtle {
   }
 
   /** Serialize a graph to Turtle text, grouped by subject, prefix-aware
-    * (ttl, gastrodon/__init__.py:811-819). Driver-side display/export
-    * path with a TOTAL subject order: collects the graph — for
-    * distributed export use [[write]] (Turtle part files) or
+    * (ttl, gastrodon/__init__.py:811-819): the default graph's TriG
+    * text ([[Trig.serialize]]). Turtle has no quad syntax, so a quad
+    * store serializes its DEFAULT graph (merging named graphs in would
+    * fabricate triples the default graph doesn't assert). Driver-side
+    * display/export path with a TOTAL subject order: collects the graph
+    * — for distributed export use [[write]] (Turtle part files) or
     * NTriples.write (line-oriented). */
-  def serialize(g: RdfGraph): String = {
-    val sb = new StringBuilder
-    val prefixOrder = g.prefixes.toSeq.sortBy(_._1)
-    prefixOrder.foreach { case (p, ns) => sb.append(s"@prefix $p: <$ns> .\n") }
-    if (prefixOrder.nonEmpty) sb.append("\n")
-    def fmt(r: org.apache.spark.sql.Row): String = fmtTerm(r, g.prefixes)
-    // Turtle has no quad syntax: a quad store serializes its DEFAULT
-    // graph (merging named graphs in would fabricate triples the
-    // default graph doesn't assert)
-    val base =
-      if (g.isQuads)
-        g.triples.where(org.apache.spark.sql.functions.col("g").isNull)
-      else g.triples
-    val rows = base
-      .orderBy("s.value", "p.value", "o.value").collect()
-    rows.groupBy(r => fmt(r.getStruct(0))).toSeq.sortBy(_._1).foreach {
-      case (subj, ts) =>
-        val body = ts.sortBy(r => (r.getStruct(1).getString(1), r.getStruct(2).getString(1)))
-          .map(r => s"  ${fmt(r.getStruct(1))} ${fmt(r.getStruct(2))}")
-          .mkString(" ;\n")
-        sb.append(s"$subj\n$body .\n")
-    }
-    sb.toString
-  }
+  def serialize(g: RdfGraph): String = Trig.serialize(defaultGraph(g))
 
-  /** Distributed Turtle sink: subject-grouped blocks streamed
-    * per-partition under a shared `@prefix` header. Each part file is
+  /** Distributed Turtle sink: [[Trig.write]] of the default graph, so
+    * subject-grouped blocks stream per partition under a shared
+    * `@prefix` header ([[PartFiles]]). Each part file is
     * standalone-valid Turtle, and the directory concatenates to the same
     * graph — Turtle permits re-declared prefixes and re-opened subjects,
-    * so splitting a graph across files loses nothing. Subjects co-locate
-    * via a hash repartition and rows sort WITHIN partitions only, so the
-    * writer emits one subject block at a time with no driver
-    * materialization and no global sort — the scale path the
+    * so splitting a graph across files loses nothing. The scale path the
     * display-oriented [[serialize]] (which collects and totally orders)
-    * is not. A quad store writes its default graph (Turtle has no quad
-    * syntax); use [[Trig.write]] for the full store. */
-  def write(g: RdfGraph, path: String, numPartitions: Int = 0): Unit = {
-    val prefixes = g.prefixes
-    val header = prefixes.toSeq.sortBy(_._1)
-      .map { case (p, ns) => s"@prefix $p: <$ns> ." }.mkString("\n")
-    val F = org.apache.spark.sql.functions
-    val base =
-      if (g.isQuads) g.triples.where(F.col("g").isNull).select("s", "p", "o")
-      else g.triples
-    val parts =
-      if (numPartitions > 0) base.repartition(numPartitions, F.col("s"))
-      else base.repartition(F.col("s"))
-    implicit val enc: org.apache.spark.sql.Encoder[String] =
-      org.apache.spark.sql.Encoders.STRING
-    parts.sortWithinPartitions("s", "p", "o")
-      .mapPartitions { it =>
-        val buf = it.buffered
-        val blocks = new Iterator[String] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): String = {
-            val s = buf.head.getStruct(0)
-            val sb = new StringBuilder(fmtTerm(s, prefixes)).append('\n')
-            var first = true
-            while (buf.hasNext && buf.head.getStruct(0) == s) {
-              val r = buf.next()
-              if (!first) sb.append(" ;\n")
-              sb.append("  ").append(fmtTerm(r.getStruct(1), prefixes))
-                .append(' ').append(fmtTerm(r.getStruct(2), prefixes))
-              first = false
-            }
-            sb.append(" .").toString
-          }
-        }
-        if (blocks.hasNext && header.nonEmpty) Iterator(header) ++ blocks
-        else blocks
-      }.write.mode("overwrite").text(path)
-  }
+    * is not. Use [[Trig.write]] for a quad store's named graphs. */
+  def write(g: RdfGraph, path: String, numPartitions: Int = 0): Unit =
+    Trig.write(defaultGraph(g), path, numPartitions)
 
-  /** Read a [[write]]-produced directory (or any directory of Turtle
-    * part files) back into an RdfGraph with CONCATENATION semantics:
-    * one logical document in name-sorted file order (directives and
-    * blank-node labels scope across parts — what the writer's split
-    * requires), set semantics applied. File contents collect to the
-    * driver one file at a time (Turtle is not line-splittable); bulk
-    * loads at scale should use the N-Triples reader instead. */
+  private def defaultGraph(g: RdfGraph): RdfGraph =
+    RdfGraph(g.defaultGraph, g.prefixes)
+
+  /** Read a Turtle file, or a [[write]]-produced directory of part
+    * files, into an RdfGraph with CONCATENATION semantics: the parts
+    * are one logical document in name order ([[Sidecar.readParts]]), so
+    * directives and blank-node labels scope across parts — a bnode
+    * written as subject in one part and object in another stays one
+    * node. Set semantics applied. To read unrelated documents, parse
+    * them individually. Turtle is not line-splittable, so the text
+    * collects to the driver; bulk loads at scale should use the
+    * N-Triples reader instead. */
   def read(spark: SparkSession, path: String,
       extraPrefixes: Map[String, String] = Map.empty): RdfGraph = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // CONCATENATION semantics, matching the writer's contract ("the
-    // directory concatenates to the same graph"): ONE document in
-    // name-sorted file order, so directives and blank-node labels scope
-    // across part files deterministically — a bnode written as subject
-    // in one part and object in another stays one node. To read
-    // unrelated documents, parse them individually.
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .sortBy(_.getPath.getName)
-    val docs = files.map { st =>
-      val in = fs.open(st.getPath)
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    }
     val p = new TurtleParser(RdfGraph.defaultPrefixes ++ extraPrefixes)
-    val triples = docs.flatMap(doc => p.parseDoc(doc).map { tp =>
-      (nodeTerm(tp.s, "Turtle"), verbTerm(tp, "Turtle"),
-        nodeTerm(tp.o, "Turtle"))
-    })
+    val triples = Sidecar.readParts(spark.sparkContext.hadoopConfiguration, path)
+      .flatMap(statements(p, _))
     RdfGraph.fromTriples(spark, triples, p.declaredPrefixes)
   }
 }

@@ -549,7 +549,7 @@ private[sources] object TsvTerm {
     }
     require(i < s.length, s"unterminated literal in TSV field: $s")
     val lex = sb.toString
-    var next = i + 1
+    val next = i + 1
     if (next < s.length && s.charAt(next) == '@') {
       var end = next + 1
       while (end < s.length && (s.charAt(end).isLetterOrDigit ||

@@ -132,8 +132,10 @@ object ComposedForms {
 
   // --- the curation text signals (TextAnalysis over TextSignals)
 
-  /** Reference form of `TextAnalysis.tokenCount`. */
-  def tokenCount(text: Column): Column = F.size(TextAnalysis.tokens(text))
+  /** Reference form of `TextAnalysis.tokenCount` (NULL for a NULL text,
+    * which `size` alone counts as -1 outside ANSI mode). */
+  def tokenCount(text: Column): Column =
+    F.when(text.isNotNull, F.size(TextAnalysis.tokens(text)))
 
   /** Reference form of `TextAnalysis.avgWordLen`. */
   def avgWordLen(text: Column): Column = {

@@ -62,6 +62,26 @@ class CorpusReportSpec extends SparkSpec {
     assert("Exchange hashpartitioning".r.findAllIn(plan).length <= 1, plan)
   }
 
+  test("a NULL text adds no tokens, in legacy and ANSI mode") {
+    val key = "spark.sql.ansi.enabled"
+    val before = spark.conf.get(key)
+    for (ansi <- Seq(false, true)) {
+      spark.conf.set(key, ansi.toString)
+      try {
+        val df = Seq((1L, "one two three"), (2L, null: String))
+          .toDF("doc_id", "text")
+        val r = report(df)
+        assert(r("total_tokens") == 3.0, s"ansi=$ansi: $r")
+        assert(r("median_doc_tokens") == 3.0, s"ansi=$ansi: $r")
+        assert(r("p90_doc_tokens") == 3.0, s"ansi=$ansi: $r")
+        assert(r("n_docs") == 2.0, s"ansi=$ansi: $r")
+        val bpe = df.select(TextAnalysis.bpeTokenCount(F.col("text")))
+          .collect().map(row => Option(row.get(0)))
+        assert(bpe.toSeq == Seq(Some(3), None), s"ansi=$ansi")
+      } finally spark.conf.set(key, before)
+    }
+  }
+
   test("identical report under any input partitioning") {
     val a = report(docs)
     val b = report(docs.repartition(7))

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{functions => F}
 import graft.rdf._
-import graft.sources.{Trig, Turtle}
+import graft.sources.{JsonLd, Trig, Turtle}
 
 /** Distributed Turtle/TriG writers ([[Turtle.write]] / [[Trig.write]]):
   * per-partition subject-grouped blocks under a shared prefix header,
@@ -119,6 +119,27 @@ class DistributedWriterSpec extends SparkSpec {
       (t(0), t(1), t(2), t(3))
     }.toSet
     assert(quadSet(back) === quadSet(store))
+  }
+
+  test("each reader takes a single file, even one named like a hidden part") {
+    // a directory listing skips `_`/`.` names; a file given by path is read
+    val dir = java.nio.file.Files.createTempDirectory("single")
+    def file(name: String, text: String): String = {
+      val f = dir.resolve(name)
+      java.nio.file.Files.write(f, text.getBytes("UTF-8"))
+      f.toString
+    }
+    val expected = Set[(RdfTerm, RdfTerm, RdfTerm)](
+      (Iri("http://example.com/a"), Iri("http://example.com/p"), Lit.plain("x")),
+      (Blank("b"), Iri("http://example.com/p"), Iri("http://example.com/a")))
+    val ttl = "@prefix ex: <http://example.com/> .\n" +
+      "ex:a ex:p \"x\" .\n_:b ex:p ex:a .\n"
+    assert(tripleSet(Turtle.read(spark, file("_data.ttl", ttl))) === expected)
+    assert(tripleSet(Trig.read(spark, file(".data.trig", ttl))) === expected)
+    val json = """[{"@id": "http://example.com/a",
+      "http://example.com/p": "x"},
+      {"@id": "_:b", "http://example.com/p": {"@id": "http://example.com/a"}}]"""
+    assert(tripleSet(JsonLd.read(spark, file("_data.jsonld", json))) === expected)
   }
 
   test("Turtle.write of a quad store exports only the default graph") {

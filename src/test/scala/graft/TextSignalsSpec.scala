@@ -80,13 +80,13 @@ class TextSignalsSpec extends SparkSpec {
     }
   }
 
-  test("a NULL text keeps the composed results: -1 or NULL tokens, 0.75, und") {
+  test("a NULL text gives NULL tokens in both modes, 0.75, und") {
     for (ansi <- Seq(false, true)) withAnsi(ansi) {
       val r = Seq(null: String).toDF("text").select(
         TextAnalysis.tokenCount(F.col("text")),
         TextAnalysis.qualityScore(F.col("text")),
         TextAnalysis.langId(F.col("text"))).head()
-      assert((if (ansi) r.isNullAt(0) else r.getInt(0) == -1), s"ansi=$ansi: $r")
+      assert(r.isNullAt(0), s"ansi=$ansi: $r")
       assert(r.getDouble(1) == 0.75 && r.getString(2) == "und", s"ansi=$ansi: $r")
     }
   }
