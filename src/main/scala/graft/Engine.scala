@@ -81,7 +81,7 @@ class Engine(initial: RdfGraph) {
       // failed validation throws BEFORE the cache is populated
       try parsed.query match {
         case s: SelectQuery => Validate.select(s)
-        case c: ConstructQuery => Validate.construct(c.template, c.where)
+        case c: ConstructQuery => Validate.construct(c.where)
         case a: AskQuery => Validate.where(a.where)
         case d: DescribeQuery => d.where.foreach(Validate.where)
       } catch {

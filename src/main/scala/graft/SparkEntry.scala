@@ -263,6 +263,9 @@ object SparkEntry {
     "q_path_plus_bound" -> sel("customer", "nation", "region")(
       """SELECT ?name { ?c gp:c_custkey 42 .
            ?c (gp:c_nation_ref|gp:n_region_ref)+ ?x . ?x gp:n_name|gp:r_name ?name }"""),
+    // both endpoints free: the full pair closure by path doubling
+    "q_path_plus_free" -> sel("orders", "customer", "nation", "region")(
+      "SELECT ?a ?b { ?a (gp:o_cust_ref|gp:c_nation_ref|gp:n_region_ref)+ ?b }"),
 
     // --- CONSTRUCT / UPDATE (SURVEY §2A construct, §2C)
     "q_construct" -> ((s, dir) => {
@@ -2617,6 +2620,31 @@ object SparkEntry {
          UNION ALL
          SELECT r_name FROM customer JOIN nation ON c_nationkey = n_nationkey
            JOIN region ON n_regionkey = r_regionkey WHERE c_custkey = 42""",
+    "q_path_plus_free" ->
+      """SELECT 'urn:graft:orders/' || CAST(o_orderkey AS VARCHAR) AS a,
+                'urn:graft:customer/' || CAST(o_custkey AS VARCHAR) AS b
+           FROM orders
+         UNION
+         SELECT 'urn:graft:orders/' || CAST(o_orderkey AS VARCHAR),
+                'urn:graft:nation/' || CAST(c_nationkey AS VARCHAR)
+           FROM orders JOIN customer ON o_custkey = c_custkey
+         UNION
+         SELECT 'urn:graft:orders/' || CAST(o_orderkey AS VARCHAR),
+                'urn:graft:region/' || CAST(n_regionkey AS VARCHAR)
+           FROM orders JOIN customer ON o_custkey = c_custkey
+           JOIN nation ON c_nationkey = n_nationkey
+         UNION
+         SELECT 'urn:graft:customer/' || CAST(c_custkey AS VARCHAR),
+                'urn:graft:nation/' || CAST(c_nationkey AS VARCHAR)
+           FROM customer
+         UNION
+         SELECT 'urn:graft:customer/' || CAST(c_custkey AS VARCHAR),
+                'urn:graft:region/' || CAST(n_regionkey AS VARCHAR)
+           FROM customer JOIN nation ON c_nationkey = n_nationkey
+         UNION
+         SELECT 'urn:graft:nation/' || CAST(n_nationkey AS VARCHAR),
+                'urn:graft:region/' || CAST(n_regionkey AS VARCHAR)
+           FROM nation""",
     "q_construct" ->
       """SELECT 'urn:graft:customer/' || CAST(c_custkey AS VARCHAR) AS s,
                 'urn:graft:p/in_nation' AS p, n_name AS o

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
-import org.apache.spark.sql.types._
 
 /** Byte-pair-encoding tokenizer: corpus-trained merges
   * (Sennrich et al. 2016) and a native apply/count path — the real

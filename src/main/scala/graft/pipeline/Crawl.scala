@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
-import org.apache.spark.sql.types._
 
 import graft.sources.Warc
 

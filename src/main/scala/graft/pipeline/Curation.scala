@@ -207,13 +207,9 @@ object Curation {
     val fuzzy = nearDupJaccard match {
       case Some(t) =>
         // near-dup groups among the exact-dedup survivors; each group's
-        // min id is the keeper, every other member anti-joins away
-        val pairs = Dedup.minhashDedupPairs(deduped, id, text,
-          threshold = t, k = nearDupK)
-        val losers = Dedup.dedupGroups(pairs)
-          .where(F.col("grp") =!= F.col("rid"))
-          .select(F.col("rid").as(id))
-        deduped.join(losers, Seq(id), "left_anti")
+        // min id is the keeper
+        Dedup.dropGroupNonMins(deduped, id,
+          Dedup.minhashDedupPairs(deduped, id, text, threshold = t, k = nearDupK))
       case None => deduped
     }
     val semantic = semanticCosine match {
@@ -277,10 +273,7 @@ object Curation {
     val pairs = Dedup.hammingNearDupPairs(
       textDeduped.select(F.col(id).as("rid"), F.col("__sh").as("sh")),
       imageMaxBits, maxBucket)
-    val losers = Dedup.dedupGroups(pairs)
-      .where(F.col("grp") =!= F.col("rid"))
-      .select(F.col("rid").as(id))
-    textDeduped.join(losers, Seq(id), "left_anti").drop("__sh")
+    Dedup.dropGroupNonMins(textDeduped, id, pairs).drop("__sh")
   }
 
   /** Streaming twin of [[curate]] for continuous ingestion (a crawl

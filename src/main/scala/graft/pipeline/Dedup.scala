@@ -586,13 +586,9 @@ object Dedup {
     * not dedup's. */
   def imageDedup(df: DataFrame, id: String, bytes: String,
       kind: String = "dhash", maxBits: Int = 3,
-      maxBucket: Int = 256): DataFrame = {
-    val pairs = imageNearDupPairs(df, id, bytes, kind, maxBits, maxBucket)
-    val losers = dedupGroups(pairs)
-      .where(F.col("grp") =!= F.col("rid"))
-      .select(F.col("rid").as(id))
-    df.join(losers, Seq(id), "left_anti")
-  }
+      maxBucket: Int = 256): DataFrame =
+    dropGroupNonMins(df, id,
+      imageNearDupPairs(df, id, bytes, kind, maxBits, maxBucket))
 
   /** Chunk-level BINARY dedup end to end: [[binaryNearDupPairs]] →
     * connected components → keep each group's smallest id — the blob
@@ -600,14 +596,9 @@ object Dedup {
     * chunks and are kept (they can't be shown near-duplicate). */
   def binaryDedup(df: DataFrame, id: String, bin: String,
       threshold: Double = 0.5, avgBits: Int = 10,
-      maxDocsPerChunk: Int = 256): DataFrame = {
-    val pairs = binaryNearDupPairs(df, id, bin, threshold, avgBits,
-      maxDocsPerChunk)
-    val losers = dedupGroups(pairs)
-      .where(F.col("grp") =!= F.col("rid"))
-      .select(F.col("rid").as(id))
-    df.join(losers, Seq(id), "left_anti")
-  }
+      maxDocsPerChunk: Int = 256): DataFrame =
+    dropGroupNonMins(df, id,
+      binaryNearDupPairs(df, id, bin, threshold, avgBits, maxDocsPerChunk))
 
   /** The banding core shared by [[simhashNearDupPairs]] (text) and
     * [[imageNearDupPairs]] (pixels): pairs within Hamming distance
@@ -752,64 +743,28 @@ object Dedup {
     setJaccardPairs(sh, maxDocsPerChunk, threshold)
   }
 
-  /** Collapse verified near-dup PAIRS into canonical GROUPS: connected
-    * components of the pair graph by iterative min-label propagation.
-    * Returns (rid, grp) for every id appearing in a pair, grp = the
-    * component's smallest id (the canonical representative to keep).
-    *
-    * Scale posture: each round is two joins + a min-aggregate on the id —
-    * neighbor propagation PLUS pointer doubling (inherit the label of
-    * one's current label), so convergence takes O(log diameter) rounds,
-    * not O(diameter) — a chain of 1000 closes in ~10 rounds (PipelineSpec
-    * pins the job count with a listener). Convergence is detected by a
-    * monotone checksum: labels only ever DECREASE, so the per-rid label
-    * sum strictly decreases until the fixpoint — one tiny aggregate per
-    * round replaces the old change-detection join (half the driver-side
-    * jobs). localCheckpoint per round cuts the lineage like the SPARQL
-    * transitive closure; the RDD re-wrap mints fresh attribute ids
-    * (Catalyst union constraint-rewrite limitation, see Compiler.closure). */
+  /** Collapse verified near-dup PAIRS into canonical GROUPS: the
+    * connected components of the pair graph
+    * ([[graft.Fixpoints.components]], min-label propagation with pointer
+    * doubling, O(log diameter) rounds; a chain of 1000 closes in about 10
+    * rounds, which RecallSpec pins with a job listener). Returns
+    * (rid, grp) for every id appearing in a pair, grp = the component's
+    * smallest id (the canonical representative to keep). */
   def dedupGroups(pairs: DataFrame, id1: String = "id1",
-      id2: String = "id2"): DataFrame = {
-    val spark = pairs.sparkSession
-    val edges = pairs.select(F.col(id1).as("a"), F.col(id2).as("b"))
-      .union(pairs.select(F.col(id2).as("a"), F.col(id1).as("b")))
-      .localCheckpoint(false)
-    var labels = edges
-      .select(F.col("a").as("rid"), F.least(F.col("a"), F.col("b")).as("grp"))
-      .groupBy("rid").agg(F.min("grp").as("grp"))
-      .localCheckpoint(true)
-    // strictly-decreasing convergence metric: exact (decimal sum of the
-    // labels) for numeric ids; a 64-bit hash sum otherwise (collision on
-    // a changing round ~2⁻⁶⁴ — documented residual risk for string ids)
-    def checksum(df: DataFrame): java.math.BigDecimal = {
-      val m = df.schema("grp").dataType match {
-        case ByteType | ShortType | IntegerType | LongType =>
-          F.sum(F.col("grp").cast(DecimalType(38, 0)))
-        case _ => F.sum(F.xxhash64(F.col("grp")).cast(DecimalType(38, 0)))
-      }
-      df.agg(F.coalesce(m, F.lit(java.math.BigDecimal.ZERO)
-        .cast(DecimalType(38, 0)))).collect()(0).getDecimal(0)
-    }
-    var prev = checksum(labels)
-    var changed = true
-    var i = 0
-    while (changed && i < 64) {
-      val viaNeighbor = edges.join(labels, edges("b") === labels("rid"))
-        .select(edges("a").as("rid"), F.col("grp"))
-      val viaLabel = labels.alias("x").join(labels.alias("y"),
-          F.col("x.grp") === F.col("y.rid"))
-        .select(F.col("x.rid").as("rid"), F.col("y.grp").as("grp"))
-      val next0 = labels.union(viaNeighbor).union(viaLabel)
-        .groupBy("rid").agg(F.min("grp").as("grp"))
-        .localCheckpoint(true)
-      val next = spark.createDataFrame(next0.rdd, next0.schema)
-      val cur = checksum(next)
-      changed = cur.compareTo(prev) != 0
-      prev = cur
-      labels = next
-      i += 1
-    }
-    labels
+      id2: String = "id2"): DataFrame =
+    graft.Fixpoints.components(
+        pairs.select(F.col(id1).as("a"), F.col(id2).as("b")))
+      .select(F.col("n").as("rid"), F.col("c").as("grp"))
+
+  /** The rows of `df` that survive near-dup `pairs` (over its `id`
+    * column): each connected component ([[dedupGroups]]) keeps its
+    * smallest id, every other member drops. Rows in no pair are kept. */
+  private[pipeline] def dropGroupNonMins(df: DataFrame, id: String,
+      pairs: DataFrame): DataFrame = {
+    val losers = dedupGroups(pairs)
+      .where(F.col("grp") =!= F.col("rid"))
+      .select(F.col("rid").as(id))
+    df.join(losers, Seq(id), "left_anti")
   }
 
   /** Benchmark decontamination: corpus documents sharing at least
@@ -981,13 +936,9 @@ object Dedup {
     * keep-min contract every other dedup stage uses. */
   def semanticDedup(df: DataFrame, id: String, vec: String,
       k: Int = 16, iters: Int = 2, threshold: Double = 0.95,
-      maxCluster: Int = 256): DataFrame = {
-    val pairs = semanticDedupPairs(df, id, vec, k, iters, threshold, maxCluster)
-    val losers = dedupGroups(pairs)
-      .where(F.col("grp") =!= F.col("rid"))
-      .select(F.col("rid").as(id))
-    df.join(losers, Seq(id), "left_anti")
-  }
+      maxCluster: Int = 256): DataFrame =
+    dropGroupNonMins(df, id,
+      semanticDedupPairs(df, id, vec, k, iters, threshold, maxCluster))
 
   /** Digest-keyed diff between two corpus versions — the dataset-update
     * audit ("what changed between v1 and v2?") every refreshed corpus

@@ -36,9 +36,8 @@ object Graphs {
     * the edge list keyed by source, one map-side-combined integer SUM by
     * destination, one left join back onto the node set. The edge list,
     * node set, and out-degree table are computed once and reused;
-    * `localCheckpoint` truncates the growing lineage each round, the
-    * same pattern as the SPARQL transitive-closure loop. `iters` is
-    * fixed (default 5) — curation wants a stable prior, not
+    * `localCheckpoint` truncates the growing lineage each round. `iters`
+    * is fixed (default 5) — curation wants a stable prior, not
     * convergence-to-epsilon, and a fixed count is what a SQL oracle can
     * unroll.
     *

@@ -1,6 +1,7 @@
 package graft.rdf
 
 import org.apache.spark.sql.{DataFrame, functions => F}
+import graft.Fixpoints
 
 /** Forward-chaining RDF reasoning at corpus scale.
   *
@@ -23,49 +24,20 @@ import org.apache.spark.sql.{DataFrame, functions => F}
   * huge but the SCHEMA (the subClassOf / subPropertyOf / domain /
   * range triples) is ontology-sized — thousands of rows, not
   * billions. So the only iterated fixpoints here run on the schema
-  * subset (path-doubling, ⌈log₂ diameter⌉ rounds), and the closed
-  * hierarchies are then applied to the full triple scan as ONE
-  * broadcast join per rule — rule order (7 → 2/3 → 9) makes a single
-  * stratified pass complete, never an instance-sized fixpoint.
-  * sameAs components iterate too, but on the sameAs EDGE set (the
-  * alias pairs), not the corpus, with the same min-label doubling the
-  * dedup family uses (O(log diameter) rounds).
+  * subset ([[graft.Fixpoints.closure]], path doubling, ⌈log₂
+  * diameter⌉ rounds), and the closed hierarchies are then applied to
+  * the full triple scan as ONE broadcast join per rule — rule order
+  * (7 → 2/3 → 9) makes a single stratified pass complete, never an
+  * instance-sized fixpoint. sameAs components iterate too, but on the
+  * sameAs EDGE set (the alias pairs), not the corpus:
+  * [[graft.Fixpoints.components]], the connected-components pass
+  * near-duplicate grouping uses (O(log diameter) rounds).
   */
 object Reasoner {
   import Terms._
 
   private def predIs(iri: String) =
     F.col("p.kind") === KIND_IRI && F.col("p.value") === iri
-
-  /** Transitive closure of a (small) edge set by path doubling:
-    * ⌈log₂ diameter⌉ rounds, localCheckpoint per round to cut lineage,
-    * RDD re-wrap before each union for fresh attribute ids (the
-    * Catalyst union constraint-rewrite limitation the SPARQL path
-    * closure documents — Compiler.closure). Non-reflexive: returns
-    * the original edges plus every multi-hop pair. */
-  private[rdf] def transitiveClosure(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    var closure = edges.select(F.col("a"), F.col("b"))
-      .where(!(F.col("a") <=> F.col("b")))
-      .distinct().localCheckpoint(true)
-    var grew = true
-    var i = 0
-    while (grew && i < 64) {
-      val doubled = closure.alias("x")
-        .join(closure.alias("y"), F.col("x.b") === F.col("y.a"))
-        .select(F.col("x.a").as("a"), F.col("y.b").as("b"))
-      val next0 = doubled.join(closure, Seq("a", "b"), "left_anti")
-        .distinct().localCheckpoint(true)
-      val next = spark.createDataFrame(next0.rdd, next0.schema)
-      grew = !next0.isEmpty
-      if (grew) {
-        val unioned = closure.union(next).localCheckpoint(true)
-        closure = spark.createDataFrame(unioned.rdd, unioned.schema)
-      }
-      i += 1
-    }
-    closure
-  }
 
   /** Materialize the ρdf closure of `g`'s default graph: the input
     * graph plus every triple the rules below entail, set semantics.
@@ -89,11 +61,15 @@ object Reasoner {
   def rdfsClosure(g: RdfGraph): RdfGraph = {
     val triples = g.defaultGraph
 
-    // rdfs5: closed property hierarchy (schema-sized fixpoint).
-    val spStar = transitiveClosure(
-      triples.where(predIs(RDFS.subPropertyOf))
-        .select(F.col("s").as("a"), F.col("o").as("b")))
+    // the (a, b) closure of a hierarchy's `p` edges; asserted self-loops
+    // are dropped, a cycle still derives them
+    def star(from: DataFrame, p: String) = Fixpoints.closure(
+      from.where(predIs(p)).select(F.col("s").as("a"), F.col("o").as("b"))
+        .where(!(F.col("a") <=> F.col("b"))))
       .localCheckpoint(true)
+
+    // rdfs5: closed property hierarchy (schema-sized fixpoint).
+    val spStar = star(triples, RDFS.subPropertyOf)
 
     // rdfs7 over the full instance scan: ONE broadcast join.
     val derived7 = triples
@@ -102,10 +78,7 @@ object Reasoner {
     val base = triples.union(derived7)
 
     // Schema read post-7 (see stratification note above).
-    val scStar = transitiveClosure(
-      base.where(predIs(RDFS.subClassOf))
-        .select(F.col("s").as("a"), F.col("o").as("b")))
-      .localCheckpoint(true)
+    val scStar = star(base, RDFS.subClassOf)
     val dom = base.where(predIs(RDFS.domain))
       .select(F.col("s").as("dp"), F.col("o").as("dc")).distinct()
     val rng = base.where(predIs(RDFS.range))
@@ -152,7 +125,6 @@ object Reasoner {
     * mode this knob exists to remove. */
   def rdfsClosure(g: RdfGraph, rounds: Int): RdfGraph = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val spark = g.spark
     var cur = rdfsClosure(g)
     var prevCount = cur.defaultGraph.count()
     var i = 1
@@ -160,9 +132,7 @@ object Reasoner {
     while (!fixed && i < rounds) {
       // checkpoint between passes: each pass stacks ~6 joins of plan,
       // and the next pass re-reads the whole frame many times
-      val snap0 = cur.triples.localCheckpoint(true)
-      val snap = spark.createDataFrame(snap0.rdd, snap0.schema)
-      val next = rdfsClosure(cur.copy(triples = snap))
+      val next = rdfsClosure(cur.copy(triples = Fixpoints.fresh(cur.triples)))
       val nextCount = next.defaultGraph.count()
       fixed = nextCount == prevCount
       cur = next
@@ -184,49 +154,13 @@ object Reasoner {
     * default graph: one row per non-canonical node, (node term →
     * canonical term), where the canonical representative is the
     * component's LEAST term under the struct order (kind, value, dt,
-    * lang) — deterministic under any partitioning. Min-label
-    * propagation with path doubling (labels only decrease; a monotone
-    * checksum detects the fixpoint — the dedupGroups discipline). */
-  def sameAsMap(g: RdfGraph): DataFrame = {
-    val spark = g.spark
-    val pairs = g.defaultGraph.where(predIs(OWL.sameAs))
-      .where(F.col("o.kind") =!= KIND_LIT)
-      .select(F.col("s").as("a"), F.col("o").as("b"))
-    val edges = pairs
-      .union(pairs.select(F.col("b").as("a"), F.col("a").as("b")))
-      .localCheckpoint(true)
-    var labels = edges
-      .select(F.col("a").as("n"), F.least(F.col("a"), F.col("b")).as("c"))
-      .groupBy("n").agg(F.min("c").as("c"))
-      .localCheckpoint(true)
-    def checksum(df: DataFrame): java.math.BigDecimal =
-      df.agg(F.coalesce(
-        F.sum(F.xxhash64(F.col("c"))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0))),
-        F.lit(java.math.BigDecimal.ZERO)
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .collect()(0).getDecimal(0)
-    var prev = checksum(labels)
-    var changed = true
-    var i = 0
-    while (changed && i < 64) {
-      val viaNeighbor = edges.join(labels, edges("b") === labels("n"))
-        .select(edges("a").as("n"), F.col("c"))
-      val viaLabel = labels.alias("x").join(labels.alias("y"),
-          F.col("x.c") === F.col("y.n"))
-        .select(F.col("x.n").as("n"), F.col("y.c").as("c"))
-      val next0 = labels.union(viaNeighbor).union(viaLabel)
-        .groupBy("n").agg(F.min("c").as("c"))
-        .localCheckpoint(true)
-      val next = spark.createDataFrame(next0.rdd, next0.schema)
-      val cur = checksum(next)
-      changed = cur.compareTo(prev) != 0
-      prev = cur
-      labels = next
-      i += 1
-    }
-    labels.where(!(F.col("n") <=> F.col("c")))
-  }
+    * lang) — deterministic under any partitioning. The components are
+    * [[graft.Fixpoints.components]] over the non-literal sameAs pairs. */
+  def sameAsMap(g: RdfGraph): DataFrame =
+    Fixpoints.components(g.defaultGraph.where(predIs(OWL.sameAs))
+        .where(F.col("o.kind") =!= KIND_LIT)
+        .select(F.col("s").as("a"), F.col("o").as("b")))
+      .where(!(F.col("n") <=> F.col("c")))
 
   /** owl:sameAs smushing: rewrite every subject and object of `g`'s
     * default graph to its component's canonical term ([[sameAsMap]])

@@ -899,7 +899,7 @@ object JsonLd {
                   // a bare string is a node reference: {"@id": s}
                   val o = JsonNodeFactory.instance.objectNode()
                   o.put("@id", s.asText); o
-                case other => err(s"$orig: type-map values are node objects")
+                case _ => err(s"$orig: type-map values are node objects")
               }
               if (e.getKey != "@none") {
                 val t = expandIri(vctx, e.getKey, vocabMode = true,

@@ -117,33 +117,14 @@ object SparqlResults {
     case c => c.toString
   }
 
-  /** RDF term struct → the JSON binding-value object. A quoted triple
-    * uses the SPARQL 1.2 results extension `{"type": "triple", "value":
+  /** RDF term → the JSON binding-value object. A quoted triple uses the
+    * SPARQL 1.2 results extension `{"type": "triple", "value":
     * {subject, predicate, object}}`. */
-  private def jsonTerm(r: Row): String = r.getByte(0) match {
-    case Terms.KIND_IRI => s"""{"type":"uri","value":${jstr(r.getString(1))}}"""
-    case Terms.KIND_BLANK =>
-      s"""{"type":"bnode","value":${jstr(r.getString(1))}}"""
-    case Terms.KIND_TRIPLE =>
-      val q = Terms.unpackString(r.getString(1))
-      def t(x: graft.rdf.RdfTerm): String = jsonTermOf(x)
-      s"""{"type":"triple","value":{"subject":${t(q.s)},"predicate":${t(q.p)},"object":${t(q.o)}}}"""
-    case _ =>
-      val dt = if (r.isNullAt(2)) null else r.getString(2)
-      val lang = if (r.isNullAt(3)) null else r.getString(3)
-      val base = s"""{"type":"literal","value":${jstr(r.getString(1))}"""
-      if (lang != null) base + s""","xml:lang":${jstr(lang)}}"""
-      else if (dt != null && dt != XSD.string)
-        base + s""","datatype":${jstr(dt)}}"""
-      else base + "}"
-  }
-
-  /** [[jsonTerm]] over a decoded RdfTerm (quoted-triple components). */
-  private def jsonTermOf(t: graft.rdf.RdfTerm): String = t match {
+  private def jsonTerm(t: graft.rdf.RdfTerm): String = t match {
     case graft.rdf.Iri(v) => s"""{"type":"uri","value":${jstr(v)}}"""
     case graft.rdf.Blank(l) => s"""{"type":"bnode","value":${jstr(l)}}"""
     case graft.rdf.QuotedTriple(s, p, o) =>
-      s"""{"type":"triple","value":{"subject":${jsonTermOf(s)},"predicate":${jsonTermOf(p)},"object":${jsonTermOf(o)}}}"""
+      s"""{"type":"triple","value":{"subject":${jsonTerm(s)},"predicate":${jsonTerm(p)},"object":${jsonTerm(o)}}}"""
     case l: graft.rdf.Lit =>
       val base = s"""{"type":"literal","value":${jstr(l.lex)}"""
       if (l.lang != null) base + s""","xml:lang":${jstr(l.lang)}}"""
@@ -156,46 +137,35 @@ object SparqlResults {
   private def jsonBinding(names: Seq[String], row: Row): String =
     names.indices.flatMap { i =>
       if (row.isNullAt(i)) None
-      else Some(s"${jstr(names(i))}:${jsonTerm(row.getStruct(i))}")
+      else Some(s"${jstr(names(i))}:${jsonTerm(Terms.rowTerm(row.getStruct(i)))}")
     }.mkString("{", ",", "}")
-
-  private def xmlTerm(r: Row): String = r.getByte(0) match {
-    case Terms.KIND_IRI => s"<uri>${xstr(r.getString(1))}</uri>"
-    case Terms.KIND_BLANK => s"<bnode>${xstr(r.getString(1))}</bnode>"
-    case Terms.KIND_TRIPLE => // SPARQL 1.2 results-XML triple extension
-      xmlTermOf(Terms.unpackString(r.getString(1)))
-    case _ =>
-      val dt = if (r.isNullAt(2)) null else r.getString(2)
-      val lang = if (r.isNullAt(3)) null else r.getString(3)
-      s"<literal${xmlLitAttrs(dt, lang)}>${xstr(r.getString(1))}</literal>"
-  }
 
   private def xmlLitAttrs(dt: String, lang: String): String =
     if (lang != null) s""" xml:lang="${xstr(lang)}""""
     else if (dt != null && dt != XSD.string) s""" datatype="${xstr(dt)}""""
     else ""
 
-  /** [[xmlTerm]] over a decoded RdfTerm (quoted-triple components) —
+  /** RDF term → the results-XML term element. A quoted triple is
     * `<triple><subject>…</subject><predicate>…</predicate>
-    * <object>…</object></triple>`, the extension the XML decoder
-    * already reads; the old Turtle-star-text degrade came back as a
-    * plain literal (found by ResultsRoundTripSpec). */
-  private def xmlTermOf(t: graft.rdf.RdfTerm): String = t match {
+    * <object>…</object></triple>`, the SPARQL 1.2 extension the XML
+    * decoder already reads; the old Turtle-star-text degrade came back
+    * as a plain literal (found by ResultsRoundTripSpec). */
+  private def xmlTerm(t: graft.rdf.RdfTerm): String = t match {
     case graft.rdf.Iri(v) => s"<uri>${xstr(v)}</uri>"
     case graft.rdf.Blank(l) => s"<bnode>${xstr(l)}</bnode>"
     case graft.rdf.Lit(lex, dt, lang) =>
       s"<literal${xmlLitAttrs(dt, lang)}>${xstr(lex)}</literal>"
     case graft.rdf.QuotedTriple(s, p, o) =>
-      s"<triple><subject>${xmlTermOf(s)}</subject>" +
-        s"<predicate>${xmlTermOf(p)}</predicate>" +
-        s"<object>${xmlTermOf(o)}</object></triple>"
+      s"<triple><subject>${xmlTerm(s)}</subject>" +
+        s"<predicate>${xmlTerm(p)}</predicate>" +
+        s"<object>${xmlTerm(o)}</object></triple>"
   }
 
   private def xmlResult(names: Seq[String], row: Row): String =
     names.indices.flatMap { i =>
       if (row.isNullAt(i)) None
       else Some(
-        s"""<binding name="${xstr(names(i))}">${xmlTerm(row.getStruct(i))}</binding>""")
+        s"""<binding name="${xstr(names(i))}">${xmlTerm(Terms.rowTerm(row.getStruct(i)))}</binding>""")
     }.mkString("<result>", "", "</result>")
 
   private def jsonHead(names: Seq[String]): String =

@@ -1618,7 +1618,7 @@ final class Compiler(rdfGraph: RdfGraph, spark: SparkSession) {
     * frames, checkpointed per level to cut lineage.
     *
     * With no start (both endpoints free) the full pair closure is
-    * computed by path doubling. */
+    * computed by path doubling ([[doublingClosure]]). */
   private def closure(edges1: DataFrame, start: Option[(DataFrame, Boolean)],
       includeZero: Boolean, edgeCount: Option[Long]): DataFrame = {
     // ALP evaluation is set-based and joins on full terms; companions
@@ -1720,40 +1720,13 @@ final class Compiler(rdfGraph: RdfGraph, spark: SparkSession) {
     reached.select(F.col("src").as("ps"), F.col("n").as("po"))
   }
 
-  /** Full pair closure by path DOUBLING: each round joins the
-    * accumulated closure with itself, so a diameter-d graph converges in
-    * ⌈log₂ d⌉ rounds instead of d — the difference between 10 and 1000
-    * Spark jobs on a deep chain. localCheckpoint() per round cuts
-    * lineage growth. */
+  /** The full pair closure, both endpoints free: [[graft.Fixpoints.closure]]
+    * (path doubling) over the (ps, po) edges, plus every graph node's
+    * zero-length pair for `*`. */
   private def doublingClosure(edges: DataFrame, includeZero: Boolean): DataFrame = {
-    // Sanity bound only — the loop ends when a round adds nothing.
-    val maxIter = 100000
-    val e = edges.localCheckpoint(true)
-    var closure = e.distinct().localCheckpoint(true)
-    var i = 0
-    var grew = true
-    while (i < maxIter && grew) {
-      val doubled = closure.alias("a")
-        .join(closure.alias("b"), F.col("a.po") === F.col("b.ps"))
-        .select(F.col("a.ps").as("ps"), F.col("b.po").as("po"))
-      val next0 = doubled.join(closure, Seq("ps", "po"), "left_anti")
-        .distinct().localCheckpoint(true)
-      // fresh attribute ids BEFORE the union: `next` derives from a
-      // self-join of `closure`, so closure's attributes appear on
-      // both union branches and trip Catalyst's constraint rewrite
-      // (UnionBase.rewriteConstraints NoSuchElementException — an
-      // alias projection does NOT isolate the constraints; only a
-      // fresh LogicalRDD does). The RDD round-trip is applied to an
-      // already-checkpointed RDD, so the re-encoding is bounded by
-      // the (small) closure delta, once per doubling round.
-      val next = spark.createDataFrame(next0.rdd, next0.schema)
-      grew = !next0.isEmpty
-      if (grew) {
-        val unioned = closure.union(next).localCheckpoint(true)
-        closure = spark.createDataFrame(unioned.rdd, unioned.schema)
-      }
-      i += 1
-    }
+    val closure = graft.Fixpoints
+      .closure(edges.select(F.col("ps").as("a"), F.col("po").as("b")))
+      .select(F.col("a").as("ps"), F.col("b").as("po"))
     if (includeZero) {
       val zero = graphNodes.select(F.col("n").as("ps"), F.col("n").as("po"))
       closure.union(zero).distinct()
@@ -2004,7 +1977,7 @@ final class Compiler(rdfGraph: RdfGraph, spark: SparkSession) {
       val preEc = exprC(df)
       val groupKeys: Seq[(GroupCond, String)] = q.mods.groupBy.map {
         case g @ GroupVar(v) => g -> v
-        case g @ GroupExpr(e, alias) => g -> alias.getOrElse(syn("gkey"))
+        case g @ GroupExpr(_, alias) => g -> alias.getOrElse(syn("gkey"))
       }
       val gmap: Map[Expr, String] = groupKeys.collect {
         case (GroupExpr(e, _), n) => (e, n)

@@ -1,6 +1,6 @@
 package graft.sparql
 
-import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.{Column, functions => F}
 import org.apache.spark.sql.types._
 import graft.rdf._
 import graft.rdf.Terms._

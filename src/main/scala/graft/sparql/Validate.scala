@@ -66,8 +66,7 @@ object Validate {
     case _ => ()
   }
 
-  def construct(template: Seq[TriplePattern], where: GraphPattern): Unit =
-    pattern(where)
+  def construct(where: GraphPattern): Unit = pattern(where)
 
   def where(p: GraphPattern): Unit = pattern(p)
 

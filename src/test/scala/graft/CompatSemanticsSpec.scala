@@ -501,6 +501,19 @@ class CompatSemanticsSpec extends SparkSpec {
     }
   }
 
+  test("the free pair closure keeps self-loops: an edge x p x and a 2-cycle") {
+    // the reasoner filters its input self-loops; SPARQL must not
+    val loops: Seq[(RdfTerm, RdfTerm, RdfTerm)] = Seq(
+      (u("x"), u("p"), u("x")),
+      (u("y"), u("p"), u("z")), (u("z"), u("p"), u("y")))
+    val pat = Bgp(Seq(pathTp(v("a"), POneOrMore(PLink("urn:t:p")), v("b"))))
+    val df = checkRef(pat, loops, RdfGraph.fromTriples(spark, loops))
+    assert(!localClosure(df))
+    val want = Seq("x" -> "x", "y" -> "z", "z" -> "y", "y" -> "y", "z" -> "z")
+      .map { case (a, b) => s"a=<urn:t:$a>|b=<urn:t:$b>" }.sorted
+    assert(canon(df.collect().toSeq.map(rowToSol(_, df.columns.toSeq))) == want)
+  }
+
   test("a path inside OPTIONAL is not seeded from outside it; GRAPH <iri> " +
     "scopes the seeded closure") {
     val graph = RdfGraph.fromTriples(spark, seedGraph)

@@ -9,7 +9,9 @@ import graft.sources._
   * and object position, a quoted triple, and two named graphs (one
   * labelled by a blank node). The writers run with one partition, so
   * each writes one part file. RDF/XML and JSON-LD have no quoted-triple
-  * syntax and write the store without that row. */
+  * syntax and write the store without that row. The SPARQL results
+  * JSON and XML forms are pinned the same way on a two-row solution
+  * frame. */
 class SerializerTextSpec extends SparkSpec {
 
   private val ex = "http://example.com/"
@@ -223,5 +225,64 @@ class SerializerTextSpec extends SparkSpec {
       rdfxmlWrite)
     assert(part(JsonLd.write(noQuoted(store), _, numPartitions = 1)) ===
       jsonldWrite)
+  }
+
+  /** Two solutions in one partition: every term shape in the first (a
+    * quoted triple, tagged, typed and xsd:string literals, a blank node)
+    * with `ub` unbound; only `i` and `st` bound in the second. */
+  private def solutions = {
+    import org.apache.spark.sql.{functions => F}
+    spark.range(2).select(
+      Terms.iri(F.concat(F.lit(ex), F.when(F.col("id") === 0, "s").otherwise("t"))).as("i"),
+      F.when(F.col("id") === 0, Terms.langLit(F.lit("chat"), F.lit("fr"))).as("ll"),
+      F.when(F.col("id") === 0, Terms.lit(F.lit("42"), XSD.integer)).as("tl"),
+      Terms.plainLit(F.when(F.col("id") === 0, "q\"<&>\t\\").otherwise("x")).as("st"),
+      F.when(F.col("id") === 0, Terms.blank(F.lit("b0"))).as("bn"),
+      F.when(F.col("id") === 0, Terms.termCol(QuotedTriple(iri("a"), iri("p"),
+        Lit.tagged("o", "en")))).as("qt"),
+      F.lit(null).cast(Terms.termType).as("ub"))
+      .coalesce(1)
+  }
+
+  private val jsonHead =
+    """{"head":{"vars":["i","ll","tl","st","bn","qt","ub"]},"results":{"bindings":["""
+  private val jsonRow1 =
+    """{"i":{"type":"uri","value":"http://example.com/s"},""" +
+      """"ll":{"type":"literal","value":"chat","xml:lang":"fr"},""" +
+      """"tl":{"type":"literal","value":"42","datatype":"http://www.w3.org/2001/XMLSchema#integer"},""" +
+      """"st":{"type":"literal","value":"q\"<&>\t\\"},""" +
+      """"bn":{"type":"bnode","value":"b0"},""" +
+      """"qt":{"type":"triple","value":{"subject":{"type":"uri","value":"http://example.com/a"},""" +
+      """"predicate":{"type":"uri","value":"http://example.com/p"},""" +
+      """"object":{"type":"literal","value":"o","xml:lang":"en"}}}}"""
+  private val jsonRow2 =
+    """{"i":{"type":"uri","value":"http://example.com/t"},"st":{"type":"literal","value":"x"}}"""
+
+  private val xmlHead =
+    """<?xml version="1.0"?><sparql xmlns="http://www.w3.org/2005/sparql-results#"><head>""" +
+      Seq("i", "ll", "tl", "st", "bn", "qt", "ub")
+        .map(v => s"""<variable name="$v"/>""").mkString + "</head><results>"
+  private val xmlRow1 =
+    """<result><binding name="i"><uri>http://example.com/s</uri></binding>""" +
+      """<binding name="ll"><literal xml:lang="fr">chat</literal></binding>""" +
+      """<binding name="tl"><literal datatype="http://www.w3.org/2001/XMLSchema#integer">42</literal></binding>""" +
+      "<binding name=\"st\"><literal>q&quot;&lt;&amp;&gt;\t\\</literal></binding>" +
+      """<binding name="bn"><bnode>b0</bnode></binding>""" +
+      """<binding name="qt"><triple><subject><uri>http://example.com/a</uri></subject>""" +
+      """<predicate><uri>http://example.com/p</uri></predicate>""" +
+      """<object><literal xml:lang="en">o</literal></object></triple></binding></result>"""
+  private val xmlRow2 =
+    """<result><binding name="i"><uri>http://example.com/t</uri></binding>""" +
+      """<binding name="st"><literal>x</literal></binding></result>"""
+
+  test("SparqlResults.json, xml, writeJson and writeXml text") {
+    assert(SparqlResults.json(solutions) ===
+      jsonHead + jsonRow1 + "," + jsonRow2 + "]}}")
+    assert(SparqlResults.xml(solutions) ===
+      xmlHead + xmlRow1 + xmlRow2 + "</results></sparql>")
+    assert(part(SparqlResults.writeJson(solutions, _)) ===
+      Seq(jsonHead, jsonRow1, "," + jsonRow2, "]}}", "").mkString("\n"))
+    assert(part(SparqlResults.writeXml(solutions, _)) ===
+      Seq(xmlHead, xmlRow1, xmlRow2, "</results></sparql>", "").mkString("\n"))
   }
 }
