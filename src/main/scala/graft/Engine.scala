@@ -211,9 +211,8 @@ class Engine(initial: RdfGraph) {
     * node (explicit IRIs plus each variable's bindings from the optional
     * WHERE pattern), the outbound triples and the blank-node closure —
     * exactly the walk the reference's `peel` performs one HTTP round-trip
-    * at a time (gastrodon/__init__.py:688-743), here one distributed join
-    * per BFS level over the WHOLE target set at once, so `DESCRIBE ?x
-    * WHERE {...}` with a million bindings is still O(depth) jobs. */
+    * at a time (gastrodon/__init__.py:688-743), here one seeded `*`
+    * closure over the WHOLE target set at once (see [[peel]]). */
   def describe(sparql: String, bindings: Map[String, Any] = Map.empty): RdfGraph =
     wrapRuntime(sparql) {
       parse(sparql).query match {
@@ -226,10 +225,7 @@ class Engine(initial: RdfGraph) {
           }
           val iriTargets = targets.collect { case TermNode(t) => t }
           val varTargets = targets.collect { case VarNode(v) => v }
-          val iriDf =
-            if (iriTargets.isEmpty) None
-            else Some(iriTargets.map(t =>
-              spark.range(1).select(termCol(t).as("n"))).reduce(_ union _))
+          val iriDf = Option.when(iriTargets.nonEmpty)(Fixpoints.seedFrame(spark, iriTargets))
           val varDf = (d.where, varTargets) match {
             case (Some(w), vs) if vs.nonEmpty =>
               val bound = compiler.compile(Substitute.pattern(w, terms))
@@ -239,14 +235,8 @@ class Engine(initial: RdfGraph) {
                 .where(F.col("n").isNotNull)).reduce(_ union _))
             case _ => None
           }
-          val frontier = (iriDf, varDf) match {
-            case (Some(a), Some(b)) => a.union(b)
-            case (Some(a), None) => a
-            case (None, Some(b)) => b
-            case (None, None) =>
-              throw new GraftException("DESCRIBE requires at least one target")
-          }
-          cbd(frontier)
+          cbd((iriDf ++ varDf).reduceOption(_ union _).getOrElse(
+            throw new GraftException("DESCRIBE requires at least one target")))
         case _ => throw new GraftException("describe() requires a DESCRIBE query")
       }
     }
@@ -745,35 +735,27 @@ class Engine(initial: RdfGraph) {
 
   /** Copy the blank-node closure reachable from `node` into a standalone
     * graph (peel, gastrodon/__init__.py:688-743). The reference walks one
-    * node per HTTP round-trip; here each BFS level is ONE distributed join
-    * over the whole frontier. */
-  def peel(node: RdfTerm): RdfGraph =
-    cbd(spark.range(1).select(termCol(node).as("n")))
+    * node per HTTP round-trip; here the walk is a seeded `*` closure
+    * ([[cbd]]): one job per level, or one in all when the predicate counts
+    * prove the store small. */
+  def peel(node: RdfTerm): RdfGraph = cbd(Fixpoints.seedFrame(spark, Seq(node)))
 
-  /** Concise bounded description of every node in `frontier0` (one
+  /** Concise bounded description of every node in `targets` (one
     * term-struct column `n`): outbound triples plus the blank-node
-    * closure — the shared walk behind [[peel]] and [[describe]]. */
-  private def cbd(frontier0: DataFrame): RdfGraph = {
+    * closure — the shared walk behind [[peel]] and [[describe]]. The
+    * described nodes are the `*` closure ([[Fixpoints.reach]]) from the
+    * targets over the default-graph edges whose object is blank; the
+    * description is the default-graph triples whose subject is one of
+    * them. The predicate counts bound the number of those edges. */
+  private def cbd(targets: DataFrame): RdfGraph = {
     val t = graph.defaultGraph
-    var frontier = frontier0.distinct()
-    var seen = frontier
-    var acc: DataFrame = null
-    var i = 0
-    while (i < 100000 && !frontier.isEmpty) {
-      val level = t.join(frontier, t("s") === frontier("n")).select("s", "p", "o")
-        .localCheckpoint(true)
-      acc = if (acc == null) level else acc.union(level)
-      val next = level.where(F.col("o.kind") === KIND_BLANK)
-        .select(F.col("o").as("n")).distinct()
-        .join(seen, Seq("n"), "left_anti")
-        .localCheckpoint(true)
-      seen = seen.union(next).localCheckpoint(true)
-      frontier = next
-      i += 1
-    }
-    val triples = if (acc == null)
-      RdfGraph.empty(spark).triples else acc.dropDuplicates("s", "p", "o")
-    RdfGraph(triples, graph.prefixes)
+    val blankEdges = t.where(F.col("o.kind") === KIND_BLANK)
+      .select(F.col("s").as("ps"), F.col("o").as("po"))
+    val counts = graph.predCounts.values
+    val reached = Fixpoints.reach(targets, blankEdges, includeZero = true,
+      if (counts.isEmpty) None else Some(counts.sum))
+    RdfGraph(t.join(reached, t("s") === reached("po"), "left_semi").distinct(),
+      graph.prefixes)
   }
 
   // ------------------------------------------------------------- helpers

@@ -1,26 +1,36 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, functions => F}
-import org.apache.spark.sql.types._
+import scala.collection.mutable
 
-/** The engine's two iterated graph fixpoints, each written once:
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, functions => F}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+import org.apache.spark.sql.types._
+import graft.rdf.RdfTerm
+import graft.rdf.Terms.{termRow, termType}
+
+/** The engine's iterated graph fixpoints, each written once:
   *
   *  - [[closure]] — transitive closure by path doubling. The SPARQL
   *    compiler runs it for a `+`/`*` path with both endpoints free
   *    (`Compiler.doublingClosure`); the RDFS reasoner runs it on the
   *    subPropertyOf and subClassOf hierarchies (`Reasoner.rdfsClosure`).
+  *  - [[reach]] — the closure from a seed set, as a BFS. The SPARQL
+  *    compiler runs it for a `+`/`*` path with a bound endpoint
+  *    (`Compiler.closure`); DESCRIBE and peel run it as a `*` walk over
+  *    the edges whose object is blank (`Engine.cbd`).
   *  - [[components]] — connected components by min-label propagation
   *    with pointer doubling. Near-duplicate grouping
   *    (`pipeline.Dedup.dedupGroups`) and owl:sameAs smushing
   *    (`Reasoner.sameAsMap`) both read their groups off it.
   *
-  * Both converge in O(log diameter) rounds and cut lineage every round
-  * with [[fresh]].
+  * The doubling loops converge in O(log diameter) rounds and cut lineage
+  * every round with [[fresh]].
   */
 private[graft] object Fixpoints {
 
-  /** Guard on the rounds of either loop. Round k covers every path of up
-    * to 2^k hops, so the bound is never reached on a real graph. */
+  /** Guard on the rounds of either doubling loop. Round k covers every
+    * path of up to 2^k hops, so the bound is never reached on a real
+    * graph. */
   private val MaxRounds = 64
 
   /** `df` checkpointed (eagerly, executor-local) and re-read through a
@@ -58,6 +68,131 @@ private[graft] object Fixpoints {
       i += 1
     }
     closure
+  }
+
+  /** Bound of the driver-side walk of [[reach]]: seeds, rows fetched per
+    * BFS level, nodes reached and result pairs. Past it the walk runs as
+    * Spark frames (checkpointed frontier). */
+  val LocalMax = 10000
+
+  /** The terms as a local relation (one term-struct column `n`): a seed
+    * set that [[reach]] reads on the driver with no job. */
+  def seedFrame(spark: SparkSession, terms: Seq[RdfTerm]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(terms.map(t => Row(termRow(t))): _*),
+      StructType(Seq(StructField("n", termType))))
+
+  /** At most `LocalMax + 1` rows of `df` on the driver, in one job: each
+    * partition stops reading at that many, and the driver merges the
+    * partitions' rows as they arrive, keeping at most that many.
+    * (`limit(n).collect()` scans partitions in rounds, one job each, while
+    * the first partitions hold fewer than n rows.) A local relation (a
+    * [[seedFrame]]), projected or not, is read on the driver with no job. */
+  private def collectBounded(df: DataFrame): Array[Row] =
+    df.queryExecution.analyzed match {
+      case _: LocalRelation | Project(_, _: LocalRelation) => df.collect()
+      case _ =>
+        val n = LocalMax + 1
+        df.rdd.mapPartitions(it => Iterator.single(it.take(n).toArray))
+          .fold(Array.empty[Row])((a, b) => if (a.length >= n) a else (a ++ b).take(n))
+    }
+
+  /** The closure from a seed set, as distinct (ps, po) term pairs: po is
+    * reached from the seed ps (a value of the term-struct column `n` of
+    * `seeds`) by one or more of the (ps, po) `edges`, or by zero with
+    * `includeZero`.
+    *
+    * It is a BFS with the frontier on the driver: one bounded collect of
+    * the seeds, then one filtered collect of the edges leaving the
+    * frontier per level, deduplicated against the reached nodes locally
+    * (gastrodon walks one HTTP query per node instead,
+    * gastrodon/__init__.py:736-743). When `edgeCount`, an upper bound on
+    * the edge rows, is within [[LocalMax]], the edges come back whole in
+    * the seeds' job and the levels are walked on the driver: one job in
+    * all. The pairs come back as a local relation, so the query using
+    * them runs no job for them. Past [[LocalMax]] — a stale count
+    * included — the same BFS runs on Spark frames, checkpointed per
+    * level to cut lineage. */
+  def reach(seeds: DataFrame, edges: DataFrame, includeZero: Boolean,
+      edgeCount: Option[Long]): DataFrame =
+    localReach(seeds, edges, includeZero, edgeCount)
+      .getOrElse(frontierReach(seeds, edges, includeZero))
+
+  /** [[reach]] on the driver, or None past [[LocalMax]]: every reached
+    * node's out-edges are fetched once, then each seed's closure is read
+    * off the fetched adjacency. */
+  private def localReach(seed: DataFrame, edges: DataFrame,
+      includeZero: Boolean, edgeCount: Option[Long]): Option[DataFrame] = {
+    // seed rows are the ones with a null `po` (no edge has one)
+    val small = edgeCount.exists(_ <= LocalMax)
+    val fetched = collectBounded(
+      if (small) seed.select(F.col("n").as("ps"), F.lit(null).cast(termType).as("po"))
+        .unionByName(edges.select("ps", "po"))
+      else seed.select(F.col("n").as("ps")))
+    if (fetched.length > LocalMax) return None
+    val (seedRows, edgeRows) = fetched.partition(r => !small || r.isNullAt(1))
+    val seeds = seedRows.filterNot(_.isNullAt(0)).map(_.getStruct(0)).distinct.toSeq
+    val byPs = if (small) Some(edgeRows.groupBy(_.getStruct(0))) else None
+    // the edges leaving a frontier; a Spark job per level unless whole.
+    // The job filters on the lexical value alone (a flat string IN
+    // list); the exact term match is made on the driver
+    def leaving(frontier: Seq[Row]): Array[Row] = byPs match {
+      case Some(m) => frontier.flatMap(m.getOrElse(_, Array.empty[Row])).toArray
+      case None => collectBounded(edges
+        .where(F.col("ps.value").isin(frontier.map(_.getString(1)).distinct: _*))
+        .select("ps", "po"))
+    }
+    val adj = mutable.HashMap[Row, mutable.ArrayBuffer[Row]]()
+    val visited = mutable.HashSet[Row](seeds: _*)
+    var frontier = seeds
+    while (frontier.nonEmpty) {
+      val rows = leaving(frontier)
+      if (rows.length > LocalMax) return None
+      val inFrontier = frontier.toSet
+      val next = mutable.ArrayBuffer[Row]()
+      rows.foreach { r =>
+        val (a, b) = (r.getStruct(0), r.getStruct(1))
+        if (inFrontier(a)) {
+          adj.getOrElseUpdate(a, mutable.ArrayBuffer()) += b
+          if (visited.add(b)) next += b
+        }
+      }
+      if (visited.size > LocalMax) return None
+      frontier = next.toSeq
+    }
+    val pairs = mutable.ArrayBuffer[Row]()
+    seeds.foreach { s0 =>
+      val reached = mutable.LinkedHashSet[Row]()
+      if (includeZero) reached += s0
+      var level: Seq[Row] = Seq(s0)
+      while (level.nonEmpty) {
+        level = level.flatMap(n => adj.getOrElse(n, Nil)).filter(reached.add)
+      }
+      reached.foreach(n => pairs += Row(s0, n))
+      if (pairs.length > LocalMax) return None
+    }
+    Some(seed.sparkSession.createDataFrame(java.util.Arrays.asList(pairs.toSeq: _*),
+      StructType(Seq(StructField("ps", termType), StructField("po", termType)))))
+  }
+
+  /** [[reach]] as Spark frames: BFS over (seed, node) pairs, the frontier
+    * and the reached set checkpointed every level. It ends on an empty
+    * frontier: each level adds only pairs not reached before. */
+  private def frontierReach(seed: DataFrame, edges: DataFrame,
+      includeZero: Boolean): DataFrame = {
+    val e = edges.localCheckpoint(true)
+    val seedPairs = seed.select(F.col("n").as("src"), F.col("n")).distinct()
+      .localCheckpoint(true)
+    var reached = if (includeZero) seedPairs else seedPairs.limit(0)
+    var frontier = seedPairs
+    while (!frontier.isEmpty) {
+      val next = frontier.join(e, frontier("n") === e("ps"))
+        .select(frontier("src"), e("po").as("n")).distinct()
+        .join(reached, Seq("src", "n"), "left_anti")
+        .localCheckpoint(true)
+      reached = reached.union(next).localCheckpoint(true)
+      frontier = next
+    }
+    reached.select(F.col("src").as("ps"), F.col("n").as("po"))
   }
 
   /** Connected components of the undirected graph of the (a, b) pairs:

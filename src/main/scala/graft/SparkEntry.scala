@@ -1140,8 +1140,7 @@ object SparkEntry {
       val incoming = docs.where(F.col("doc_id") % 3 =!= 0)
         .select(F.col("doc_id"),
           F.concat(F.lit("T"), F.col("doc_id") % 11).as("text"))
-      Dedup.dedupAgainstSeen(incoming, seen, "text",
-        expectedSeen = 1000, fpp = 0.01)
+      Dedup.dedupAgainstSeen(incoming, seen, "text", fpp = 0.01)
     }),
     "q_dedup_minhash" -> ((s, dir) =>
       Dedup.minhashDedupPairs(read(s, dir, "documents"), "doc_id", "text",
@@ -2250,9 +2249,9 @@ object SparkEntry {
       // in pure DuckDB (exact integer arithmetic throughout; grid =
       // image dims makes the box filter the identity)
       val img8 = patternedBmp(8, 8,
-        (x, y) => (F.col("doc_id") + F.lit(37 * x + 101 * y)) % 256)
+        (x, y) => (F.col("doc_id") + (x * 37 + y * 101)) % 256)
       val img9 = patternedBmp(9, 8,
-        (x, y) => (F.col("doc_id") * 3 + F.lit(29 * x + 67 * y)) % 256)
+        (x, y) => (F.col("doc_id") * 3 + (x * 29 + y * 67)) % 256)
       read(s, dir, "documents").select(F.col("doc_id"),
         Multimodal.imageHash(img8, "ahash").as("ahash"),
         Multimodal.imageHash(img9, "dhash").as("dhash"))
@@ -2286,11 +2285,11 @@ object SparkEntry {
       // 40 base patterns, seen = the unperturbed bases (doc_id < 200);
       // the oracle recomputes BOTH dHash sets from the pixel formulas
       // and takes the exhaustive cross-corpus popcount truth
-      def gray(pert: Boolean)(x: Int, y: Int): Column = {
+      def gray(pert: Boolean)(x: Column, y: Column): Column = {
         val b = F.col("doc_id") % 40
-        val base = b * 97 + F.lit(37 * x + 101 * y) + (b * (2 * y + 3)) % 251
-        val p = if (pert && x == 0 && y == 0)
-          F.expr("doc_id div 40") * 59 else F.lit(0)
+        val base = b * 97 + (x * 37 + y * 101) + (b * (y * 2 + 3)) % 251
+        val p = if (pert) F.when(x === 0 && y === 0, F.expr("doc_id div 40") * 59)
+          .otherwise(F.lit(0)) else F.lit(0)
         (base + p) % 256
       }
       val docs = read(s, dir, "documents")
@@ -2379,15 +2378,14 @@ object SparkEntry {
   /** The per-pixel gray formula behind `q_image_neardup`: 50 shared base
     * patterns (doc_id % 50) with per-doc perturbations at three fixed
     * pixels — mirrored verbatim in the oracle SQL. */
-  private def neardupGray(x: Int, y: Int): Column = {
+  private def neardupGray(x: Column, y: Column): Column = {
     val b = F.col("doc_id") % 50
     val e = F.expr("doc_id div 50")
-    val base = b * 97 + F.lit(37 * x + 101 * y) + (b * (2 * y + 3)) % 251
-    val pert =
-      if (x == 0 && y == 0) e * 59
-      else if (x == 5 && y == 3) e * 83
-      else if (x == 2 && y == 6) (e % 3) * 113
-      else F.lit(0)
+    val base = b * 97 + (x * 37 + y * 101) + (b * (y * 2 + 3)) % 251
+    val pert = F.when(x === 0 && y === 0, e * 59)
+      .when(x === 5 && y === 3, e * 83)
+      .when(x === 2 && y === 6, (e % 3) * 113)
+      .otherwise(F.lit(0))
     (base + pert) % 256
   }
 
@@ -2427,15 +2425,18 @@ object SparkEntry {
   }
 
   private def patternedBmp(w: Int, h: Int,
-      gray: (Int, Int) => Column): Column = {
+      gray: (Column, Column) => Column): Column = {
     import SqlHex.{hx2, le32h}
     val stride = (w * 3 + 3) & ~3
-    val pix = F.concat((0 until h).flatMap { r =>
-      val y = h - 1 - r // disk row r is logical row h-1-r (bottom-up)
-      (0 until w).map { x =>
-        F.call_function("repeat", hx2(gray(x, y)), F.lit(3)) } ++
-        (if (stride > w * 3) Seq(F.lit("00" * (stride - w * 3))) else Nil)
-    }: _*)
+    // one lambda over the rows and columns: the plan holds `gray` once,
+    // not once per pixel (72 copies made a 1.2 MB task binary)
+    def over(n: Int)(f: Column => Column): Column =
+      F.array_join(F.transform(F.sequence(F.lit(0), F.lit(n - 1)), f), "")
+    val pix = over(h) { r =>
+      val y = F.lit(h - 1) - r // disk row r is logical row h-1-r (bottom-up)
+      F.concat(over(w)(x => F.call_function("repeat", hx2(gray(x, y)), F.lit(3))),
+        F.lit("00" * (stride - w * 3)))
+    }
     F.unhex(F.concat(
       F.lit("424D"), le32h(F.lit(stride * h + 54)),
       F.lit("00000000" + "36000000"),

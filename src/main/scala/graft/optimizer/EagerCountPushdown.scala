@@ -46,8 +46,8 @@ import org.apache.spark.sql.types._
   * Result types are preserved exactly: COUNT→SUM(long)→long under the
   * coalesce; SUM over integral x is long at both levels, over
   * float/double x double at both levels (DECIMAL is excluded — its SUM
-  * widens precision per level, changing the output schema); MIN/MAX
-  * keep their input type at both levels.
+  * widens precision per level, or overflows a per-key partial at the
+  * 38-digit cap); MIN/MAX keep their input type at both levels.
   *
   * Why it pays: the fact side of a fact⋈dim aggregate collapses BEFORE
   * the join (q_path_seq: 600 k lineitems → 150 k order keys), so the
@@ -105,19 +105,13 @@ object EagerCountPushdown extends Rule[LogicalPlan] {
     }
 
   /** SUM result types that are identical at both aggregation levels:
-    * integral → long → long, float/double → double → double, and
-    * decimal already at the 38-digit precision cap (p+10 re-caps to p,
-    * so the two-level sum keeps the exact type — the SPARQL engine's
-    * decimal SUM lane is (38,18)). Narrower decimals widen per level
-    * and are excluded. (Decimal-overflow corner: a PER-KEY partial that
-    * overflows 38 digits nulls and is then skipped by the outer sum
-    * where the single-level sum would null the whole group — only
-    * reachable when one join key's values alone exceed 10^20 at scale
-    * (38-18 integer digits), outside any declared workload's domain.) */
+    * integral → long → long, float/double → double → double. No decimal
+    * pushes: a narrow one widens per level, and a per-key partial at the
+    * 38-digit cap can overflow to NULL, which the outer sum would skip
+    * where the unpushed sum nulls the whole group. */
   private def sumTypeStable(t: DataType): Boolean = t match {
     case ByteType | ShortType | IntegerType | LongType => true
     case FloatType | DoubleType => true
-    case d: DecimalType => d.precision == DecimalType.MAX_PRECISION
     case _ => false
   }
 

@@ -55,18 +55,19 @@ object Dedup {
     * duplicate of nothing, so null-key incoming rows are always kept
     * and null-key seen rows exclude nothing (the oracle spells this
     * out — plain `NOT IN` would instead drop every row the moment a
-    * null appears). `expectedSeen` sizes the filter — oversizing costs
-    * memory, undersizing costs fpp (never correctness). */
+    * null appears). The filter is sized for the seen side's row count
+    * (one count job), so it holds `fpp` and its bytes, which travel in
+    * every task of the query, grow with the seen side alone. */
   def dedupAgainstSeen(incoming: DataFrame, seen: DataFrame,
-      key: String = "text", expectedSeen: Long = 1L << 20,
-      fpp: Double = 0.01): DataFrame = {
+      key: String = "text", fpp: Double = 0.01): DataFrame = {
     val k = F.xxhash64(F.col(key))
     // stat.bloomFilter NPEs on a zero-row aggregate; an empty seen side
     // means nothing can be a duplicate — probe a filter with no entries
+    val seenKeys = seen.select(k.as("__k"))
+    val n = seenKeys.count()
     val bloom =
-      if (seen.isEmpty) org.apache.spark.util.sketch.BloomFilter.create(1L, fpp)
-      else seen.select(k.as("__k")).stat
-        .bloomFilter("__k", math.max(expectedSeen, 1L), fpp)
+      if (n == 0) org.apache.spark.util.sketch.BloomFilter.create(1L, fpp)
+      else seenKeys.stat.bloomFilter("__k", n, fpp)
     val bytes = {
       val baos = new java.io.ByteArrayOutputStream()
       bloom.writeTo(baos)

@@ -254,7 +254,7 @@ object Graphs {
     * Returns one `url` column. */
   def frontierUrls(docs: DataFrame, seen: DataFrame,
       urlCol: String = "url", htmlCol: String = "html",
-      seenUrlCol: String = "url", expectedSeen: Long = 1L << 20): DataFrame = {
+      seenUrlCol: String = "url"): DataFrame = {
     val targets = docs
       // discovery keeps rel=nofollow targets (a hint about rank, not
       // about fetching); <base href> overrides the resolution base
@@ -268,7 +268,7 @@ object Graphs {
     val notOwn = targets.join(
       docs.select(F.col(urlCol).as("url")).distinct(), Seq("url"), "left_anti")
     Dedup.dedupAgainstSeen(notOwn,
-      seen.select(F.col(seenUrlCol).as("url")), "url", expectedSeen)
+      seen.select(F.col(seenUrlCol).as("url")), "url")
   }
 
   /** Attach the host-PageRank quality prior to a page batch: builds the

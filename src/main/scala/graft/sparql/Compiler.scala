@@ -1503,12 +1503,9 @@ final class Compiler(rdfGraph: RdfGraph, spark: SparkSession) {
     // where a transitive branch starts: a constant endpoint, else an
     // endpoint variable the rest of the BGP binds; the object side runs
     // the closure over reversed edges
-    def seedFrame(t: RdfTerm): DataFrame = spark.createDataFrame(
-      java.util.List.of(Row(termRow(t))),
-      StructType(Seq(StructField("n", termType))))
     lazy val start: Option[(DataFrame, Boolean)] = (s, o) match {
-      case (TermNode(t), _) => Some((seedFrame(t), false))
-      case (_, TermNode(t)) => Some((seedFrame(t), true))
+      case (TermNode(t), _) => Some((graft.Fixpoints.seedFrame(spark, Seq(t)), false))
+      case (_, TermNode(t)) => Some((graft.Fixpoints.seedFrame(spark, Seq(t)), true))
       case (VarNode(a), _) if seeds.contains(a) => Some((seeds(a), false))
       case (_, VarNode(b)) if seeds.contains(b) => Some((seeds(b), true))
       case _ => None
@@ -1580,45 +1577,13 @@ final class Compiler(rdfGraph: RdfGraph, spark: SparkSession) {
     }
   }
 
-  /** Bound of the driver-side closure: seeds, rows fetched per BFS level,
-    * nodes reached and result pairs. Past it the closure runs as Spark
-    * frames (checkpointed frontier). */
-  private val PathLocalMax = 10000
-
-  /** At most `PathLocalMax + 1` rows of `df` on the driver, in one job:
-    * each partition stops reading at that many, and the driver merges the
-    * partitions' rows as they arrive, keeping at most that many.
-    * (`limit(n).collect()` scans partitions in rounds, one job each, while
-    * the first partitions hold fewer than n rows.) A local relation (a
-    * constant endpoint's seed) is read on the driver with no job. */
-  private def collectBounded(df: DataFrame): Array[Row] =
-    df.queryExecution.analyzed match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        df.collect()
-      case _ =>
-        val n = PathLocalMax + 1 // a local: the task must not capture `this`
-        df.rdd.mapPartitions(it => Iterator.single(it.take(n).toArray))
-          .fold(Array.empty[Row])((a, b) => if (a.length >= n) a else (a ++ b).take(n))
-    }
-
   /** Transitive closure (`+`, or `*` with `includeZero`) as (ps, po) term
-    * pairs.
-    *
-    * With a `start` — the seed frame (column `n`: a constant endpoint's
-    * one row, or the values sibling patterns bind an endpoint variable
-    * to) and whether the closure runs from the object side — it is a BFS
-    * from the seeds with the frontier on the driver: one bounded collect
-    * of the seeds, then one filtered collect of the edges leaving the
-    * frontier per level (or none, when predicate counts prove the edge
-    * relation small enough to come back whole with the seeds),
-    * deduplicated against the reached nodes locally (the reference runs
-    * one query per node instead, gastrodon/__init__.py:736-743). The
-    * pairs come back as a local relation, so the query using them runs no
-    * job for them. Past [[PathLocalMax]] the same BFS runs on Spark
-    * frames, checkpointed per level to cut lineage.
-    *
-    * With no start (both endpoints free) the full pair closure is
-    * computed by path doubling ([[doublingClosure]]). */
+    * pairs. With a `start` — the seed frame (column `n`: a constant
+    * endpoint's one row, or the values sibling patterns bind an endpoint
+    * variable to) and whether the closure runs from the object side, over
+    * reversed edges — it is [[graft.Fixpoints.reach]] from the seeds,
+    * bounded by the exact predicate counts. With no start (both endpoints
+    * free) it is path doubling ([[doublingClosure]]). */
   private def closure(edges1: DataFrame, start: Option[(DataFrame, Boolean)],
       includeZero: Boolean, edgeCount: Option[Long]): DataFrame = {
     // ALP evaluation is set-based and joins on full terms; companions
@@ -1628,96 +1593,10 @@ final class Compiler(rdfGraph: RdfGraph, spark: SparkSession) {
     start match {
       case Some((seed, reversed)) =>
         val edges = if (reversed) swap(edges0) else edges0
-        val pairs = localClosure(edges, seed, includeZero, edgeCount)
-          .getOrElse(frontierClosure(edges, seed, includeZero))
+        val pairs = graft.Fixpoints.reach(seed, edges, includeZero, edgeCount)
         if (reversed) swap(pairs) else pairs
       case None => doublingClosure(edges0, includeZero)
     }
-  }
-
-  /** The seeded closure on the driver, or None past [[PathLocalMax]]. The
-    * BFS walks nodes, not pairs: every reached node's out-edges are
-    * fetched once, then each seed's closure is read off the fetched
-    * adjacency. An edge relation that `edgeCount` (exact predicate
-    * counts) proves within the bound comes back whole, in the seeds' job,
-    * and the levels are walked on the driver. */
-  private def localClosure(edges: DataFrame, seed: DataFrame,
-      includeZero: Boolean, edgeCount: Option[Long]): Option[DataFrame] = {
-    // seed rows are the ones with a null `po` (no edge has one); past the
-    // bound — stale counts included — the closure falls back
-    val small = edgeCount.exists(_ <= PathLocalMax)
-    val fetched = collectBounded(
-      if (small) seed.select(F.col("n").as("ps"), F.lit(null).cast(termType).as("po"))
-        .unionByName(edges.select("ps", "po"))
-      else seed.select(F.col("n").as("ps")))
-    if (fetched.length > PathLocalMax) return None
-    val (seedRows, edgeRows) = fetched.partition(r => !small || r.isNullAt(1))
-    val seeds = seedRows.filterNot(_.isNullAt(0)).map(_.getStruct(0)).distinct.toSeq
-    val byPs = if (small) Some(edgeRows.groupBy(_.getStruct(0))) else None
-    // the edges leaving a frontier; a Spark job per level unless whole.
-    // The job filters on the lexical value alone (a flat string IN
-    // list); the exact term match is made on the driver
-    def leaving(frontier: Seq[Row]): Array[Row] = byPs match {
-      case Some(m) => frontier.flatMap(m.getOrElse(_, Array.empty[Row])).toArray
-      case None => collectBounded(edges
-        .where(F.col("ps.value").isin(frontier.map(_.getString(1)).distinct: _*))
-        .select("ps", "po"))
-    }
-    val adj = mutable.HashMap[Row, mutable.ArrayBuffer[Row]]()
-    val visited = mutable.HashSet[Row](seeds: _*)
-    var frontier = seeds
-    while (frontier.nonEmpty) {
-      val rows = leaving(frontier)
-      if (rows.length > PathLocalMax) return None
-      val inFrontier = frontier.toSet
-      val next = mutable.ArrayBuffer[Row]()
-      rows.foreach { r =>
-        val (a, b) = (r.getStruct(0), r.getStruct(1))
-        if (inFrontier(a)) {
-          adj.getOrElseUpdate(a, mutable.ArrayBuffer()) += b
-          if (visited.add(b)) next += b
-        }
-      }
-      if (visited.size > PathLocalMax) return None
-      frontier = next.toSeq
-    }
-    val pairs = mutable.ArrayBuffer[Row]()
-    seeds.foreach { s0 =>
-      val reached = mutable.LinkedHashSet[Row]()
-      if (includeZero) reached += s0
-      var level: Seq[Row] = Seq(s0)
-      while (level.nonEmpty) {
-        level = level.flatMap(n => adj.getOrElse(n, Nil)).filter(reached.add)
-      }
-      reached.foreach(n => pairs += Row(s0, n))
-      if (pairs.length > PathLocalMax) return None
-    }
-    Some(spark.createDataFrame(java.util.Arrays.asList(pairs.toSeq: _*),
-      StructType(Seq(StructField("ps", termType), StructField("po", termType)))))
-  }
-
-  /** The seeded closure as Spark frames: BFS over (seed, node) pairs,
-    * the frontier and the reached set checkpointed every level. */
-  private def frontierClosure(edges: DataFrame, seed: DataFrame,
-      includeZero: Boolean): DataFrame = {
-    // Sanity bound only — the loop ends on an empty frontier.
-    val maxIter = 100000
-    val e = edges.localCheckpoint(true)
-    val seedPairs = seed.select(F.col("n").as("src"), F.col("n")).distinct()
-      .localCheckpoint(true)
-    var reached = if (includeZero) seedPairs else seedPairs.limit(0)
-    var frontier = seedPairs
-    var i = 0
-    while (i < maxIter && !frontier.isEmpty) {
-      val next = frontier.join(e, frontier("n") === e("ps"))
-        .select(frontier("src"), e("po").as("n")).distinct()
-        .join(reached, Seq("src", "n"), "left_anti")
-        .localCheckpoint(true)
-      reached = reached.union(next).localCheckpoint(true)
-      frontier = next
-      i += 1
-    }
-    reached.select(F.col("src").as("ps"), F.col("n").as("po"))
   }
 
   /** The full pair closure, both endpoints free: [[graft.Fixpoints.closure]]

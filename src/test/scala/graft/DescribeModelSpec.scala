@@ -70,6 +70,23 @@ class DescribeModelSpec extends SparkSpec {
     sys.env.get("GRAFT_MODEL_SEEDS_EXTRA").toSeq
       .flatMap(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map(_.toInt))
 
+  test("DESCRIBE ?x past the driver-side bound equals the naive walk " +
+    "(targets share blank nodes)") {
+    // more targets than Fixpoints.LocalMax: the walk runs on Spark frames
+    val n = Fixpoints.LocalMax + 1
+    val shared: Seq[RdfTerm] = (0 until 3).map(i => Blank(s"s$i"))
+    val (p, q) = (e("p"), e("q"))
+    val g: Set[T] = ((0 until n).map(i => (e(s"t$i"): RdfTerm, p: RdfTerm, shared(i % 3))) ++
+      Seq[T]((shared(0), q, shared(1)), (shared(1), q, shared(2)),
+        (shared(2), q, shared(0)), (shared(2), q, Lit.plain("leaf")),
+        (e("u"), q, Blank("z")), (Blank("z"), q, Lit.plain("z")))).toSet
+    val targets = g.collect { case (s, `p`, _) => s }
+    assert(targets.size > Fixpoints.LocalMax)
+    val got = Engine.inline(toTurtle(g))
+      .describe(s"DESCRIBE ?x WHERE { ?x <${p.value}> ?o }")
+    assert(isoEqual(naiveDescribe(g, targets), got))
+  }
+
   for (seed <- Seq(7, 23, 61) ++ extraSeeds) {
     test(s"DESCRIBE equals the naive outbound+bnode-closure walk (seed $seed)") {
       val rnd = new Random(seed)

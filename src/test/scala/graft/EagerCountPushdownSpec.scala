@@ -116,16 +116,15 @@ class EagerCountPushdownSpec extends SparkSpec {
     assert(rows.length === 1 && rows(0).getString(0) === "a" && rows(0).isNullAt(1))
   }
 
-  test("narrow decimal SUM is not pushed (two-level sums widen its type); " +
-    "max-precision decimal IS pushed exactly") {
+  test("decimal SUM is not pushed, narrow or max-precision; results exact") {
     // decimal(12,2): SUM widens to (22,2) per level → excluded
     val narrow = Seq((1L, "1.50"), (2L, "2.25")).toDF("fk", "v")
       .select(F.col("fk"), F.col("v").cast("decimal(12,2)").as("v"))
     val nd = narrow.join(dim.hint("shuffle_hash"), F.col("fk") === F.col("k"))
       .groupBy("name").agg(F.sum("v").as("s"))
     assert(!firedIn(nd), "narrow decimal SUM must not decompose")
-    // decimal(38,18) (the SPARQL engine's decimal lane): p+10 re-caps to
-    // 38, the type is stable at both levels → pushes, results exact
+    // decimal(38,18) (the SPARQL engine's decimal lane): a per-key
+    // partial could overflow (see the extreme-value case) → excluded
     def wide(withHint: Boolean): DataFrame = {
       val d = if (withHint) dim.hint("shuffle_hash") else dim
       Seq((1L, BigDecimal("1.50")), (1L, BigDecimal("2.25")),
@@ -134,9 +133,42 @@ class EagerCountPushdownSpec extends SparkSpec {
         .groupBy("name").agg(F.sum("v").as("s"))
     }
     val wd = wide(withHint = true)
-    assert(firedIn(wd), "decimal(38,18) SUM should decompose")
+    assert(!firedIn(wd), "decimal(38,18) SUM must not decompose")
     assert(wd.orderBy("name").collect().toSeq ===
       wide(withHint = false).orderBy("name").collect().toSeq)
+  }
+
+  test("an overflowing decimal(38,18) SUM matches the unpushed plan, " +
+    "in legacy and ANSI mode") {
+    // decimal(38,18) holds 20 integer digits: fk=1's two values overflow
+    // a per-key partial, and with it the sum of the group they join
+    val big = BigDecimal("60000000000000000000")
+    def agg(): DataFrame = Seq((1L, big), (1L, big), (2L, BigDecimal(1)))
+      .toDF("fk", "v")
+      .join(Seq((1L, "g"), (2L, "g")).toDF("k", "name").hint("shuffle_hash"),
+        F.col("fk") === F.col("k"))
+      .groupBy("name").agg(F.sum("v").as("s"))
+    // the rows, or "overflow" for an ANSI overflow error
+    def outcome(): Either[String, Seq[org.apache.spark.sql.Row]] =
+      try Right(agg().collect().toSeq) catch {
+        case e: Exception if Iterator.iterate[Throwable](e)(_.getCause)
+            .takeWhile(_ != null).exists(c => String.valueOf(c.getMessage)
+              .toLowerCase.matches("(?s).*(overflow|out_of_range).*")) =>
+          Left("overflow")
+      }
+    val (ansiKey, pushKey) = ("spark.sql.ansi.enabled", "spark.graft.eagerCountPushdown")
+    val before = spark.conf.get(ansiKey)
+    for (ansi <- Seq(false, true)) {
+      spark.conf.set(ansiKey, ansi.toString)
+      try {
+        val got = outcome()
+        spark.conf.set(pushKey, "false")
+        val want = try outcome() finally spark.conf.unset(pushKey)
+        assert(got == want, s"ansi=$ansi")
+        assert(want == (if (ansi) Left("overflow")
+          else Right(Seq(org.apache.spark.sql.Row("g", null)))), s"ansi=$ansi")
+      } finally spark.conf.set(ansiKey, before)
+    }
   }
 
   test("MIN/MAX over the KEPT side pass through when a count pushes") {

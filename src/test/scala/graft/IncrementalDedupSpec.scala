@@ -16,8 +16,7 @@ class IncrementalDedupSpec extends SparkSpec {
       (i.toLong, s"seen doc ${rnd.nextInt(160)}")) // ~half overlap the seen space
     val seenDf = seenTexts.map(Tuple1(_)).toDF("text")
     val incDf = incoming.toDF("doc_id", "text")
-    val got = Dedup.dedupAgainstSeen(incDf, seenDf, "text",
-        expectedSeen = 500, fpp = 0.05)
+    val got = Dedup.dedupAgainstSeen(incDf, seenDf, "text", fpp = 0.05)
       .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
     val seenSet = seenTexts.toSet
     val want = incoming.filterNot(r => seenSet(r._2)).sorted
@@ -28,11 +27,11 @@ class IncrementalDedupSpec extends SparkSpec {
     import spark.implicits._
     val inc = Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("doc_id", "text")
     val empty = Seq.empty[Tuple1[String]].toDF("text")
-    val got = Dedup.dedupAgainstSeen(inc, empty, "text", expectedSeen = 10)
+    val got = Dedup.dedupAgainstSeen(inc, empty, "text")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(got == Seq(1L, 2L, 3L)) // both "a" rows stay: not a batch dedup
     val seen = Seq(Tuple1("a")).toDF("text")
-    val got2 = Dedup.dedupAgainstSeen(inc, seen, "text", expectedSeen = 10)
+    val got2 = Dedup.dedupAgainstSeen(inc, seen, "text")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(got2 == Seq(3L))
   }
@@ -42,7 +41,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val seen = Seq(Some("a"), None).map(Tuple1(_)).toDF("text")
     val inc = Seq((1L, Some("a")), (2L, None), (3L, Some("b")))
       .toDF("doc_id", "text")
-    val got = Dedup.dedupAgainstSeen(inc, seen, "text", expectedSeen = 10)
+    val got = Dedup.dedupAgainstSeen(inc, seen, "text")
       .collect().map(_.getLong(0)).sorted.toSeq
     // 1 is a real dup; 2 (null) is kept — null matches nothing, and the
     // seen-side null excludes nothing
@@ -53,11 +52,28 @@ class IncrementalDedupSpec extends SparkSpec {
     import spark.implicits._
     val seen = (0 until 50).map(i => Tuple1(s"s$i")).toDF("text")
     val inc = (0 until 100).map(i => (i.toLong, s"n$i")).toDF("doc_id", "text")
-    // fpp 0.5 and an undersized filter → many bloom positives, all of
-    // which the anti-join must clear since no text truly overlaps
-    val got = Dedup.dedupAgainstSeen(inc, seen, "text",
-        expectedSeen = 10, fpp = 0.5)
+    // fpp 0.5 → about half the rows are bloom positives, all of which
+    // the anti-join must clear since no text truly overlaps
+    val got = Dedup.dedupAgainstSeen(inc, seen, "text", fpp = 0.5)
     assert(got.count() == 100)
+  }
+
+  test("the bloom filter is sized for the seen rows: 5 rows carry a few bytes") {
+    import spark.implicits._
+    val seen = (0 until 5).map(i => Tuple1(s"s$i")).toDF("text")
+    val inc = (0 until 20).map(i => (i.toLong, s"n$i")).toDF("doc_id", "text")
+    val carried = Dedup.dedupAgainstSeen(inc, seen, "text").queryExecution.analyzed
+      .flatMap(_.expressions.flatMap(_.collect {
+        case b: graft.expressions.BloomMightContain => b.bloomBytes.length
+      }))
+    // the bytes of a filter for 5 keys at the default fpp of 0.01
+    val want = {
+      val out = new java.io.ByteArrayOutputStream()
+      org.apache.spark.util.sketch.BloomFilter.create(5L, 0.01).writeTo(out)
+      out.size()
+    }
+    assert(carried.nonEmpty && carried.forall(_ == want), s"$carried vs $want")
+    assert(want < 100)
   }
 
   test("fuzzy incremental pairs find cross-corpus near-dups only") {
@@ -164,7 +180,7 @@ class IncrementalDedupSpec extends SparkSpec {
       .write.parquet(s"$dir/inc")
     val seen = spark.read.parquet(s"$dir/seen")
     val inc = spark.read.parquet(s"$dir/inc")
-    val plan = Dedup.dedupAgainstSeen(inc, seen, "text", expectedSeen = 100)
+    val plan = Dedup.dedupAgainstSeen(inc, seen, "text")
       .queryExecution.executedPlan.toString
     val antiJoins = "LeftAnti".r.findAllIn(plan).length
     assert(antiJoins == 1, s"expected exactly one anti join:\n$plan")
