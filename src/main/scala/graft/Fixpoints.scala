@@ -1,9 +1,14 @@
 package graft
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, functions => F}
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types._
 import graft.rdf.RdfTerm
 import graft.rdf.Terms.{termRow, termType}
@@ -25,6 +30,11 @@ import graft.rdf.Terms.{termRow, termType}
   *
   * The doubling loops converge in O(log diameter) rounds and cut lineage
   * every round with [[fresh]].
+  *
+  * It also holds the bounded fetch, [[collectBounded]] under
+  * [[LocalMax]], that [[reach]] walks on the driver. The n-gram, CDC and
+  * MinHash pair stages of `pipeline.Dedup` use the same fetch and bound
+  * to group a broadcast-sized corpus on the driver.
   */
 private[graft] object Fixpoints {
 
@@ -70,9 +80,11 @@ private[graft] object Fixpoints {
     closure
   }
 
-  /** Bound of the driver-side walk of [[reach]]: seeds, rows fetched per
-    * BFS level, nodes reached and result pairs. Past it the walk runs as
-    * Spark frames (checkpointed frontier). */
+  /** Bound of the driver-side work: for the walk of [[reach]], seeds,
+    * rows fetched per BFS level, nodes reached and result pairs, past
+    * which it runs as Spark frames (checkpointed frontier); for the
+    * pair stages of `pipeline.Dedup`, the documents fetched, past which
+    * they run as Spark frames (shuffled posting lists). */
   val LocalMax = 10000
 
   /** The terms as a local relation (one term-struct column `n`): a seed
@@ -81,20 +93,57 @@ private[graft] object Fixpoints {
     spark.createDataFrame(java.util.Arrays.asList(terms.map(t => Row(termRow(t))): _*),
       StructType(Seq(StructField("n", termType))))
 
-  /** At most `LocalMax + 1` rows of `df` on the driver, in one job: each
-    * partition stops reading at that many, and the driver merges the
-    * partitions' rows as they arrive, keeping at most that many.
-    * (`limit(n).collect()` scans partitions in rounds, one job each, while
-    * the first partitions hold fewer than n rows.) A local relation (a
-    * [[seedFrame]]), projected or not, is read on the driver with no job. */
-  private def collectBounded(df: DataFrame): Array[Row] =
-    df.queryExecution.analyzed match {
-      case _: LocalRelation | Project(_, _: LocalRelation) => df.collect()
+  /** At most `LocalMax + 1` rows of `df` on the driver, in one job, as
+    * internal rows: each partition stops reading at that many and ships
+    * its rows as UnsafeRow bytes, as `collect()` does, and the driver
+    * keeps the partitions' rows as they arrive, up to that many.
+    * (`limit(n).collect()` scans partitions in rounds, one job each,
+    * while the first partitions hold fewer than n rows.) A local
+    * relation (a [[seedFrame]]), projected or not, is read on the driver
+    * with no job. */
+  private[graft] def collectBounded(df: DataFrame): Array[InternalRow] = {
+    val qe = df.queryExecution
+    qe.optimizedPlan match {
+      case _: LocalRelation => qe.executedPlan.executeCollect()
       case _ =>
         val n = LocalMax + 1
-        df.rdd.mapPartitions(it => Iterator.single(it.take(n).toArray))
-          .fold(Array.empty[Row])((a, b) => if (a.length >= n) a else (a ++ b).take(n))
+        val width = df.schema.length
+        val kept = mutable.ArrayBuffer[InternalRow]()
+        df.sparkSession.sparkContext.runJob(qe.toRdd, (it: Iterator[InternalRow]) => {
+          val bytes = new ByteArrayOutputStream()
+          val out = new DataOutputStream(bytes)
+          val buf = new Array[Byte](4096)
+          var i = 0
+          while (i < n && it.hasNext) {
+            val r = it.next().asInstanceOf[UnsafeRow]
+            out.writeInt(r.getSizeInBytes)
+            r.writeToStream(out, buf)
+            i += 1
+          }
+          out.writeInt(-1)
+          out.flush()
+          bytes.toByteArray
+        }, (_: Int, part: Array[Byte]) => {
+          val in = new DataInputStream(new ByteArrayInputStream(part))
+          var size = in.readInt()
+          while (size >= 0 && kept.length < n) {
+            val b = new Array[Byte](size)
+            in.readFully(b)
+            val r = new UnsafeRow(width)
+            r.pointTo(b, size)
+            kept += r
+            size = in.readInt()
+          }
+        })
+        kept.toArray
     }
+  }
+
+  /** [[collectBounded]] decoded to external rows. */
+  private def collectRows(df: DataFrame): Array[Row] = {
+    val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
+    collectBounded(df).map(toRow)
+  }
 
   /** The closure from a seed set, as distinct (ps, po) term pairs: po is
     * reached from the seed ps (a value of the term-struct column `n` of
@@ -124,7 +173,7 @@ private[graft] object Fixpoints {
       includeZero: Boolean, edgeCount: Option[Long]): Option[DataFrame] = {
     // seed rows are the ones with a null `po` (no edge has one)
     val small = edgeCount.exists(_ <= LocalMax)
-    val fetched = collectBounded(
+    val fetched = collectRows(
       if (small) seed.select(F.col("n").as("ps"), F.lit(null).cast(termType).as("po"))
         .unionByName(edges.select("ps", "po"))
       else seed.select(F.col("n").as("ps")))
@@ -137,7 +186,7 @@ private[graft] object Fixpoints {
     // list); the exact term match is made on the driver
     def leaving(frontier: Seq[Row]): Array[Row] = byPs match {
       case Some(m) => frontier.flatMap(m.getOrElse(_, Array.empty[Row])).toArray
-      case None => collectBounded(edges
+      case None => collectRows(edges
         .where(F.col("ps.value").isin(frontier.map(_.getString(1)).distinct: _*))
         .select("ps", "po"))
     }

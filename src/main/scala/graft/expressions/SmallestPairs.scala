@@ -31,18 +31,11 @@ case class SmallestPairs(
 
   override def eval(b: java.util.TreeMap[Long, Int]): Any = {
     val ids = smallest(b)
-    val n = ids.length
-    val out = new Array[Any](n * (n - 1) / 2)
+    val out = new Array[Any](ids.length * (ids.length - 1) / 2)
     var k = 0
-    var a = 0
-    while (a < n) {
-      var c = a + 1
-      while (c < n) {
-        out(k) = InternalRow(ids(a), ids(c))
-        k += 1
-        c += 1
-      }
-      a += 1
+    SmallestPairs.foreachPair(ids, ids.length) { (a, c) =>
+      out(k) = InternalRow(a, c)
+      k += 1
     }
     new GenericArrayData(out)
   }
@@ -54,4 +47,22 @@ case class SmallestPairs(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): SmallestPairs =
     copy(child = newChildren.head)
+}
+
+object SmallestPairs {
+
+  /** The ordered pairs (e_i, e_j), i < j < n, of the ascending ids
+    * e_0..e_{n-1}: the expansion of one capped posting list, shared by the
+    * aggregate and the driver-side pair path of `pipeline.Dedup`. */
+  def foreachPair(ids: Array[Long], n: Int)(f: (Long, Long) => Unit): Unit = {
+    var a = 0
+    while (a < n) {
+      var c = a + 1
+      while (c < n) {
+        f(ids(a), ids(c))
+        c += 1
+      }
+      a += 1
+    }
+  }
 }

@@ -16,8 +16,9 @@ import org.apache.spark.sql.types._
   * |A ∪ B| = |A| + |B| − |A ∩ B| makes the union size arithmetic.
   *
   * Inputs MUST be duplicate-free and ascending (the dedup pipeline's
-  * `array_sort` over distinct shingle hashes guarantees it); the result
-  * is undefined otherwise. */
+  * `sort_array` over distinct shingle hashes guarantees it); the result
+  * is undefined otherwise. [[SortedIntersectCount.count]] is also the
+  * driver-side pair path's verification. */
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
 

@@ -1,7 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row, functions => F}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
+import graft.expressions.{SmallestPairs, SortedIntersectCount}
 import graft.sources.Sidecar
 import graft.sources.Sidecar.Json
 
@@ -18,6 +22,10 @@ import graft.sources.Sidecar.Json
   *
   * All hash functions are Spark's xxhash64 (seeded per-row deterministic),
   * so results are stable across runs and cluster sizes.
+  *
+  * On a corpus small enough to broadcast, the MinHash and n-gram pair
+  * stages fetch the hashed documents in one bounded job and group them on
+  * the driver ([[localPairs]]); the result is the frame path's.
   */
 object Dedup {
 
@@ -181,7 +189,8 @@ object Dedup {
   def minhashCandidatesFromShingles(sh: DataFrame,
       numHashes: Int = 32, bands: Int = 8, maxBucket: Int = 256): DataFrame = {
     // narrow signature computation — the banding groupBy below is the
-    // pipeline's ONLY shuffle
+    // frame path's ONLY shuffle (a broadcast-sized corpus groups its
+    // buckets on the driver instead, see [[minhashDedupPairs]])
     val sigs = sh.where(F.size(F.col("sh")) > 0).select(F.col("rid"),
       minhashSigColumn(F.col("sh"), numHashes).as("sig"))
     val banded = bandedRows(sigs, numHashes, bands)
@@ -194,22 +203,24 @@ object Dedup {
     cappedPairs(banded, maxBucket, "band", "bucket")
   }
 
-  /** (rid, band, bucket) banding rows of a (rid, sig) signature frame —
-    * the ONE banding recipe shared by the self-join path, the
-    * cross-corpus path, and [[MinHashSeenIndex.fit]] (bucket values are
-    * rid-independent, so rows banded at index-build time join rows
-    * banded at query time exactly). */
-  private def bandedRows(sigs: DataFrame,
-      numHashes: Int, bands: Int): DataFrame = {
+  /** The band buckets of a signature column, as an array indexed by
+    * band: bucket b is `hash(b, sig[b·rows, (b+1)·rows))`. The ONE
+    * banding recipe: [[bandedRows]] posexplodes it for the self-join
+    * path, the cross-corpus path and [[MinHashSeenIndex.fit]] (bucket
+    * values are rid-independent, so rows banded at index-build time join
+    * rows banded at query time exactly), and the driver-side pair path
+    * of [[minhashDedupPairs]] reads it as is. */
+  private def bandBuckets(sig: Column, numHashes: Int, bands: Int): Column = {
     val rows = numHashes / bands
-    sigs
-      .select(F.col("rid"), F.posexplode(
-        F.transform(F.sequence(F.lit(0), F.lit(bands - 1)),
-          b => F.slice(F.col("sig"), b * rows + 1, F.lit(rows))))
-        .as(Seq("band", "bsig")))
-      .select(F.col("rid"), F.col("band"),
-        F.hash(F.col("band"), F.col("bsig")).as("bucket"))
+    F.transform(F.sequence(F.lit(0), F.lit(bands - 1)),
+      b => F.hash(b, F.slice(sig, b * rows + 1, F.lit(rows))))
   }
+
+  /** (rid, band, bucket) banding rows of a (rid, sig) signature frame. */
+  private def bandedRows(sigs: DataFrame,
+      numHashes: Int, bands: Int): DataFrame =
+    sigs.select(F.col("rid"), F.posexplode(
+      bandBuckets(F.col("sig"), numHashes, bands)).as(Seq("band", "bucket")))
 
   /** The one candidate-pair step of every blocking dedup: group a
     * (rid, keys…) posting relation by `keys` — the one shuffle — cap
@@ -223,7 +234,8 @@ object Dedup {
     * types fall back to sort+slice (whole-list buffer, one slice per
     * exploded element) with the same pair set. The cross-list
     * `distinct` cannot move into the lists: whether a pair survives one
-    * list's cap depends on that list's other rows. */
+    * list's cap depends on that list's other rows. [[localPairs]] is the
+    * same step on the driver, for a broadcast-sized corpus. */
   private def cappedPairs(postings: DataFrame, cap: Int,
       keys: String*): DataFrame = {
     val lists = postings.groupBy(keys.map(F.col): _*)
@@ -252,10 +264,18 @@ object Dedup {
     F.when(union > 0, inter / union).otherwise(F.lit(0.0))
   }
 
+  /** The (rid, sh) relation of the set-overlap family: each document's
+    * id and its element set, sorted here once with the native
+    * `sort_array` (the elements are non-null longs, so the order is the
+    * one `array_sort` gives, without its interpreted comparator lambda).
+    * Both verifications merge the sorted sets as built. */
+  private def sortedSets(df: DataFrame, rid: Column, set: Column): DataFrame =
+    df.select(rid.as("rid"), F.sort_array(set).as("sh"))
+
   /** Exact-Jaccard verification of candidate pairs against a (rid, sh)
-    * shingle relation: the sets are SORTED once per document, each pair
-    * attaches its two sides with two plain equi-joins, and the Jaccard
-    * comes from one allocation-free two-pointer merge
+    * relation of SORTED sets ([[sortedSets]]): each pair attaches its two
+    * sides with two plain equi-joins, and the Jaccard comes from one
+    * allocation-free two-pointer merge
     * ([[graft.expressions.SortedIntersectCount]]; |A∪B| is arithmetic
     * from the sizes). The corpus relation is tiny next to the candidate
     * set (each doc fans out to many pairs), so both joins broadcast at
@@ -266,10 +286,8 @@ object Dedup {
     * shipping shingle arrays through the pair shuffle). */
   private def verifiedJaccard(cands: DataFrame, sh: DataFrame,
       threshold: Double): DataFrame = {
-    val s1 = sh.select(F.col("rid").as("id1"),
-      F.array_sort(F.col("sh")).as("sh1"))
-    val s2 = sh.select(F.col("rid").as("id2"),
-      F.array_sort(F.col("sh")).as("sh2"))
+    val s1 = sh.select(F.col("rid").as("id1"), F.col("sh").as("sh1"))
+    val s2 = sh.select(F.col("rid").as("id2"), F.col("sh").as("sh2"))
     val inter = graft.expressions.ColumnBridge.column(
       graft.expressions.SortedIntersectCount(
         graft.expressions.ColumnBridge.expression(F.col("sh1")),
@@ -284,21 +302,97 @@ object Dedup {
       .select("id1", "id2", "jaccard")
   }
 
+  private val pairType = StructType(Seq(
+    StructField("id1", LongType, nullable = false),
+    StructField("id2", LongType, nullable = false),
+    StructField("jaccard", DoubleType)))
+
+  /** The verified pairs of a broadcast-sized corpus, grouped on the
+    * driver, or None, which sends the caller to its frame path. `fetch`
+    * holds one row per document: (rid, sh: sorted set, …).
+    *
+    * The gate is the test Spark applies before it broadcasts a relation:
+    * the optimizer's size estimate of `input` within
+    * `spark.sql.autoBroadcastJoinThreshold` (negative: never). It costs
+    * no job, so a large corpus never pays for a wasted fetch. Then the
+    * ids must be longs, and one bounded fetch
+    * ([[graft.Fixpoints.collectBounded]]) must return at most
+    * [[graft.Fixpoints.LocalMax]] rows with unique non-null ids (the
+    * frame path's joins on rid pair a repeated id with each copy).
+    *
+    * `keys` sees every fetched row first (the n-gram path counts
+    * document frequencies), then names each row's posting keys. The rest
+    * is [[cappedPairs]] and [[verifiedJaccard]] on the driver: posting
+    * lists capped to the `cap` smallest ids, the ordered pair expansion
+    * of [[graft.expressions.SmallestPairs]], the cross-list dedup, and
+    * the exact Jaccard by [[graft.expressions.SortedIntersectCount]]. The
+    * pairs come back as a local relation, so using them runs no job for
+    * them — the trade [[graft.Fixpoints.reach]] makes. */
+  private def localPairs(input: DataFrame, fetch: DataFrame, cap: Int,
+      threshold: Double)(
+      keys: Array[InternalRow] => InternalRow => Iterator[Long]): Option[DataFrame] = {
+    val limit = input.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (limit < 0 || input.queryExecution.optimizedPlan.stats.sizeInBytes > limit ||
+        fetch.schema("rid").dataType != LongType ||
+        fetch.schema("sh").dataType != ArrayType(LongType, containsNull = false)) return None
+    val rows = graft.Fixpoints.collectBounded(fetch)
+    if (rows.length > graft.Fixpoints.LocalMax || rows.exists(_.isNullAt(0))) return None
+    val sets = mutable.LongMap[InternalRow]()
+    rows.foreach(r => sets.update(r.getLong(0), r))
+    if (sets.size != rows.length) return None
+    val keyOf = keys(rows)
+    val lists = mutable.LongMap[mutable.ArrayBuilder.ofLong]()
+    rows.foreach { r =>
+      keyOf(r).foreach(k => lists.getOrElseUpdate(k, new mutable.ArrayBuilder.ofLong) += r.getLong(0))
+    }
+    val cands = mutable.HashSet[(Long, Long)]()
+    lists.valuesIterator.foreach { list =>
+      val ids = list.result()
+      java.util.Arrays.sort(ids)
+      SmallestPairs.foreachPair(ids, math.min(ids.length, cap))((a, b) => cands += ((a, b)))
+    }
+    val pairs = cands.toArray.sorted.flatMap { case (a, b) =>
+      val (sa, sb) = (sets(a).getArray(1), sets(b).getArray(1))
+      val inter = SortedIntersectCount.count(sa, sb).toDouble
+      val union = (sa.numElements() + sb.numElements()).toDouble - inter
+      val j = if (union > 0) inter / union else 0.0
+      if (j >= threshold) Some(Row(a, b, j)) else None
+    }
+    Some(input.sparkSession.createDataFrame(java.util.Arrays.asList(pairs: _*), pairType))
+  }
+
   /** MinHash LSH near-dup pairs, verified with exact Jaccard ≥ threshold.
-    * Returns (id1, id2, jaccard). */
+    * Returns (id1, id2, jaccard).
+    *
+    * A broadcast-sized corpus ([[localPairs]]) is fetched in one job —
+    * each document's id, sorted shingle-hash set and band buckets — and
+    * its buckets are grouped on the driver. Otherwise the frame path runs
+    * ([[minhashCandidatesFromShingles]], then [[verifiedJaccard]]). */
   def minhashDedupPairs(df: DataFrame, id: String, text: String,
       threshold: Double = 0.8, k: Int = 3,
       numHashes: Int = 32, bands: Int = 8, maxBucket: Int = 256): DataFrame = {
-    // ONE tokenization/shingling pass, checkpoint-shared by the banding
-    // side and both verification joins
-    val sh = df.select(F.col(id).as("rid"),
-        shingleHashes(F.col(text), k).as("sh"))
-      .localCheckpoint(false)
-    val cands = minhashCandidatesFromShingles(sh, numHashes, bands, maxBucket)
-    // verify over HASHED shingle sets: Jaccard of 64-bit hashes equals
-    // Jaccard of the strings up to hash collisions (~n²/2⁶⁴), and the
-    // verification join shuffles longs instead of shingle strings
-    verifiedJaccard(cands, sh, threshold)
+    // ONE tokenization/shingling pass per path: the fetch computes the
+    // buckets from it; the frame path checkpoint-shares it between the
+    // banding side and both verification joins
+    val sh = sortedSets(df, F.col(id), shingleHashes(F.col(text), k))
+    val fetch = sh.select(F.col("rid"), F.col("sh"),
+      F.when(F.size(F.col("sh")) > 0, bandBuckets(
+        minhashSigColumn(F.col("sh"), numHashes), numHashes, bands)).as("buckets"))
+    localPairs(df, fetch, maxBucket, threshold) { _ => r =>
+      if (r.isNullAt(2)) Iterator.empty
+      else {
+        // (band, bucket) packed in one long key
+        val b = r.getArray(2)
+        Iterator.tabulate(b.numElements())(i => (i.toLong << 32) | (b.getInt(i) & 0xffffffffL))
+      }
+    }.getOrElse {
+      val cached = sh.localCheckpoint(false)
+      val cands = minhashCandidatesFromShingles(cached, numHashes, bands, maxBucket)
+      // verify over HASHED shingle sets: Jaccard of 64-bit hashes equals
+      // Jaccard of the strings up to hash collisions (~n²/2⁶⁴), and the
+      // verification join shuffles longs instead of shingle strings
+      verifiedJaccard(cands, cached, threshold)
+    }
   }
 
   /** Fuzzy INCREMENTAL dedup pairs: MinHash-LSH near-dup pairs BETWEEN
@@ -316,12 +410,10 @@ object Dedup {
   def minhashPairsAgainstSeen(incoming: DataFrame, seen: DataFrame,
       id: String, text: String, threshold: Double = 0.8, k: Int = 3,
       numHashes: Int = 32, bands: Int = 8, maxBucket: Int = 256): DataFrame = {
-    val shIn = incoming.select(
-      (F.col(id).cast(LongType) * 2 + 1).as("rid"),
-      shingleHashes(F.col(text), k).as("sh"))
-    val shSeen = seen.select(
-      (F.col(id).cast(LongType) * 2).as("rid"),
-      shingleHashes(F.col(text), k).as("sh"))
+    val shIn = sortedSets(incoming, F.col(id).cast(LongType) * 2 + 1,
+      shingleHashes(F.col(text), k))
+    val shSeen = sortedSets(seen, F.col(id).cast(LongType) * 2,
+      shingleHashes(F.col(text), k))
     val sh = shIn.unionByName(shSeen).localCheckpoint(false)
     val cands = minhashCandidatesFromShingles(sh, numHashes, bands, maxBucket)
       .where(F.col("id1").bitwiseAND(F.lit(1L)) =!=
@@ -399,9 +491,8 @@ object Dedup {
   def minhashPairsAgainstIndex(index: MinHashSeenIndex,
       incoming: DataFrame, id: String, text: String,
       threshold: Double = 0.8, maxBucket: Int = 256): DataFrame = {
-    val shIn = incoming.select(
-        (F.col(id).cast(LongType) * 2 + 1).as("rid"),
-        shingleHashes(F.col(text), index.k).as("sh"))
+    val shIn = sortedSets(incoming, F.col(id).cast(LongType) * 2 + 1,
+        shingleHashes(F.col(text), index.k))
       .localCheckpoint(false) // banding + verify both read it
     val sigsIn = shIn.where(F.size(F.col("sh")) > 0).select(F.col("rid"),
       minhashSigColumn(F.col("sh"), index.numHashes).as("sig"))
@@ -411,8 +502,8 @@ object Dedup {
     val cands = cappedPairs(banded, maxBucket, "band", "bucket")
       .where(F.col("id1").bitwiseAND(F.lit(1L)) =!=
         F.col("id2").bitwiseAND(F.lit(1L)))
-    val shAll = shIn.unionByName(index.shingles.select(
-      (F.col("rid") * 2).as("rid"), F.col("sh")))
+    val shAll = shIn.unionByName(sortedSets(index.shingles, F.col("rid") * 2,
+      F.col("sh")))
     val odd1 = F.col("id1").bitwiseAND(F.lit(1L)) === 1L
     verifiedJaccard(cands, shAll, threshold)
       .select(
@@ -668,19 +759,24 @@ object Dedup {
     * cut, the standard guard for inverted-index blocking. */
   def ngramJaccardPairs(df: DataFrame, id: String, text: String,
       threshold: Double = 0.6, k: Int = 3,
-      maxDocsPerShingle: Int = 256): DataFrame = {
-    val sh = df.select(F.col(id).as("rid"),
-        shingleHashes(F.col(text), k).as("sh"))
-      .localCheckpoint(false)
-    setJaccardPairs(sh, maxDocsPerShingle, threshold)
-  }
+      maxDocsPerShingle: Int = 256): DataFrame =
+    setJaccardPairs(df, sortedSets(df, F.col(id), shingleHashes(F.col(text), k)),
+      maxDocsPerShingle, threshold)
 
   /** Shared candidate+verify tail of the set-overlap dedup family: a
-    * (rid, sh: array<long>) frame → prefix-filtered, df-capped
-    * posting-list shuffle on the set elements ([[cappedPairs]]: fused
-    * for long ids, sort+slice for other id types) → exact Jaccard
-    * verification. Serves [[ngramJaccardPairs]] (shingle sets)
-    * and [[binaryNearDupPairs]] (CDC chunk-hash sets).
+    * (rid, sh: sorted array<long>) frame of the documents of `input` →
+    * prefix-filtered, df-capped posting lists on the set elements →
+    * exact Jaccard verification. Serves [[ngramJaccardPairs]] (shingle
+    * sets) and [[binaryNearDupPairs]] (CDC chunk-hash sets).
+    *
+    * A broadcast-sized corpus ([[localPairs]]) is fetched in one job and
+    * grouped on the driver: document frequencies, each document's
+    * prefix, its posting lists. Otherwise the frame path runs: the
+    * df aggregate and a per-document rank window pick the prefixes, one
+    * shuffle groups the posting lists ([[cappedPairs]]: fused for long
+    * ids, sort+slice for other id types), and [[verifiedJaccard]]
+    * checks the pairs. Both paths pick the same prefixes and the same
+    * capped lists, so they return the same pairs.
     *
     * Candidate generation uses AllPairs/PPJoin prefix filtering
     * (Chaudhuri et al. 2006; Xiao et al. 2008): for Jaccard(A,B) ≥ t
@@ -694,27 +790,47 @@ object Dedup {
     * shingle blocking quadratic at 10× data never forms. Lossless by
     * the prefix-filter theorem — the exact verification decides
     * membership; this only prunes candidates. */
-  private def setJaccardPairs(sh: DataFrame, maxDocsPerKey: Int,
-      threshold: Double): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-    val elems = sh.select(F.col("rid"), F.size(F.col("sh")).as("n"),
-      F.explode(F.col("sh")).as("k"))
-    // Document frequency attaches only for SHARED elements (df >= 2):
-    // singletons — the long tail of any real corpus — all tie at df 1,
-    // so a left join against the df>=2 survivors ranks identically
-    // while shrinking the join's build side by the singleton share
-    // (usually enough for a broadcast, removing a full shuffle of the
-    // exploded element set; the df aggregate itself stays map-combined).
-    val freq = elems.groupBy("k").agg(F.count(F.lit(1)).as("kf"))
-      .where(F.col("kf") >= 2)
-    val ranked = elems.join(freq, Seq("k"), "left")
-      .withColumn("kfx", F.coalesce(F.col("kf"), F.lit(1L)))
-      .withColumn("rnk", F.row_number().over(
-        w.partitionBy("rid").orderBy(F.col("kfx"), F.col("k"))))
-      .where(F.col("rnk") <=
-        F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1)
-    val cands = cappedPairs(ranked, maxDocsPerKey, "k")
-    verifiedJaccard(cands, sh, threshold)
+  private def setJaccardPairs(input: DataFrame, sh: DataFrame,
+      maxDocsPerKey: Int, threshold: Double): DataFrame = {
+    localPairs(input, sh, maxDocsPerKey, threshold) { rows =>
+      val freq = mutable.LongMap.withDefault[Long](_ => 0L)
+      rows.foreach { r =>
+        if (!r.isNullAt(1)) r.getArray(1).toLongArray().foreach(e => freq(e) += 1)
+      }
+      r =>
+        if (r.isNullAt(1)) Iterator.empty
+        else {
+          // the set ascends, so (df, position) order is (df, element)
+          // order: one primitive sort of df·2³² + position
+          val set = r.getArray(1)
+          val n = set.numElements()
+          val order = Array.tabulate(n)(i => (freq(set.getLong(i)) << 32) | i)
+          java.util.Arrays.sort(order)
+          val prefix = math.min(n - math.ceil(threshold * n).toLong + 1, n)
+          Iterator.tabulate(prefix.toInt)(j => set.getLong(order(j).toInt))
+        }
+    }.getOrElse {
+      val cached = sh.localCheckpoint(false)
+      val w = org.apache.spark.sql.expressions.Window
+      val elems = cached.select(F.col("rid"), F.size(F.col("sh")).as("n"),
+        F.explode(F.col("sh")).as("k"))
+      // Document frequency attaches only for SHARED elements (df >= 2):
+      // singletons — the long tail of any real corpus — all tie at df 1,
+      // so a left join against the df>=2 survivors ranks identically
+      // while shrinking the join's build side by the singleton share
+      // (usually enough for a broadcast, removing a full shuffle of the
+      // exploded element set; the df aggregate itself stays map-combined).
+      val freq = elems.groupBy("k").agg(F.count(F.lit(1)).as("kf"))
+        .where(F.col("kf") >= 2)
+      val ranked = elems.join(freq, Seq("k"), "left")
+        .withColumn("kfx", F.coalesce(F.col("kf"), F.lit(1L)))
+        .withColumn("rnk", F.row_number().over(
+          w.partitionBy("rid").orderBy(F.col("kfx"), F.col("k"))))
+        .where(F.col("rnk") <=
+          F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1)
+      val cands = cappedPairs(ranked, maxDocsPerKey, "k")
+      verifiedJaccard(cands, cached, threshold)
+    }
   }
 
   /** Content-defined chunk structs of a binary column
@@ -737,11 +853,10 @@ object Dedup {
   def binaryNearDupPairs(df: DataFrame, id: String, bin: String,
       threshold: Double = 0.5, avgBits: Int = 10,
       maxDocsPerChunk: Int = 256): DataFrame = {
-    val sh = df.select(F.col(id).as("rid"),
+    setJaccardPairs(df, sortedSets(df, F.col(id),
         F.array_distinct(F.transform(cdcChunks(F.col(bin), avgBits),
-          c => c.getField("hash"))).as("sh"))
-      .localCheckpoint(false)
-    setJaccardPairs(sh, maxDocsPerChunk, threshold)
+          c => c.getField("hash")))),
+      maxDocsPerChunk, threshold)
   }
 
   /** Collapse verified near-dup PAIRS into canonical GROUPS: the

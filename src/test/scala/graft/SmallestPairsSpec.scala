@@ -71,6 +71,15 @@ class SmallestPairsSpec extends SparkSpec {
     (3L, Seq(0.0f, 0.1f, 0.9f))).toDF("doc_id", "v")
 
   test("minhash pipeline takes the fused aggregate for long ids") {
+    // broadcasts off: a corpus this small otherwise groups its n-gram and
+    // MinHash pairs on the driver (LocalPairsSpec), not in the aggregate
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try fusedSites() finally spark.conf.set(key, before)
+  }
+
+  private def fusedSites(): Unit = {
     // one input per long-id pair site of Dedup, with its expected pairs
     import graft.pipeline.Dedup
     val idx = Dedup.MinHashSeenIndex.fit(
