@@ -37,13 +37,15 @@ import org.apache.spark.sql.{Column, DataFrame, functions => F}
   *      within-cluster cosine, keep-min-id) — the SemDeDup stage that
   *      catches paraphrases sharing no shingles;
   *   6. benchmark decontamination ([[Dedup.contamination]] 13-gram
-  *      overlap, broadcast benchmark shingles, anti-join);
+  *      overlap: the benchmark's shingle set is fetched once and each
+  *      row probes it in place — a filter, not a join);
   *   7. context-window chunking ([[TextAnalysis.chunk]]) — narrow.
   *
   * One composed plan: Catalyst sees the whole flow, so the URL/quality/
   * lang filters are evaluated in the first scan stage and only survivors
   * reach the dedup shuffle. Total cost at any scale = one digest-keyed
-  * shuffle + one broadcast semi-join (+ with the fuzzy stage: one capped
+  * shuffle + one job that fetches the benchmark's shingle hashes, while
+  * the plan is built (+ with the fuzzy stage: one capped
   * posting-list shuffle, the verify join, and the O(log n)
   * pointer-doubling rounds over just the PAIRS; + with the semantic
   * stage: the k-means iterations over TF-IDF vectors of the survivors —
@@ -223,9 +225,10 @@ object Curation {
     }
     val clean = benchmark match {
       case Some((bench, btext)) =>
-        val hits = Dedup.contamination(semantic, id, text, bench, btext,
-          k = contaminationK)
-        semantic.join(hits.select(F.col("rid").as(id)), Seq(id), "left_anti")
+        // the rows Dedup.contamination would not flag, probed in place
+        semantic.where(F.coalesce(
+          Dedup.contaminationHits(F.col(text), bench, btext, contaminationK),
+          F.lit(0L)) < 1)
       case None => semantic
     }
     TextAnalysis.chunk(clean, id, text, chunkSize, chunkStride)

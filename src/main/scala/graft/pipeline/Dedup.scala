@@ -433,7 +433,8 @@ object Dedup {
     * re-tokenizes, re-shingles, and re-signs the ENTIRE seen corpus on
     * every incoming batch, which at a 100 TB stored corpus dominates a
     * daily ingestion run. Fit once instead: persist the corpus's
-    * shingle-hash sets (for exact-Jaccard verification) and its
+    * sorted shingle-hash sets (for exact-Jaccard verification, which
+    * then sorts only the batch's side) and its
     * pre-banded (band, bucket, rid) rows (for candidate blocking); a
     * batch then computes signatures only for ITSELF and joins the
     * stored postings — zero per-query work proportional to corpus
@@ -442,16 +443,18 @@ object Dedup {
     * so rows banded at build time join rows banded at query time
     * exactly, and the cap orders tagged ids the same way. */
   final class MinHashSeenIndex private[pipeline] (
-      private[graft] val shingles: DataFrame, // (rid, sh)
+      private[graft] val shingles: DataFrame, // (rid, sh), sh sorted
       private[graft] val bandRows: DataFrame, // (rid, band, bucket)
       val k: Int, val numHashes: Int, val bands: Int) {
 
-    /** Persist both relations + a parameter sidecar. */
+    /** Persist both relations + a parameter sidecar, which records that
+      * the stored shingle sets are sorted. */
     def save(path: String): Unit = {
       shingles.write.mode("overwrite").parquet(s"$path/shingles")
       bandRows.write.mode("overwrite").parquet(s"$path/bands")
       Sidecar.save(shingles.sparkSession, path, MinHashSeenIndex.SIDECAR,
-        "k" -> k, "numHashes" -> numHashes, "bands" -> bands)
+        "k" -> k, "numHashes" -> numHashes, "bands" -> bands,
+        "sorted" -> true)
     }
   }
 
@@ -464,22 +467,27 @@ object Dedup {
       * tag-bit query path shifts them). */
     def fit(df: DataFrame, id: String, text: String, k: Int = 3,
         numHashes: Int = 32, bands: Int = 8): MinHashSeenIndex = {
-      val sh = df.select(F.col(id).cast(LongType).as("rid"),
-        shingleHashes(F.col(text), k).as("sh"))
+      val sh = sortedSets(df, F.col(id).cast(LongType),
+        shingleHashes(F.col(text), k))
       val sigs = sh.where(F.size(F.col("sh")) > 0).select(F.col("rid"),
         minhashSigColumn(F.col("sh"), numHashes).as("sig"))
       new MinHashSeenIndex(sh, bandedRows(sigs, numHashes, bands),
         k, numHashes, bands)
     }
 
-    /** Reload an index persisted by [[MinHashSeenIndex.save]]. */
+    /** Reload an index persisted by [[MinHashSeenIndex.save]]. An index
+      * whose sidecar does not record `sorted` holds its shingle sets in
+      * first-occurrence order; they are sorted here, once. */
     def load(spark: org.apache.spark.sql.SparkSession,
         path: String): MinHashSeenIndex = {
-      val (k, numHashes, bands) =
+      val (k, numHashes, bands, sorted) =
         Sidecar.load(spark, path, SIDECAR, "a MinHash index") { j =>
-          (j.int("k"), j.int("numHashes"), j.int("bands"))
+          (j.int("k"), j.int("numHashes"), j.int("bands"),
+            j.has("sorted") && j.bool("sorted"))
         }
-      new MinHashSeenIndex(spark.read.parquet(s"$path/shingles"),
+      val stored = spark.read.parquet(s"$path/shingles")
+      new MinHashSeenIndex(
+        if (sorted) stored else sortedSets(stored, F.col("rid"), F.col("sh")),
         spark.read.parquet(s"$path/bands"), k, numHashes, bands)
     }
   }
@@ -502,8 +510,8 @@ object Dedup {
     val cands = cappedPairs(banded, maxBucket, "band", "bucket")
       .where(F.col("id1").bitwiseAND(F.lit(1L)) =!=
         F.col("id2").bitwiseAND(F.lit(1L)))
-    val shAll = shIn.unionByName(sortedSets(index.shingles, F.col("rid") * 2,
-      F.col("sh")))
+    val shAll = shIn.unionByName(index.shingles.select(
+      (F.col("rid") * 2).as("rid"), F.col("sh")))
     val odd1 = F.col("id1").bitwiseAND(F.lit(1L)) === 1L
     verifiedJaccard(cands, shAll, threshold)
       .select(
@@ -885,23 +893,39 @@ object Dedup {
 
   /** Benchmark decontamination: corpus documents sharing at least
     * `minHits` k-gram shingles with ANY benchmark/eval document
-    * (the standard 13-gram overlap procedure). Returns (rid, hits).
+    * (the standard 13-gram overlap procedure). Returns (rid, hits), one
+    * row per flagged corpus row; `hits` counts the row's distinct
+    * shingles that occur in the benchmark. A document sharing no
+    * shingle is never flagged, whatever `minHits`, and neither is a
+    * NULL text.
     *
-    * Scale shape: the benchmark shingle set is tiny next to the corpus,
-    * so it broadcasts; the corpus side is one explode + semi-join +
-    * count — a narrow scan per corpus partition, no corpus shuffle
-    * except the final per-doc count (map-side combined). */
+    * Scale shape: this is a search of each document against a small
+    * fixed query set, not a join of two corpora. The benchmark's
+    * shingle set is fetched once ([[contaminationHits]], one job) and
+    * every corpus row probes it in place — one narrow projection +
+    * filter per corpus partition, no explode, no join, no shuffle. */
   def contamination(corpus: DataFrame, id: String, text: String,
       benchmark: DataFrame, benchText: String, k: Int = 13,
-      minHits: Int = 1): DataFrame = {
-    val benchShingles = benchmark
-      .select(F.explode(shingleHashes(F.col(benchText), k)).as("h"))
-      .distinct()
+      minHits: Int = 1): DataFrame =
     corpus.select(F.col(id).as("rid"),
-        F.explode(shingleHashes(F.col(text), k)).as("h"))
-      .join(F.broadcast(benchShingles), Seq("h"), "left_semi")
-      .groupBy("rid").agg(F.count(F.lit(1)).as("hits"))
-      .where(F.col("hits") >= minHits)
+        contaminationHits(F.col(text), benchmark, benchText, k).as("hits"))
+      .where(F.col("hits") >= math.max(minHits, 1))
+
+  /** Per-row count of the distinct k-gram shingles of `text` that occur in
+    * any document of `benchmark` (NULL for a NULL text). Fetches the
+    * benchmark's shingle hashes in one `collect()` — the driver then
+    * holds the set a broadcast of it would have held — and merges them
+    * into one sorted, duplicate-free array that the native
+    * [[graft.expressions.SortedSetHits]] probe carries into the plan.
+    * Benchmark rows with a NULL text contribute nothing. */
+  private[pipeline] def contaminationHits(text: Column, benchmark: DataFrame,
+      benchText: String, k: Int): Column = {
+    import benchmark.sparkSession.implicits._
+    val hashes = shingleHashes(F.col(benchText), k)
+    val set = benchmark.where(hashes.isNotNull).select(hashes).as[Array[Long]]
+      .collect().flatten.distinct.sorted
+    graft.expressions.ColumnBridge.column(graft.expressions.SortedSetHits(
+      graft.expressions.ColumnBridge.expression(shingleHashes(text, k)), set))
   }
 
   /** Positional k-token window hashes (one per window START, no dedup) —

@@ -97,10 +97,12 @@ object Similarity {
     * driver ([[queryBuckets]], zero jobs) and the scan touches only the
     * probed (table, bucket) partitions of a [[LshIndex.save]]d index — a
     * partition-pruned read of ~tables·probes buckets, NOT a corpus scan
-    * (RecallSpec pins PartitionFilters). Candidates dedupe across tables
-    * (a tiny shuffle over the survivors), then exact cosine + top-k.
-    * Results are identical to the index-free [[lshTopK]] at equal
-    * (planes, tables, probes). */
+    * (RecallSpec pins PartitionFilters). A candidate surfaces once per
+    * table that probes its bucket, each time with the same (cosine, id)
+    * key, so the k best distinct ids lie within the best `k·tables`
+    * rows: exact cosine, top `k·tables`, dedupe by id on that one
+    * partition, top k — one job, no shuffle. Results are identical to
+    * the index-free [[lshTopK]] at equal (planes, tables, probes). */
   def lshTopK(index: LshIndex, query: Seq[Float], k: Int,
       probes: Int): DataFrame = {
     val qb = queryBuckets(query, index.planes, index.tables)
@@ -109,11 +111,13 @@ object Similarity {
         F.col("__bucket").isin(probeTargets(qb(t), index.planes, probes): _*)
     }.reduce(_ || _)
     val q = F.typedlit(query)
+    val order = Seq(F.col("cosine").desc, F.col(index.id))
     index.bucketed.where(pred)
-      .select(F.col(index.id), F.col(index.vec))
-      .dropDuplicates(index.id) // a row may surface from several tables
       .select(F.col(index.id), cosine(F.col(index.vec), q).as("cosine"))
-      .orderBy(F.col("cosine").desc, F.col(index.id))
+      .orderBy(order: _*)
+      .limit(math.min(k.toLong * index.tables, Int.MaxValue).toInt)
+      .dropDuplicates(index.id)
+      .orderBy(order: _*)
       .limit(k)
   }
 

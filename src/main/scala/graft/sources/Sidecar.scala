@@ -75,7 +75,7 @@ private[graft] object Sidecar {
   }
 
   /** One JSON object of `fields`, in order. A value is a String, Int,
-    * Long, Float or Double, or a Seq of values. */
+    * Long, Float, Double or Boolean, or a Seq of values. */
   def encode(fields: (String, Any)*): String = {
     def node(v: Any): JsonNode = v match {
       case s: String => nf.textNode(s)
@@ -83,6 +83,7 @@ private[graft] object Sidecar {
       case l: Long => nf.numberNode(l)
       case f: Float => nf.numberNode(f)
       case d: Double => nf.numberNode(d)
+      case b: Boolean => nf.booleanNode(b)
       case s: Seq[_] => val a = nf.arrayNode(); s.foreach(x => a.add(node(x))); a
     }
     val o = nf.objectNode()
@@ -127,6 +128,7 @@ private[graft] object Sidecar {
       field(f)(n => n.isIntegralNumber && n.canConvertToInt).intValue
     def long(f: String): Long = field(f)(integral).longValue
     def double(f: String): Double = field(f)(_.isNumber).doubleValue
+    def bool(f: String): Boolean = field(f)(_.isBoolean).booleanValue
     def arr(f: String): Seq[JsonNode] = field(f)(_.isArray).arr
     def arr: Seq[JsonNode] = checked(j, "array")(_.isArray).asScala.toSeq
     def keys: Seq[String] = j.fieldNames.asScala.toSeq

@@ -87,6 +87,22 @@ object ComposedForms {
           F.coalesce(F.col(s"m$i"), F.lit(Long.MaxValue))): _*).as("sig"))
   }
 
+  /** Relational reference form of `Dedup.contamination`: explode each
+    * corpus row's shingle hashes, semi-join them with the benchmark's
+    * distinct hashes (broadcast), count per document. */
+  def contamination(corpus: DataFrame, id: String, text: String,
+      benchmark: DataFrame, benchText: String, k: Int = 13,
+      minHits: Int = 1): DataFrame = {
+    val benchShingles = benchmark
+      .select(F.explode(Dedup.shingleHashes(F.col(benchText), k)).as("h"))
+      .distinct()
+    corpus.select(F.col(id).as("rid"),
+        F.explode(Dedup.shingleHashes(F.col(text), k)).as("h"))
+      .join(F.broadcast(benchShingles), Seq("h"), "left_semi")
+      .groupBy("rid").agg(F.count(F.lit(1)).as("hits"))
+      .where(F.col("hits") >= minHits)
+  }
+
   /** Reference form of `Dedup.simhash` (xxhash64 tokens). */
   def simhash(text: Column): Column = {
     val t = TextAnalysis.tokens(text)

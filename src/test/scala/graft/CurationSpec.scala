@@ -114,6 +114,20 @@ class CurationSpec extends SparkSpec {
     assert("Exchange hashpartitioning".r.findAllIn(plan).length == 1, plan)
   }
 
+  test("decontamination adds no exchange: the corpus is gated and deduped once") {
+    import spark.implicits._
+    val bench = Seq(good + " extra distinct tail words here for unique content")
+      .toDF("text")
+    val out = Curation.curate(fixture, "doc_id", "text",
+      minQuality = 0.7, langs = Seq("en"),
+      benchmark = Some((bench, "text")), contaminationK = 13)
+    val plan = out.queryExecution.executedPlan.toString
+    // the dedup window's exchange only: the benchmark's shingle set rides
+    // in the plan, so no distinct, no broadcast and no per-document count
+    assert("Exchange hashpartitioning".r.findAllIn(plan).length == 1, plan)
+    assert(!plan.contains("Broadcast") && !plan.contains("Join"), plan)
+  }
+
   test("the encoding gate drops mojibake-damaged docs, in the same scan") {
     import spark.implicits._
     val damaged = good.replace("the cat", "donâ€™t â€œcatâ€")

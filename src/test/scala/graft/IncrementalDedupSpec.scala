@@ -130,7 +130,9 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("pre-fit MinHash index equals the recompute path, saved or not") {
+  /** Incoming and seen corpora of near-duplicate families, and their
+    * cross-corpus pairs at Jaccard 0.9 by the recompute path. */
+  private lazy val indexFixture = {
     import spark.implicits._
     val bases = Seq.tabulate(6)(b => Seq.tabulate(40)(i => s"w${b}_$i"))
     val rows = (0L until 60L).map { i =>
@@ -143,6 +145,11 @@ class IncrementalDedupSpec extends SparkSpec {
         "text", threshold = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSet
+    (incoming, seen, want)
+  }
+
+  test("pre-fit MinHash index equals the recompute path, saved or not") {
+    val (incoming, seen, want) = indexFixture
     assert(want.nonEmpty)
     val idx = Dedup.MinHashSeenIndex.fit(seen, "doc_id", "text")
     val got = Dedup.minhashPairsAgainstIndex(idx, incoming, "doc_id",
@@ -167,6 +174,30 @@ class IncrementalDedupSpec extends SparkSpec {
     // the index paths)
     assert(plan.contains(dir), plan.take(2000))
     assert(!plan.toLowerCase.contains("shingle_hashes"), plan.take(2000))
+    // the stored sets are sorted at fit time, so the query sorts nothing
+    assert(!plan.contains("sort_array"), plan.take(2000))
+  }
+
+  test("a MinHash index saved with unsorted sets and no `sorted` field gives the same pairs") {
+    import spark.implicits._
+    val (incoming, seen, want) = indexFixture
+    // the earlier layout: first-occurrence shingle sets, a sidecar of
+    // the three parameters only
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-minhash-index-v0").toString
+    Dedup.MinHashSeenIndex.fit(seen, "doc_id", "text").save(dir)
+    seen.select($"doc_id".as("rid"), Dedup.shingleHashes($"text", 3).as("sh"))
+      .write.mode("overwrite").parquet(s"$dir/shingles")
+    graft.sources.Sidecar.save(spark, dir, "_minhash_index_meta.json",
+      "k" -> 3, "numHashes" -> 32, "bands" -> 8)
+    val stored = spark.read.parquet(s"$dir/shingles").collect()
+    assert(stored.exists { r => val s = r.getSeq[Long](1); s != s.sorted },
+      "the fixture stores unsorted sets")
+    val q = Dedup.minhashPairsAgainstIndex(
+      Dedup.MinHashSeenIndex.load(spark, dir), incoming, "doc_id", "text",
+      threshold = 0.9)
+    assert(q.collect().map(r =>
+      (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet == want)
   }
 
   test("plan shape: one anti-join branch, one join-free narrow branch") {

@@ -12,20 +12,6 @@ import graft.pipeline.Dedup
 class PairJobsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      Thread.sleep(500)
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   /** 400 documents with planted near-duplicate pairs, as a parquet scan. */
   private lazy val docs: DataFrame = {
     val rnd = new scala.util.Random(19)

@@ -208,6 +208,30 @@ class RecallSpec extends SparkSpec {
     assert(free.map(_._1).contains(10003L))
   }
 
+  test("LSH index top-k equals the index-free path: duplicated vectors, k = 1, k past the candidates") {
+    // ids 0–59 and a copy of each vector under id + 20000: equal cosines,
+    // so the id breaks each tie; every row surfaces from up to 4 tables
+    val planted = plantedVectors(60, 0.3)
+    val corpus = planted.unionByName(
+      planted.select((F.col("vec_id") + 20000L).as("vec_id"), F.col("embedding")))
+      .localCheckpoint()
+    val idx = Similarity.LshIndex.fit(corpus, "vec_id", "embedding",
+      planes = 6, tables = 4)
+    val qs = planted.orderBy("vec_id").limit(3).select("embedding").collect()
+      .map(_.getSeq[Float](0))
+    for (q <- qs; probes <- Seq(1, 2)) {
+      val free = Similarity.lshTopK(corpus, "vec_id", "embedding", q, 1000,
+        planes = 6, probes = probes, tables = 4)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(free.nonEmpty && free.length < corpus.count(), "k past the candidates")
+      for (k <- Seq(1, 2, 5, free.length, 1000)) {
+        val got = Similarity.lshTopK(idx, q, k, probes)
+          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        assert(got == free.take(k), s"k $k, probes $probes")
+      }
+    }
+  }
+
   // ---- text near-dup candidate recall vs exact all-pairs Jaccard ----
 
   /** 40 fixture docs + a mutated copy each (every 33rd token replaced →

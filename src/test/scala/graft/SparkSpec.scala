@@ -31,4 +31,20 @@ object TestSpark {
 
 trait SparkSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = TestSpark.spark
+
+  /** The Spark jobs `body` starts, counted with a `SparkListener` after
+    * its queued events drain. */
+  protected def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      Thread.sleep(500)
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
